@@ -1,9 +1,11 @@
 package graft.queries
 
 import graft.functions.GraftFunctions
+import graft.queries.GateFixtures._
 import graft.streaming.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /** Advanced surface: gap-based sessionization (the batch face of the
   * streaming operator — StreamingSpec proves the flatMapGroupsWithState
@@ -25,10 +27,8 @@ object Advanced {
     s"${path}_$fp"
   }
 
-  /** q161's staged-feed directory — ONE derivation shared with
-    * [[graft.tools.StreamProbe]] so the probe can never drift from the
-    * query's naming scheme (ADVICE r17). */
-  def q161StagedDir(d: String): java.io.File =
+  /** q161's staged-feed directory, content-addressed like the q49/q50 layouts. */
+  private def q161StagedDir(d: String): java.io.File =
     new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_q161_" + layoutTag(d, "events.parquet"))
 
@@ -87,55 +87,43 @@ object Advanced {
             col("event_type"), round(col("value") * 100).cast("long").as("vx"))
           .repartition(4).write.mode("overwrite").parquet(src.getPath)
       }
-      val target = java.nio.file.Files.createTempDirectory("graft-q94-target")
-      val ck = java.nio.file.Files.createTempDirectory("graft-q94-ck")
-      val schema = s.read.parquet(src.getPath).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src.getPath)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      // hold the state-sizing override until the bounded run FINISHES:
-      // StreamExecution happens to clone the session (and this conf) in
-      // its constructor, but that timing is an implementation detail —
-      // restoring right after start() would race a deferred clone
-      try {
-        val q =
-        stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-            batch.groupBy(col("user_id"))
-              .agg(max_by(struct(col("ts_ms"), col("event_id"), col("event_type"), col("vx")),
-                struct(col("ts_ms"), col("event_id"))).as("w"))
-              .select(col("user_id"), col("w.ts_ms"), col("w.event_id"),
-                col("w.event_type"), col("w.vx"))
-              .write.mode("overwrite").parquet(s"$target/batch=$id")
-            ()
-          }
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      // the upsert demo is only real if the keys actually arrived split
-      // across micro-batches — fail loudly if the source planner ever
-      // coalesces the 4 staged files into one batch
-      val nBatches = target.toFile.listFiles().count(_.getName.startsWith("batch="))
-      require(nBatches >= 2, s"expected multi-batch upsert, got $nBatches batch dirs")
-      // merge-on-read compaction, pinned so the temp dirs can be dropped
-      val out = s.read.parquet(target.toString)
-        .groupBy(col("user_id"))
-        .agg(max_by(struct(col("ts_ms"), col("event_id"), col("event_type"), col("vx")),
-          struct(col("ts_ms"), col("event_id"))).as("w"))
-        .select(col("user_id"), col("w.ts_ms").as("ts_ms"),
-          col("w.event_type").as("event_type"), col("w.vx").as("vx"))
-        .localCheckpoint()
-      org.apache.commons.io.FileUtils.deleteQuietly(target.toFile)
-      org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
-      out
+      withRoots(2) { case Seq(target, ck) =>
+        val schema = s.read.parquet(src.getPath).schema
+        val stream = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(src.getPath)
+        withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          stream.writeStream
+            .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+              batch.groupBy(col("user_id"))
+                .agg(max_by(struct(col("ts_ms"), col("event_id"), col("event_type"), col("vx")),
+                  struct(col("ts_ms"), col("event_id"))).as("w"))
+                .select(col("user_id"), col("w.ts_ms"), col("w.event_id"),
+                  col("w.event_type"), col("w.vx"))
+                .write.mode("overwrite").parquet(s"$target/batch=$id")
+              ()
+            }
+            .option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .start().awaitTermination()
+        }
+        // the upsert demo is only real if the keys actually arrived split
+        // across micro-batches — fail loudly if the source planner ever
+        // coalesces the 4 staged files into one batch
+        val nBatches = new java.io.File(target).listFiles().count(_.getName.startsWith("batch="))
+        require(nBatches >= 2, s"expected multi-batch upsert, got $nBatches batch dirs")
+        // merge-on-read compaction, pinned so the temp dirs can be dropped
+        s.read.parquet(target)
+          .groupBy(col("user_id"))
+          .agg(max_by(struct(col("ts_ms"), col("event_id"), col("event_type"), col("vx")),
+            struct(col("ts_ms"), col("event_id"))).as("w"))
+          .select(col("user_id"), col("w.ts_ms").as("ts_ms"),
+            col("w.event_type").as("event_type"), col("w.vx").as("vx"))
+          .localCheckpoint()
+      }
     },
 
     "q48_stream_dedup" -> { (s, d) =>
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val ck = java.nio.file.Files.createTempDirectory("graft-q48-ck")
       val sinkName = "q48_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
       // the file source requires a DIRECTORY; select just the events
       // file out of the shared sf dir with a glob filter
@@ -149,28 +137,22 @@ object Advanced {
         .withWatermark("ts_t", "2 hours")
         .dropDuplicates("user_id", "ts_ms")
         .select(col("user_id"), col("ts_ms"))
-      // state partitions sized to key cardinality (see q53's comment)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      // hold the state-sizing override until the bounded run FINISHES:
-      // StreamExecution happens to clone the session (and this conf) in
-      // its constructor, but that timing is an implementation detail —
-      // restoring right after start() would race a deferred clone
-      try {
-        val q =
-        keyed.writeStream
-          .format("memory").queryName(sinkName)
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      // detach the temp-view name and drop the checkpoint dir so
-      // repeated invocations (bench runs 4×) don't accumulate driver
-      // state; the returned plan holds the sink relation directly
+      // state partitions sized to key cardinality (see q53's comment);
+      // the checkpoint dir is dropped once the bounded run finishes
+      withRoots(1) { case Seq(ck) =>
+        withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          keyed.writeStream
+            .format("memory").queryName(sinkName)
+            .option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .start().awaitTermination()
+        }
+      }
+      // detach the temp-view name so repeated invocations (bench runs
+      // 4×) don't accumulate driver state; the returned plan holds the
+      // sink relation directly
       val out = s.table(sinkName)
       s.catalog.dropTempView(sinkName)
-      org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       out
     },
 
@@ -253,7 +235,6 @@ object Advanced {
     // Decimal-routed totals make the sums bit-identical cross-engine.
     "q52_stream_hourly" -> { (s, d) =>
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val ck = java.nio.file.Files.createTempDirectory("graft-q52-ck")
       val sinkName = "q52_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val raw = s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -262,27 +243,20 @@ object Advanced {
         Tables.tsAsTimestamp(raw).as("ts"),
         col("event_type"), col("value"))
       // state partitions sized to key cardinality (see q53's comment)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      // hold the state-sizing override until the bounded run FINISHES:
-      // StreamExecution happens to clone the session (and this conf) in
-      // its constructor, but that timing is an implementation detail —
-      // restoring right after start() would race a deferred clone
-      try {
-        val q =
-        Sessions.hourlyCountsStream(events).writeStream
-          .format("memory").queryName(sinkName)
-          .outputMode("complete")
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      withRoots(1) { case Seq(ck) =>
+        withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          Sessions.hourlyCountsStream(events).writeStream
+            .format("memory").queryName(sinkName)
+            .outputMode("complete")
+            .option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .start().awaitTermination()
+        }
+      }
       val out = s.table(sinkName)
         .select(unix_millis(col("hour_start")).as("hour_ms"),
           col("event_type"), col("n"), col("total_value"))
       s.catalog.dropTempView(sinkName)
-      org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       out
     },
 
@@ -343,9 +317,8 @@ object Advanced {
           lit("__nudge").as("event_type")), "01_nudge.parquet", t0 + 300000L)
         stage(staged.filter(unix_millis(col("ts")) < cutoff), "02_late.parquet", t0 + 600000L)
       }
-      val ck = java.nio.file.Files.createTempDirectory("graft-q161-ck")
       val sinkName = "q161_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      try {
+      withRoots(1) { case Seq(ck) =>
         val schema = s.read.parquet(src.getPath).schema
         val stream = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(src.getPath)
@@ -354,33 +327,25 @@ object Advanced {
         // type) count per open window — dozens of keys, not thousands —
         // and every state partition is a per-batch checkpoint-file
         // commit REGARDLESS of how empty it is, times THREE batches on
-        // this staged feed (StreamProbe r18: addBatch/stateCommit is
-        // the dominant per-batch term at 32 partitions). Restored once
-        // the bounded run finishes; batch plans are unaffected.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q =
-        try {
-          stream
-          .select(col("ts").cast("timestamp").as("ts"), col("event_type"))
-          .filter(col("event_type") =!= "__nudge") // the sentinel only carries the watermark
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream.outputMode("append")
-          .format("memory").queryName(sinkName)
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        } catch {
-          case e: Throwable =>
-            s.conf.set("spark.sql.shuffle.partitions", prevParts); throw e
+        // this staged feed (the r18 stream probe, OPTIMIZATION_r18.md
+        // §A: addBatch/stateCommit is the dominant per-batch term at 32
+        // partitions). Restored once the bounded run finishes; batch
+        // plans are unaffected.
+        val q = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          val q = stream
+            .select(col("ts").cast("timestamp").as("ts"), col("event_type"))
+            .filter(col("event_type") =!= "__nudge") // the sentinel only carries the watermark
+            .withWatermark("ts", "1 hour")
+            .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+            .agg(count(lit(1)).as("n"))
+            .writeStream.outputMode("append")
+            .format("memory").queryName(sinkName)
+            .option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          q
         }
-        // hold the state-sizing override until the bounded run FINISHES
-        // (see q53: restoring right after start() would race a deferred
-        // session clone)
-        try q.awaitTermination()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
         val trace = q.recentProgress.map(p =>
           s"batch=${p.batchId} in=${p.numInputRows} wm=${p.eventTime.get("watermark")} " +
             s"maxT=${p.eventTime.get("max")}").mkString("; ")
@@ -408,8 +373,6 @@ object Advanced {
           .localCheckpoint()
         s.catalog.dropTempView(sinkName)
         out
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       }
     },
 
@@ -450,7 +413,6 @@ object Advanced {
           .write.mode("append").parquet(stage.toString)
         java.nio.file.Files.createFile(marker)
       }
-      val ck = java.nio.file.Files.createTempDirectory("graft-q53-ck")
       val sinkName = "q53_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val raw = s.readStream.schema(schema)
         .option("pathGlobFilter", "*.parquet")
@@ -462,26 +424,19 @@ object Advanced {
       // spark.sql.shuffle.partitions — size them to the stream's key
       // cardinality (150 users at sf0.01), not the batch default: every
       // state partition is a per-batch checkpoint file regardless of
-      // how empty it is. Restored once the bounded run finishes;
-      // batch plans are unaffected.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      // hold the state-sizing override until the bounded run FINISHES:
-      // StreamExecution happens to clone the session (and this conf) in
-      // its constructor, but that timing is an implementation detail —
-      // restoring right after start() would race a deferred clone
-      try {
-        val q =
-        Sessions.sessionizeStream(Sessions.typedEvents(events)).toDF().writeStream
-          .format("memory").queryName(sinkName)
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      // how empty it is. Restored once the bounded run finishes (see
+      // withConf); batch plans are unaffected.
+      withRoots(1) { case Seq(ck) =>
+        withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          Sessions.sessionizeStream(Sessions.typedEvents(events)).toDF().writeStream
+            .format("memory").queryName(sinkName)
+            .option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .start().awaitTermination()
+        }
+      }
       val out = s.table(sinkName).filter(col("user_id") >= 0)
       s.catalog.dropTempView(sinkName)
-      org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       out
     },
 
@@ -497,7 +452,6 @@ object Advanced {
     // epoch_us) so boundary rows can't drift.
     "q54_stream_join" -> { (s, d) =>
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val ck = java.nio.file.Files.createTempDirectory("graft-q54-ck")
       val sinkName = "q54_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
       def side(): DataFrame = {
         val raw = s.readStream.schema(schema)
@@ -526,24 +480,17 @@ object Advanced {
       // stream-stream join keeps FOUR stores per partition, so it gets
       // half the partitions of the single-store operators (16 store
       // instances per batch instead of 32; ~0.4 s/batch saved)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      // hold the state-sizing override until the bounded run FINISHES:
-      // StreamExecution happens to clone the session (and this conf) in
-      // its constructor, but that timing is an implementation detail —
-      // restoring right after start() would race a deferred clone
-      try {
-        val q =
-        joined.writeStream
-          .format("memory").queryName(sinkName)
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      withRoots(1) { case Seq(ck) =>
+        withConf(s, "spark.sql.shuffle.partitions" -> "4") {
+          joined.writeStream
+            .format("memory").queryName(sinkName)
+            .option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .start().awaitTermination()
+        }
+      }
       val out = s.table(sinkName)
       s.catalog.dropTempView(sinkName)
-      org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       out
     },
 
@@ -602,9 +549,8 @@ object Advanced {
         stage(staged, "00_data.parquet", t0)
         stage(sentinel(mx + 20L * 86400000L), "01_advance.parquet", t0 + 300000L)
       }
-      val ck = java.nio.file.Files.createTempDirectory("graft-q190-ck")
       val sinkName = "q190_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      try {
+      withRoots(1) { case Seq(ck) =>
         val schema = s.read.parquet(src.getPath).schema
         def side(): DataFrame = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(src.getPath)
@@ -624,27 +570,19 @@ object Advanced {
           .select(col("user_id"),
             unix_millis(col("click_ts")).as("click_ms"),
             coalesce(unix_millis(col("buy_ts")), lit(-1L)).as("buy_ms"))
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        // hold the state-sizing override until the bounded run FINISHES:
-        // StreamExecution happens to clone the session (and this conf) in
-        // its constructor, but that timing is an implementation detail —
-        // restoring right after start() would race a deferred clone
-        try {
-          val q =
+        withConf(s, "spark.sql.shuffle.partitions" -> "4") {
           joined.writeStream
             .format("memory").queryName(sinkName)
-            .option("checkpointLocation", ck.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+            .option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .start().awaitTermination()
+        }
         val out = s.table(sinkName).filter(col("user_id") >= 0L)
           .select(col("user_id"), col("click_ms"), col("buy_ms"))
           .localCheckpoint() // release the memory-sink view eagerly
         s.catalog.dropTempView(sinkName)
         out
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
+      }
     },
 
     // Stream-static enrichment: the event stream joins a static
@@ -656,7 +594,6 @@ object Advanced {
     // stream-stream (q54) and stateful aggregation (q52/q53).
     "q56_stream_enrich" -> { (s, d) =>
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val ck = java.nio.file.Files.createTempDirectory("graft-q56-ck")
       val sinkName = "q56_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val raw0 = s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -669,15 +606,15 @@ object Advanced {
         .select(col("c_custkey").cast("long").as("c_custkey"), col("c_mktsegment"))
       val enriched = raw.join(dim, col("user_id") === col("c_custkey"))
         .select(col("user_id"), col("ts_ms"), col("event_type"), col("c_mktsegment"))
-      val q = enriched.writeStream
-        .format("memory").queryName(sinkName)
-        .option("checkpointLocation", ck.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      withRoots(1) { case Seq(ck) =>
+        enriched.writeStream
+          .format("memory").queryName(sinkName)
+          .option("checkpointLocation", ck)
+          .trigger(Trigger.AvailableNow())
+          .start().awaitTermination()
+      }
       val out = s.table(sinkName)
       s.catalog.dropTempView(sinkName)
-      org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       out
     },
 

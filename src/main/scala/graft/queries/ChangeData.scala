@@ -82,16 +82,12 @@ object ChangeData {
       val full = viewOf(orders, line)
         .select(col("o_orderpriority"), col("l_returnflag"), col("n"),
           col("revenue").cast("double").as("revenue"))
-      // materialize both VIEWS (bounded: |priorities| x |returnflags|
-      // rows) before the invariant — each exceptAll side used to
-      // re-evaluate its whole join tree, and the returned frame a third
-      // time, so the 4 delta joins + full recompute ran ~3x per gate
-      // (r18, guide §1.2: don't compute things you throw away)
-      val mergedM = merged.localCheckpoint()
-      val fullM = full.localCheckpoint()
-      require(mergedM.exceptAll(fullM).count() == 0 && fullM.exceptAll(mergedM).count() == 0,
-        "delta maintenance must reproduce the full recompute exactly")
-      mergedM
+      // both VIEWS are bounded (|priorities| x |returnflags| rows), so
+      // sameBag materializes them before the invariant and the returned
+      // frame is the materialized side — without that the 4 delta joins
+      // + full recompute ran ~3x per gate (r18, guide §1.2: don't
+      // compute things you throw away)
+      GateFixtures.sameBag(merged, full, "delta maintenance must reproduce the full recompute exactly")._1
     },
 
     // Incremental aggregate-view maintenance: the daily (event_type,

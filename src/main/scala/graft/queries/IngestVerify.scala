@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.core.{DateFmt, Envelope, RecordProcessor}
 import graft.ingest.{FixtureDumps, IngestPipeline, StubKeyService}
+import graft.queries.GateFixtures._
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -70,24 +71,23 @@ object IngestVerify {
     // must land byte-identical rows against the SAME q30 golden parquet.
     "q39_stream_ingest" -> { (s, _) =>
       val dir = writeFixtures()
-      val ck = Files.createTempDirectory("graft-q39-ck")
       val sinkName = "q39_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val rows = graft.streaming.StreamingIngest.records(
         s, dir.toString, StubKeyService(), identity,
         maxFilesPerTrigger = 2,
         ivStrategy = IngestPipeline.IvStrategy.Deterministic("q30"),
         timeFilter = timeFilter)
-      val q = rows.toDF().writeStream
-        .format("memory").queryName(sinkName)
-        .option("checkpointLocation", ck.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // detach name + drop checkpoint so repeated invocations don't
-      // accumulate driver state; the plan holds the sink relation
+      withRoots(1) { case Seq(ck) =>
+        rows.toDF().writeStream
+          .format("memory").queryName(sinkName)
+          .option("checkpointLocation", ck)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start().awaitTermination()
+      }
+      // detach the name so repeated invocations don't accumulate driver
+      // state; the plan holds the sink relation
       val out = goldenProjection(s.table(sinkName))
       s.catalog.dropTempView(sinkName)
-      org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       out
     },
     // q193 — the bulk-load path's row in the gate: the SAME q30 fixture
@@ -105,12 +105,10 @@ object IngestVerify {
     "q193_bulk_load" -> { (s, _) =>
       import graft.ingest.{BulkLoad, FileStore, IngestPipeline, PushTableSink}
       val dir = writeFixtures()
-      val pushRoot = Files.createTempDirectory("graft-q193-push").toString
-      val bulkRoot = Files.createTempDirectory("graft-q193-bulk").toString
       val tasks = IngestPipeline.planTasks(s, Seq(dir.toString))
       val rows = IngestPipeline.ingest(s, tasks, StubKeyService(), identity, timeFilter,
         IngestPipeline.IvStrategy.Deterministic("q30")).cache()
-      try {
+      try withRoots(2) { case Seq(pushRoot, bulkRoot) =>
         val put = PushTableSink.write(rows, () => FileStore(pushRoot))
         val report = BulkLoad.write(rows, bulkRoot)
         require(put == report.cells && put > 0,
@@ -120,23 +118,13 @@ object IngestVerify {
         val tables = rows.filter(r => r.status == "ok" && r.filterStatus == "DoNotFilter")
           .map(_.tableName).distinct().collect().sorted
         def readState(root: String) = tables.map { t =>
-          s.read.format("graft-cells").option("root", root).option("table", t).load()
+          readCells(s, root, t)
             .select(lit(t).as("table_name"), hex(col("rowkey")).as("rowkey_hex"),
               col("version"), md5(col("body")).as("envelope_md5"))
         }.reduce(_ unionByName _)
-        // materialize both sides once: each exceptAll side re-evaluates
-        // its whole multi-table union, so the two-way check cost 4
-        // store-state scans (plus the returned frame a 5th) instead of 2
-        val push = readState(pushRoot).localCheckpoint()
-        val bulk = readState(bulkRoot).localCheckpoint()
-        require(push.exceptAll(bulk).count() == 0 && bulk.exceptAll(push).count() == 0,
-          "bulk-written state must be cell-for-cell identical to push-written state")
-        bulk
-      } finally {
-        rows.unpersist()
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(pushRoot))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(bulkRoot))
-      }
+        sameBag(readState(pushRoot), readState(bulkRoot),
+          "bulk-written state must be cell-for-cell identical to push-written state")._2
+      } finally rows.unpersist()
     }
   )
 

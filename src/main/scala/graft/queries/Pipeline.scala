@@ -1,8 +1,10 @@
 package graft.queries
 
+import graft.queries.GateFixtures._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /** End-to-end training-data pipeline operators, batch two (q126-q136,
   * q140-q151): PII-style redaction, SemDeDup embedding dedup, BPE
@@ -314,53 +316,38 @@ object Pipeline {
     // content straight from documents. The staging store is fresh per
     // call (the stream face is the thing under test, not a cache).
     "q133_cells_tail" -> { (s, d) =>
-      val sub = Tables.documents(s, d)
-        .filter(col("doc_id") % 10 === 0)
-        .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-          col("doc_id").as("version"),
-          expr("cast(md5(text) as binary)").as("body"))
-        .localCheckpoint()
+      val sub = docCells(s, d, 10, "doc_id", "cast(md5(text) as binary)").localCheckpoint()
       // range midpoint: both halves non-empty whenever min < max, and
       // half B's versions are all ABOVE half A's — the monotone-append
       // contract the stream face tails by
       val Array(mn, mx) = sub.agg(min(col("version")), max(col("version")))
         .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
       val half = (mn + mx + 1) / 2
-      val root = java.nio.file.Files.createTempDirectory("graft-q133-cells").toString
-      val ck = java.nio.file.Files.createTempDirectory("graft-q133-ck").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-q133-out").toString
-      // staging dirs are released in the finally below — the query runs
+      // staging dirs are released even on failure — the query runs
       // warmup + N bench passes per invocation, so a failure path that
       // leaked all three would accumulate across a whole bench run
-      try {
-      def write(df: DataFrame): Unit =
-        df.write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q133").save()
-      def tailOnce(): Unit = {
-        val q = s.readStream.format("graft-cells")
-          .option("root", root).option("table", "q133").load()
-          .select(col("version"), col("rowkey").cast("string").as("key_str"),
-            col("body").cast("string").as("body_md5"))
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ck)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      write(sub.filter(col("version") < half))
-      tailOnce()
-      val afterFirst = s.read.parquet(out).count()
-      write(sub.filter(col("version") >= half))
-      tailOnce()
-      val res = s.read.parquet(out).localCheckpoint()
-      val total = res.count()
-      require(afterFirst > 0 && total > afterFirst,
-        s"restarted tail must deliver only the appended versions: $afterFirst -> $total")
-      res // localCheckpoint is eager: safe to delete the parquet dir below
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      withRoots(3) { case Seq(root, ck, out) =>
+        def tailOnce(): Unit = {
+          val q = s.readStream.format("graft-cells")
+            .option("root", root).option("table", "q133").load()
+            .select(col("version"), col("rowkey").cast("string").as("key_str"),
+              col("body").cast("string").as("body_md5"))
+            .writeStream.format("parquet")
+            .option("path", out).option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+        }
+        putCells(sub.filter(col("version") < half), root, "q133")
+        tailOnce()
+        val afterFirst = s.read.parquet(out).count()
+        putCells(sub.filter(col("version") >= half), root, "q133")
+        tailOnce()
+        val res = s.read.parquet(out).localCheckpoint()
+        val total = res.count()
+        require(afterFirst > 0 && total > afterFirst,
+          s"restarted tail must deliver only the appended versions: $afterFirst -> $total")
+        res // localCheckpoint is eager: safe to delete the parquet dir
       }
     },
 
@@ -376,35 +363,21 @@ object Pipeline {
     // like every cell write. The in-query invariant pins the version
     // drop (3 cells per key before, 1 after); the oracle recomputes the
     // survivors' logical content straight from documents.
-    "q134_cells_compact" -> { (s, d) =>
-      val root = java.nio.file.Files.createTempDirectory("graft-q134-cells").toString
-      try { // staging store released even when a step throws (q133's rule)
-      val seed = Tables.documents(s, d)
-        .filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id"), explode(sequence(lit(1), lit(3))).as("v"))
-        .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-          expr("doc_id * 4 + v").as("version"),
-          expr("cast(md5(concat(cast(doc_id as string), '-', cast(v as string))) as binary)").as("body"))
-      seed.write.format("graft-cells").mode("append")
-        .option("root", root).option("table", "q134").save()
-      def readTable(t: String) = s.read.format("graft-cells")
-        .option("root", root).option("table", t).load()
-      val before = readTable("q134").count()
-      readTable("q134")
+    "q134_cells_compact" -> { (s, d) => withRoots(1) { case Seq(root) =>
+      val seed = docCells(s, d, 20, "doc_id * 4 + v",
+        "cast(md5(concat(cast(doc_id as string), '-', cast(v as string))) as binary)",
+        gen = explode(sequence(lit(1), lit(3))).as("v"))
+      putCells(seed, root, "q134")
+      val before = readCells(s, root, "q134").count()
+      putCells(readCells(s, root, "q134")
         .groupBy(col("rowkey"))
-        .agg(max(col("version")).as("version"), expr("max_by(body, version)").as("body"))
-        .write.format("graft-cells").mode("append")
-        .option("root", root).option("table", "q134c").save()
-      val res = readTable("q134c")
-        .select(col("rowkey").cast("string").as("key_str"), col("version"),
-          col("body").cast("string").as("body_md5"))
-        .localCheckpoint()
+        .agg(max(col("version")).as("version"), expr("max_by(body, version)").as("body")), root, "q134c")
+      val res = cellStrings(readCells(s, root, "q134c")).localCheckpoint()
       val after = res.count()
       require(before == 3 * after && after > 0,
         s"compaction must keep exactly the latest of 3 versions per key: $before -> $after")
       res
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    }},
 
     // Rowkey PREFIX scan through the cell store — the third HBase read
     // idiom after point GET (q133's shard routing) and time-travel
@@ -417,28 +390,16 @@ object Pipeline {
     // of the seeded shards) and re-checks bounds on parsed keys before
     // body I/O; the oracle recomputes the slice's logical content
     // straight from documents, proving the range semantics end to end.
-    "q136_cells_prefix" -> { (s, d) =>
-      val root = java.nio.file.Files.createTempDirectory("graft-q136-cells").toString
-      try {
-        Tables.documents(s, d).filter(col("doc_id") % 5 === 0)
-          .select(
-            expr("cast(concat(chr(65 + doc_id % 8), '-', cast(doc_id as string)) as binary)").as("rowkey"),
-            col("doc_id").as("version"),
-            expr("cast(md5(text) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q136").save()
-        val pruned = s.read.format("graft-cells")
-          .option("root", root).option("table", "q136").load()
-          .filter(col("rowkey") >= lit("C".getBytes("UTF-8")) &&
-            col("rowkey") < lit("D".getBytes("UTF-8")))
-        require(pruned.rdd.getNumPartitions == 1,
-          s"prefix scan must plan exactly the 'C' shard, got ${pruned.rdd.getNumPartitions}")
-        pruned
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q136_cells_prefix" -> { (s, d) => withRoots(1) { case Seq(root) =>
+      putCells(docCells(s, d, 5, "doc_id", "cast(md5(text) as binary)",
+        key = "cast(concat(chr(65 + doc_id % 8), '-', cast(doc_id as string)) as binary)"), root, "q136")
+      val pruned = readCells(s, root, "q136")
+        .filter(col("rowkey") >= lit("C".getBytes("UTF-8")) &&
+          col("rowkey") < lit("D".getBytes("UTF-8")))
+      require(pruned.rdd.getNumPartitions == 1,
+        s"prefix scan must plan exactly the 'C' shard, got ${pruned.rdd.getNumPartitions}")
+      cellStrings(pruned).localCheckpoint()
+    }},
 
     // TTL retention sweep through the cell store — the HBase
     // TTL+minVersions maintenance semantics (cells older than the
@@ -453,41 +414,27 @@ object Pipeline {
     // itself expired), so the union needs no dedup. At store scale both
     // arms are shard-parallel and the rewrite is idempotent per
     // (rowkey, version).
-    "q140_cells_ttl" -> { (s, d) =>
+    "q140_cells_ttl" -> { (s, d) => withRoots(1) { case Seq(root) =>
       val cutoff = 1000L
-      val root = java.nio.file.Files.createTempDirectory("graft-q140-cells").toString
-      try {
-        Tables.documents(s, d)
-          .filter(col("doc_id") % 15 === 0)
-          .select(col("doc_id"), explode(sequence(lit(1), lit(3))).as("v"))
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 4 + v").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), '-', cast(v as string))) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q140").save()
-        def readTable(t: String) = s.read.format("graft-cells")
-          .option("root", root).option("table", t).load()
-        val fresh = readTable("q140").filter(col("version") >= cutoff)
-        val latestExpired = readTable("q140")
-          .groupBy(col("rowkey"))
-          .agg(max(col("version")).as("version"), expr("max_by(body, version)").as("body"))
-          .filter(col("version") < cutoff) // disjoint from the fresh arm
-          .select(col("rowkey"), col("version"), col("body"))
-        fresh.unionByName(latestExpired)
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q140t").save()
-        val res = readTable("q140t")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-        // every seeded key survives the sweep (minVersions=1 semantics)
-        val keysBefore = readTable("q140").select(col("rowkey")).distinct().count()
-        val keysAfter = res.select(col("key_str")).distinct().count()
-        require(keysBefore == keysAfter && keysAfter > 0,
-          s"TTL sweep must keep every key: $keysBefore -> $keysAfter")
-        res
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+      putCells(docCells(s, d, 15, "doc_id * 4 + v",
+        "cast(md5(concat(cast(doc_id as string), '-', cast(v as string))) as binary)",
+        gen = explode(sequence(lit(1), lit(3))).as("v")), root, "q140")
+      def readTable(t: String) = readCells(s, root, t)
+      val fresh = readTable("q140").filter(col("version") >= cutoff)
+      val latestExpired = readTable("q140")
+        .groupBy(col("rowkey"))
+        .agg(max(col("version")).as("version"), expr("max_by(body, version)").as("body"))
+        .filter(col("version") < cutoff) // disjoint from the fresh arm
+        .select(col("rowkey"), col("version"), col("body"))
+      putCells(fresh.unionByName(latestExpired), root, "q140t")
+      val res = cellStrings(readTable("q140t")).localCheckpoint()
+      // every seeded key survives the sweep (minVersions=1 semantics)
+      val keysBefore = readTable("q140").select(col("rowkey")).distinct().count()
+      val keysAfter = res.select(col("key_str")).distinct().count()
+      require(keysBefore == keysAfter && keysAfter > 0,
+        s"TTL sweep must keep every key: $keysBefore -> $keysAfter")
+      res
+    }},
 
     // Secondary INDEX over the cell store — the HBase index-table
     // pattern: the index is just another cell table whose rowkey is
@@ -500,47 +447,35 @@ object Pipeline {
     // (bounded — the same class as every keeper list). In-query pins:
     // the index scan plans 1 partition; no full main-table scan on the
     // read path. The oracle recomputes the answer relationally.
-    "q141_cells_index" -> { (s, d) =>
-      val root = java.nio.file.Files.createTempDirectory("graft-q141-cells").toString
-      try {
-        val sub = Tables.documents(s, d).filter(col("doc_id") % 7 === 0)
-          .select(col("doc_id"), md5(col("text")).as("h"))
-          .localCheckpoint()
-        // main table: key -> body (the value)
-        sub.select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            col("doc_id").as("version"), expr("cast(h as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q141m").save()
-        // index table: (value | main-key) -> main-key
-        sub.select(expr("cast(concat(h, '|', 'doc-', doc_id) as binary)").as("rowkey"),
-            col("doc_id").as("version"),
-            expr("cast(concat('doc-', doc_id) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q141i").save()
-        // the value under lookup: modal body hash (count desc, h asc)
-        val target = sub.groupBy(col("h")).agg(count(lit(1)).as("c"))
-          .orderBy(col("c").desc, col("h").asc).limit(1)
-          .collect().head.getString(0)
-        def readTable(t: String) = s.read.format("graft-cells")
-          .option("root", root).option("table", t).load()
-        // index prefix scan: ["<h>|", "<h>}") — '}' = '|' + 1
-        val idxScan = readTable("q141i")
-          .filter(col("rowkey") >= lit(s"$target|".getBytes("UTF-8")) &&
-            col("rowkey") < lit(s"$target}".getBytes("UTF-8")))
-        require(idxScan.rdd.getNumPartitions == 1,
-          s"index prefix scan must plan the value's shard only, got ${idxScan.rdd.getNumPartitions}")
-        val mainKeys = idxScan.select(col("body")).collect()
-          .map(_.getAs[Array[Byte]](0)) // dup-group-sized
-        require(mainKeys.nonEmpty, "index lookup found no postings")
-        val hits = readTable("q141m")
-          .filter(col("rowkey").isin(mainKeys.toSeq: _*))
-        require(hits.rdd.getNumPartitions <= mainKeys.length,
-          "main-table read must plan only the probed keys' shards")
-        hits.select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q141_cells_index" -> { (s, d) => withRoots(1) { case Seq(root) =>
+      val sub = Tables.documents(s, d).filter(col("doc_id") % 7 === 0)
+        .select(col("doc_id"), md5(col("text")).as("h"))
+        .localCheckpoint()
+      // main table: key -> body (the value)
+      putCells(sub.select(expr(DocKey).as("rowkey"),
+        col("doc_id").as("version"), expr("cast(h as binary)").as("body")), root, "q141m")
+      // index table: (value | main-key) -> main-key
+      putCells(sub.select(expr("cast(concat(h, '|', 'doc-', doc_id) as binary)").as("rowkey"),
+        col("doc_id").as("version"), expr(DocKey).as("body")), root, "q141i")
+      // the value under lookup: modal body hash (count desc, h asc)
+      val target = sub.groupBy(col("h")).agg(count(lit(1)).as("c"))
+        .orderBy(col("c").desc, col("h").asc).limit(1)
+        .collect().head.getString(0)
+      // index prefix scan: ["<h>|", "<h>}") — '}' = '|' + 1
+      val idxScan = readCells(s, root, "q141i")
+        .filter(col("rowkey") >= lit(s"$target|".getBytes("UTF-8")) &&
+          col("rowkey") < lit(s"$target}".getBytes("UTF-8")))
+      require(idxScan.rdd.getNumPartitions == 1,
+        s"index prefix scan must plan the value's shard only, got ${idxScan.rdd.getNumPartitions}")
+      val mainKeys = idxScan.select(col("body")).collect()
+        .map(_.getAs[Array[Byte]](0)) // dup-group-sized
+      require(mainKeys.nonEmpty, "index lookup found no postings")
+      val hits = readCells(s, root, "q141m")
+        .filter(col("rowkey").isin(mainKeys.toSeq: _*))
+      require(hits.rdd.getNumPartitions <= mainKeys.length,
+        "main-table read must plan only the probed keys' shards")
+      cellStrings(hits).localCheckpoint()
+    }},
 
     // Streaming MATERIALIZED VIEW over the cell store — change feed in,
     // derived cells out: tail the main table through the connector's
@@ -555,57 +490,38 @@ object Pipeline {
     // hold exactly one derived cell per source cell. This is the HBase
     // replication/coprocessor-MV analog, run entirely on the engine's
     // own primitives.
-    "q143_cells_stream_mv" -> { (s, d) =>
-      val root = java.nio.file.Files.createTempDirectory("graft-q143-cells").toString
-      val ck = java.nio.file.Files.createTempDirectory("graft-q143-ck").toString
-      try {
-        val seed = Tables.documents(s, d).filter(col("doc_id") % 9 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            col("doc_id").as("version"),
-            expr("cast(md5(text) as binary)").as("body"))
-          .localCheckpoint()
-        val Array(mn, mx) = seed.agg(min(col("version")), max(col("version")))
-          .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
-        val half = (mn + mx + 1) / 2
-        def write(df: DataFrame): Unit =
-          df.write.format("graft-cells").mode("append")
-            .option("root", root).option("table", "q143m").save()
-        def readTable(t: String) = s.read.format("graft-cells")
-          .option("root", root).option("table", t).load()
-        def tailOnce(): Unit = {
-          val q = s.readStream.format("graft-cells")
-            .option("root", root).option("table", "q143m").load()
-            .writeStream
-            .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-              batch.select(col("rowkey"), col("version"),
-                expr("cast(md5(concat(cast(body as string), '-mv')) as binary)").as("body"))
-                .write.format("graft-cells").mode("append")
-                .option("root", root).option("table", "q143d").save()
-              ()
-            }
-            .option("checkpointLocation", ck)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        write(seed.filter(col("version") < half))
-        tailOnce()
-        val afterFirst = readTable("q143d").count()
-        write(seed.filter(col("version") >= half))
-        tailOnce()
-        val res = readTable("q143d")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("deriv_md5"))
-          .localCheckpoint()
-        val total = res.count()
-        require(afterFirst > 0 && total > afterFirst && total == seed.count(),
-          s"derived view must hold exactly one cell per source cell: $afterFirst -> $total")
-        res
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
+    "q143_cells_stream_mv" -> { (s, d) => withRoots(2) { case Seq(root, ck) =>
+      val seed = docCells(s, d, 9, "doc_id", "cast(md5(text) as binary)").localCheckpoint()
+      val Array(mn, mx) = seed.agg(min(col("version")), max(col("version")))
+        .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
+      val half = (mn + mx + 1) / 2
+      def tailOnce(): Unit = {
+        val q = s.readStream.format("graft-cells")
+          .option("root", root).option("table", "q143m").load()
+          .writeStream
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            putCells(batch.select(col("rowkey"), col("version"),
+              expr("cast(md5(concat(cast(body as string), '-mv')) as binary)").as("body")), root, "q143d")
+          }
+          .option("checkpointLocation", ck)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
       }
-    },
+      putCells(seed.filter(col("version") < half), root, "q143m")
+      tailOnce()
+      val afterFirst = readCells(s, root, "q143d").count()
+      putCells(seed.filter(col("version") >= half), root, "q143m")
+      tailOnce()
+      val res = readCells(s, root, "q143d")
+        .select(col("rowkey").cast("string").as("key_str"), col("version"),
+          col("body").cast("string").as("deriv_md5"))
+        .localCheckpoint()
+      val total = res.count()
+      require(afterFirst > 0 && total > afterFirst && total == seed.count(),
+        s"derived view must hold exactly one cell per source cell: $afterFirst -> $total")
+      res
+    }},
 
     // VERIFY-REPLICATION for the cell store — the HBase idiom (the
     // reference's target store ships a VerifyReplication job) built
@@ -621,24 +537,19 @@ object Pipeline {
     // fail — or cannot pass — proves nothing).
     "q170_cells_verify" -> { (s, d) =>
       val P = 2305843009213693951L
-      val root = java.nio.file.Files.createTempDirectory("graft-q170-cells").toString
-      try {
+      withRoots(1) { case Seq(root) =>
         val base = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
           .select(col("doc_id"), md5(col("text")).as("body_str"),
             when(col("doc_id") % 70 === 0, md5(concat(col("text"), lit("-x"))))
               .otherwise(md5(col("text"))).as("tampered_str"))
           .localCheckpoint() // feeds both store writes
         def cells(df: DataFrame, bodyCol: String) = df.select(
-          expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+          expr(DocKey).as("rowkey"),
           col("doc_id").as("version"),
           col(bodyCol).cast("binary").as("body"))
-        cells(base, "body_str").write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q170a").save()
-        cells(base.filter(col("doc_id") % 100 =!= 0), "tampered_str")
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q170b").save()
-        def digests(t: String, side: Int) = s.read.format("graft-cells")
-          .option("root", root).option("table", t).load()
+        putCells(cells(base, "body_str"), root, "q170a")
+        putCells(cells(base.filter(col("doc_id") % 100 =!= 0), "tampered_str"), root, "q170b")
+        def digests(t: String, side: Int) = readCells(s, root, t)
           .select(col("rowkey").cast("string").as("k"), col("version"),
             col("body").cast("string").as("b"))
           .withColumn("h", expr(
@@ -665,7 +576,7 @@ object Pipeline {
         require(bad > 0 && bad < out.count(),
           s"verifier must see both outcomes: $bad of ${out.count()} buckets diverge")
         out
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+      }
     },
 
     // Deterministic corpus SHUFFLE — the reproducible global permutation

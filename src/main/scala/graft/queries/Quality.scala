@@ -1,8 +1,10 @@
 package graft.queries
 
+import graft.queries.GateFixtures._
 import graft.streaming.{BandDedup, BandRow}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /** Document-quality and representation operators: Gopher-style
   * intra-document repetition metrics, int8 embedding quantization, LM
@@ -200,19 +202,17 @@ object Quality {
         val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
         val n = math.max(docs.count(), 1L)
         src.mkdirs()
-        (0 until 4).foreach { k =>
-          val stage = java.nio.file.Files.createTempDirectory("graft-q124-stage")
+        (0 until 4).foreach { k => withRoots(1) { case Seq(stage) =>
           docs.filter(expr(s"least(doc_id * 4 div ${n}L, 3)") === k)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
+            .coalesce(1).write.mode("overwrite").parquet(stage)
+          val part = new java.io.File(stage).listFiles()
             .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
           val dst = new java.io.File(src, s"b$k.parquet")
           java.nio.file.Files.move(part.toPath, dst.toPath)
           // well-separated ascending mtimes: the file source processes
           // oldest-first, which is the id-order the semantics need
           dst.setLastModified(1700000000000L + k * 60000L)
-          org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
-        }
+        }}
       }
       val schema = s.read.parquet(src.getPath).schema
       val raw = s.readStream.schema(schema)
@@ -229,37 +229,26 @@ object Quality {
         .withColumn("sig", expr(sigExpr))
         .select(col("doc_id"), posexplode(expr(bandKeysExpr)).as(Seq("band_idx", "band_key")))
         .as[BandRow]
-      val target = java.nio.file.Files.createTempDirectory("graft-q124-target")
-      val ck = java.nio.file.Files.createTempDirectory("graft-q124-ck")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      // hold the state-sizing override until the bounded run FINISHES:
-      // StreamExecution happens to clone the session (and this conf) in
-      // its constructor, but that timing is an implementation detail —
-      // restoring right after start() would race a deferred clone
-      try {
-        val q =
-        BandDedup.bucketMins(bands).toDF().writeStream
-          .foreachBatch { (b: Dataset[Row], id: Long) =>
-            b.groupBy(col("doc_id")).agg(min(col("bmin")).as("keeper"))
-              .write.mode("overwrite").parquet(s"$target/batch=$id")
-            ()
-          }
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      val nB = target.toFile.listFiles().count(_.getName.startsWith("batch="))
-      require(nB >= 2, s"expected multi-batch incremental dedup, got $nB batch dirs")
-      val out = s.read.parquet(target.toString)
-        .groupBy(col("doc_id")).agg(min(col("keeper")).as("keeper"))
-        .select(col("doc_id"), col("keeper"),
-          (col("keeper") < col("doc_id")).as("is_dup"))
-        .localCheckpoint()
-      org.apache.commons.io.FileUtils.deleteQuietly(target.toFile)
-      org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
-      out
+      withRoots(2) { case Seq(target, ck) =>
+        withConf(s, "spark.sql.shuffle.partitions" -> "4") {
+          BandDedup.bucketMins(bands).toDF().writeStream
+            .foreachBatch { (b: Dataset[Row], id: Long) =>
+              b.groupBy(col("doc_id")).agg(min(col("bmin")).as("keeper"))
+                .write.mode("overwrite").parquet(s"$target/batch=$id")
+              ()
+            }
+            .option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .start().awaitTermination()
+        }
+        val nB = new java.io.File(target).listFiles().count(_.getName.startsWith("batch="))
+        require(nB >= 2, s"expected multi-batch incremental dedup, got $nB batch dirs")
+        s.read.parquet(target)
+          .groupBy(col("doc_id")).agg(min(col("keeper")).as("keeper"))
+          .select(col("doc_id"), col("keeper"),
+            (col("keeper") < col("doc_id")).as("is_dup"))
+          .localCheckpoint()
+      }
     },
 
     // Per-source token-distribution drift: an exact integer chi-square

@@ -1,8 +1,10 @@
 package graft.queries
 
+import graft.queries.GateFixtures._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /** Deterministic, engine-portable SKETCHES — the approximate operators
   * a 100 TB pipeline leans on (cardinality, set overlap), built so both
@@ -162,35 +164,28 @@ object Sketches {
         Tables.events(s, d).select(col("event_type"), col("user_id"))
           .repartition(2).write.mode("overwrite").parquet(src.getPath)
       }
-      val ck = java.nio.file.Files.createTempDirectory("graft-q142-ck")
       val sinkName = s"graft_q142_sink_${memSinkId.incrementAndGet()}"
       val schema = s.read.parquet(src.getPath).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src.getPath)
-      try {
+      withRoots(1) { case Seq(ck) =>
         // state partitions sized to the stream's key cardinality (the
         // q52/q53 discipline): state is event_type × M=32 registers —
         // ~100 keys — and every state partition is a per-batch
         // checkpoint-file commit regardless of fill (the q156/q167
         // probe finding). Restored when the bounded run finishes.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q = try {
-          hllRanks(stream)
-          .groupBy(col("event_type"), col("idx"))
-          .agg(max(col("rank")).as("m"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(sinkName)
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        } catch {
-          case e: Throwable =>
-            s.conf.set("spark.sql.shuffle.partitions", prevParts); throw e
+        val q = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          val q = hllRanks(stream)
+            .groupBy(col("event_type"), col("idx"))
+            .agg(max(col("rank")).as("m"))
+            .writeStream.outputMode("complete")
+            .format("memory").queryName(sinkName)
+            .option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          q
         }
-        // hold the override until the bounded run finishes (see q53)
-        try q.awaitTermination()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
         require(q.recentProgress.count(_.numInputRows > 0) >= 2,
           "streaming HLL must see the feed as multiple micro-batches")
         val out = registersToEstimate(s.table(sinkName)).localCheckpoint()
@@ -199,8 +194,6 @@ object Sketches {
         // register tables in the session catalog
         s.catalog.dropTempView(sinkName)
         out
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       }
     },
 
@@ -317,41 +310,34 @@ object Sketches {
         Tables.documents(s, d).select(col("text"))
           .repartition(2).write.mode("overwrite").parquet(src.getPath)
       }
-      val ck = java.nio.file.Files.createTempDirectory("graft-q156-ck")
       val sinkName = s"graft_q156_sink_${memSinkId.incrementAndGet()}"
       val schema = s.read.parquet(src.getPath).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src.getPath)
-      try {
+      withRoots(1) { case Seq(ck) =>
         // state partitions sized to the stream's key cardinality (the
         // q52/q53 discipline, r18): state is the FIXED d×w = 2048-key
         // counter table, and every state partition is a per-batch
-        // checkpoint-file commit regardless of fill (StreamProbe r18:
-        // state commit fan-out dominated the 32-partition run).
-        // Restored when the bounded run finishes.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q = try {
-          stream
-          .select(explode(split(col("text"), " ")).as("t"))
-          .filter(length(col("t")) > 0)
-          .select(col("t"), explode(sequence(lit(0), lit(CmD - 1))).as("r"))
-          .withColumn("b", expr(
-            s"CAST(conv(substring(md5(concat(CAST(r AS STRING), ':', t)), 1, 15), 16, 10) AS BIGINT) % $CmW"))
-          .groupBy(col("r"), col("b"))
-          .agg(count(lit(1)).as("cnt"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(sinkName)
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        } catch {
-          case e: Throwable =>
-            s.conf.set("spark.sql.shuffle.partitions", prevParts); throw e
+        // checkpoint-file commit regardless of fill (the r18 stream
+        // probe, OPTIMIZATION_r18.md §A: state commit fan-out dominated
+        // the 32-partition run). Restored when the bounded run finishes.
+        val q = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          val q = stream
+            .select(explode(split(col("text"), " ")).as("t"))
+            .filter(length(col("t")) > 0)
+            .select(col("t"), explode(sequence(lit(0), lit(CmD - 1))).as("r"))
+            .withColumn("b", expr(
+              s"CAST(conv(substring(md5(concat(CAST(r AS STRING), ':', t)), 1, 15), 16, 10) AS BIGINT) % $CmW"))
+            .groupBy(col("r"), col("b"))
+            .agg(count(lit(1)).as("cnt"))
+            .writeStream.outputMode("complete")
+            .format("memory").queryName(sinkName)
+            .option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          q
         }
-        // hold the override until the bounded run finishes (see q53)
-        try q.awaitTermination()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
         require(q.recentProgress.count(_.numInputRows > 0) >= 2,
           "streaming count-min must see the feed as multiple micro-batches")
         val out = s.table(sinkName)
@@ -359,8 +345,6 @@ object Sketches {
           .localCheckpoint()
         s.catalog.dropTempView(sinkName) // eager checkpoint — release the view
         out
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       }
     },
 
@@ -380,12 +364,11 @@ object Sketches {
         Tables.documents(s, d).select(col("source"), col("n_chars"))
           .repartition(2).write.mode("overwrite").parquet(src.getPath)
       }
-      val ck = java.nio.file.Files.createTempDirectory("graft-q167-ck")
       val sinkName = s"graft_q167_sink_${memSinkId.incrementAndGet()}"
       val schema = s.read.parquet(src.getPath).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src.getPath)
-      try {
+      withRoots(1) { case Seq(ck) =>
         val x = col("n_chars")
         def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
         // state partitions sized to the stream's key cardinality (the
@@ -393,27 +376,21 @@ object Sketches {
         // ~20 keys — while each of the 32 default partitions costs a
         // per-batch checkpoint-file commit even when empty. Restored
         // when the bounded run finishes.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q = try {
-          stream
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as("n"), min(x).as("mn"), max(x).as("mx"),
-            sum(dec(x)).as("s1"), sum(dec(x) * dec(x)).as("s2"),
-            sum(dec(x) * dec(x) * dec(x)).as("s3"),
-            sum(dec(x) * dec(x) * dec(x) * dec(x)).as("s4"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(sinkName)
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        } catch {
-          case e: Throwable =>
-            s.conf.set("spark.sql.shuffle.partitions", prevParts); throw e
+        val q = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          val q = stream
+            .groupBy(col("source"))
+            .agg(count(lit(1)).as("n"), min(x).as("mn"), max(x).as("mx"),
+              sum(dec(x)).as("s1"), sum(dec(x) * dec(x)).as("s2"),
+              sum(dec(x) * dec(x) * dec(x)).as("s3"),
+              sum(dec(x) * dec(x) * dec(x) * dec(x)).as("s4"))
+            .writeStream.outputMode("complete")
+            .format("memory").queryName(sinkName)
+            .option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          q
         }
-        // hold the override until the bounded run finishes (see q53)
-        try q.awaitTermination()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
         require(q.recentProgress.count(_.numInputRows > 0) >= 2,
           "streaming moments must see the feed as multiple micro-batches")
         val out = s.table(sinkName)
@@ -433,8 +410,6 @@ object Sketches {
           .localCheckpoint()
         s.catalog.dropTempView(sinkName)
         out
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       }
     },
 

@@ -1,9 +1,12 @@
 package graft.queries
 
 import graft.ingest.{BulkLoad, CellSegment, Compaction, FileStore, PushTableSink, Resplit}
+import graft.queries.GateFixtures._
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import scala.jdk.CollectionConverters._
 
 /** Cell-store MAINTENANCE lifecycle over the bulk-load machinery —
@@ -12,7 +15,7 @@ import scala.jdk.CollectionConverters._
   * backup/restore round-trip whose restore path IS the bulk load
   * (q195). Both gate rows derive every byte from the documents table,
   * so the DuckDB oracle re-derives the same logical content with no
-  * engine-side state.
+  * engine-side state. The shared fixtures live in [[GateFixtures]].
   */
 object StoreLifecycle {
 
@@ -35,6 +38,58 @@ object StoreLifecycle {
     finally shards.close()
   }
 
+  /** Runs `body` over one temp root with a catalog registered on it. */
+  private def withCatalogRoot[T](s: SparkSession)(body: (String, String) => T): T =
+    withRoots(1) { case Seq(root) => withCatalog(s, root)(body(root, _)) }
+
+  /** The `doc-` rowkey's md5 digest: keys spread over every first-byte region. */
+  private val Md5DocKey = "unhex(md5(concat('doc-', doc_id)))"
+
+  /** Split points inside the hot `doc-` key range: 10 regions under its one first byte. */
+  private def docSplits = (1 to 9).map(i => s"doc-$i".getBytes("UTF-8"))
+
+  /** The sorted ids of every `mod`-th document. */
+  private def docIds(s: SparkSession, d: String, mod: Int): Array[Long] =
+    Tables.documents(s, d).filter(col("doc_id") % mod === 0)
+      .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
+
+  /** A SQL `(X'…', …)` list of the `doc-<id>` rowkeys of `ids`. */
+  private def keyList(ids: Array[Long]): String = ids
+    .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
+    .mkString("(", ", ", ")")
+
+  /** `verb target` of one cell per `mod`-th document through SQL over the
+    * documents parquet: `version` is a SQL expression over doc_id, the body
+    * the md5 of doc_id followed by the SQL string arguments `tag`. */
+  private def insertDocs(s: SparkSession, d: String, target: String, mod: Int, version: String,
+      tag: String, verb: String = "INSERT INTO"): Unit =
+    s.sql(s"""$verb $target
+        SELECT cast(concat('doc-', doc_id) as binary),
+               $version,
+               cast(md5(concat(cast(doc_id as string), $tag)) as binary)
+        FROM parquet.`$d/documents.parquet` WHERE doc_id % $mod = 0""")
+
+  /** The description of the first DSv2 scan in `df`'s optimized plan. */
+  private def scanDesc(df: DataFrame): String = df.queryExecution.optimizedPlan.collectFirst {
+    case r: DataSourceV2ScanRelation => r.scan.description()
+  }.getOrElse("")
+
+  /** Storage-partitioned join conf: v2 bucketing on; broadcast off, since
+    * broadcast would sidestep co-partitioning and skip the sort-merge path
+    * the property is about. */
+  private val SpjConf = Seq("spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
+  /** `a JOIN b ON rowkey`, projected to each side's version and body md5. */
+  private def abJoin(a: DataFrame, b: DataFrame): DataFrame =
+    a.as("a").join(b.as("b"), col("a.rowkey") === col("b.rowkey"))
+      .select(col("a.rowkey").cast("string").as("key_str"),
+        col("a.version").as("version_a"),
+        col("a.body").cast("string").as("body_a_md5"),
+        col("b.version").as("version_b"),
+        col("b.body").cast("string").as("body_b_md5"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Major compaction through the full store-file mix: versions 1-2
     // land as one bulk segment generation, version 3 as a second
@@ -49,43 +104,29 @@ object StoreLifecycle {
     // superseded segment swept); the oracle re-derives the retained
     // slice straight from documents; the connector read after the
     // sweep proves the rewritten segments carry the bytes.
-    "q194_cells_major_compact" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q194-cells").toString
-      try {
-        val spec = PushTableSink.TableSpec(maxVersions = 3)
-        def seed(vLo: Int, vHi: Int) = Tables.documents(s, d)
-          .filter(col("doc_id") % 11 === 0)
-          .select(col("doc_id"), explode(sequence(lit(vLo), lit(vHi))).as("v"))
-          .select(lit("q194").as("tableName"),
-            expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 8 + v").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), '-', cast(v as string))) as binary)").as("body"))
-        BulkLoad.writeCells(seed(1, 2), root, BulkLoad.Config(tableSpec = spec))
-        BulkLoad.writeCells(seed(3, 3), root, BulkLoad.Config(tableSpec = spec))
-        seed(4, 5).drop("tableName").write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q194").save()
-        def readTable = s.read.format("graft-cells")
-          .option("root", root).option("table", "q194").load()
-        val before = readTable.count()
-        val physical = s.read.format("graft-cells")
-          .option("root", root).option("table", "q194")
-          .option("changeFeed", "true").load().count()
-        require(3L * physical == 5L * before,
-          s"read-time cap serves 3 of the 5 physical versions per key: view=$before log=$physical")
-        val report = Compaction.major(s, root, "q194")
-        val res = readTable
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-        val after = res.count()
-        require(after > 0 && after == report.keptCells && after == before,
-          s"the major reclaims bytes, never changes answers: before=$before after=$after kept=${report.keptCells}")
-        val files = segFiles(root, "q194")
-        require(files.nonEmpty && files.forall(CellSegment.isSegment),
-          "post-compact store must hold only fresh segments")
-        res
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q194_cells_major_compact" -> { (s, d) => withRoots(1) { case Seq(root) =>
+      val spec = PushTableSink.TableSpec(maxVersions = 3)
+      def seed(vLo: Int, vHi: Int) = docCells(s, d, 11, "doc_id * 8 + v",
+        "cast(md5(concat(cast(doc_id as string), '-', cast(v as string))) as binary)",
+        table = "q194", gen = explode(sequence(lit(vLo), lit(vHi))).as("v"))
+      BulkLoad.writeCells(seed(1, 2), root, BulkLoad.Config(tableSpec = spec))
+      BulkLoad.writeCells(seed(3, 3), root, BulkLoad.Config(tableSpec = spec))
+      putCells(seed(4, 5).drop("tableName"), root, "q194")
+      def readTable = readCells(s, root, "q194")
+      val before = readTable.count()
+      val physical = readCells(s, root, "q194", "changeFeed" -> "true").count()
+      require(3L * physical == 5L * before,
+        s"read-time cap serves 3 of the 5 physical versions per key: view=$before log=$physical")
+      val report = Compaction.major(s, root, "q194")
+      val res = cellStrings(readTable).localCheckpoint()
+      val after = res.count()
+      require(after > 0 && after == report.keptCells && after == before,
+        s"the major reclaims bytes, never changes answers: before=$before after=$after kept=${report.keptCells}")
+      val files = segFiles(root, "q194")
+      require(files.nonEmpty && files.forall(CellSegment.isSegment),
+        "post-compact store must hold only fresh segments")
+      res
+    }},
 
     // Backup/restore round-trip: the live table (seeded through the
     // connector write face) exports to parquet — a shard-parallel
@@ -98,42 +139,20 @@ object StoreLifecycle {
     // RESTORED store, so the driver hash pins the whole chain —
     // export fidelity, parquet round-trip, bulk rebuild, and the
     // segment read face.
-    "q195_cells_backup_restore" -> { (s, d) =>
-      val srcRoot = Files.createTempDirectory("graft-q195-src").toString
-      val bakDir = Files.createTempDirectory("graft-q195-bak").toString
-      val dstRoot = Files.createTempDirectory("graft-q195-dst").toString
-      try {
-        Tables.documents(s, d).filter(col("doc_id") % 13 === 0)
-          .select(col("doc_id"), explode(sequence(lit(1), lit(2))).as("v"))
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 4 + v").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), '~', cast(v as string))) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", srcRoot).option("table", "q195").save()
-        def readTable(root: String) = s.read.format("graft-cells")
-          .option("root", root).option("table", "q195").load()
-        // export: connector scan -> parquet backup
-        readTable(srcRoot).write.mode("overwrite").parquet(bakDir + "/q195")
-        // restore: parquet -> bulk segments in a fresh root
-        BulkLoad.writeCells(
-          s.read.parquet(bakDir + "/q195").select(lit("q195").as("tableName"),
-            col("rowkey"), col("version"), col("body")), dstRoot)
-        // materialize both sides once (r18): each exceptAll side
-        // re-evaluates its whole subtree, so the two-way check cost 4
-        // store scans (plus the returned frame a 5th) instead of 2
-        val src = readTable(srcRoot).localCheckpoint()
-        val dst = readTable(dstRoot).localCheckpoint()
-        require(src.exceptAll(dst).count() == 0 && dst.exceptAll(src).count() == 0,
-          "restored store must match the source cell-for-cell")
-        dst.select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcRoot))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(bakDir))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dstRoot))
-      }
-    },
+    "q195_cells_backup_restore" -> { (s, d) => withRoots(3) { case Seq(srcRoot, bakDir, dstRoot) =>
+      putCells(docCells(s, d, 13, "doc_id * 4 + v",
+        "cast(md5(concat(cast(doc_id as string), '~', cast(v as string))) as binary)",
+        gen = explode(sequence(lit(1), lit(2))).as("v")), srcRoot, "q195")
+      // export: connector scan -> parquet backup
+      readCells(s, srcRoot, "q195").write.mode("overwrite").parquet(bakDir + "/q195")
+      // restore: parquet -> bulk segments in a fresh root
+      BulkLoad.writeCells(
+        s.read.parquet(bakDir + "/q195").select(lit("q195").as("tableName"),
+          col("rowkey"), col("version"), col("body")), dstRoot)
+      val (_, dst) = sameBag(readCells(s, srcRoot, "q195"), readCells(s, dstRoot, "q195"),
+        "restored store must match the source cell-for-cell")
+      cellStrings(dst).localCheckpoint()
+    }},
 
     // REGION PRE-SPLIT planner: 15 balanced split keys over the binary
     // rowkey space (16 equal-mass ranges) — what an HBase operator
@@ -177,63 +196,37 @@ object StoreLifecycle {
     // The emitted result reads the RESTORED store, so the hash pins
     // watermark recording, both exports, the marker carriage, and the
     // chained rebuild.
-    "q205_cells_incremental_backup" -> { (s, d) =>
-      val srcRoot = Files.createTempDirectory("graft-q205-src").toString
-      val bakDir = Files.createTempDirectory("graft-q205-bak").toString
-      val dstRoot = Files.createTempDirectory("graft-q205-dst").toString
-      try {
-        // batch v: versions v·10⁹ + doc_id — batch 2 lands strictly
-        // above every batch-1 version, the single-writer monotonic
-        // contract the incremental guarantee documents
-        def seed(v: Int): Unit = Tables.documents(s, d).filter(col("doc_id") % 17 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr(s"$v * 1000000000 + doc_id").as("version"),
-            expr(s"cast(md5(concat(cast(doc_id as string), '+', '$v')) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", srcRoot).option("table", "q205").save()
-        def readTable(root: String) = s.read.format("graft-cells")
-          .option("root", root).option("table", "q205").load()
-        seed(1)
-        val m1 = graft.ingest.Backup.full(s, srcRoot, "q205", bakDir)
-        val batch1Max = readTable(srcRoot).agg(max(col("version"))).collect()(0).getLong(0)
-        require(m1.watermark == batch1Max,
-          s"full backup must record the observed watermark: ${m1.watermark} vs $batch1Max")
-        // the delete AFTER the full backup: masks every other key's
-        // batch-1 cell (T = its batch-1 version) — invisible to the
-        // cell exports, carried only by the tombstone sidecar
-        Tables.documents(s, d).filter(col("doc_id") % 34 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("1000000000 + doc_id").as("version"),
-            lit(Array.emptyByteArray).as("body")) // ignored by marker writes
-          .write.format("graft-cells").mode("append")
-          .option("root", srcRoot).option("table", "q205")
-          .option("tombstone", "true").save()
-        seed(2)
-        val m2 = graft.ingest.Backup.incremental(s, srcRoot, "q205", bakDir)
-        val incr = s.read.parquet(s"$bakDir/${m2.increments.last}")
-        val batch2 = readTable(srcRoot).filter(col("version") > m1.watermark)
-        require(incr.count() == batch2.count() && m2.watermark > m1.watermark,
-          "incremental export must be exactly the post-watermark slice")
-        val markers = s.read.parquet(s"$bakDir/${m2.increments.last}-tombstones")
-        val expectedDeletes = Tables.documents(s, d).filter(col("doc_id") % 34 === 0).count()
-        require(markers.count() == expectedDeletes && expectedDeletes > 0,
-          s"the increment must carry the delete-marker delta: ${markers.count()} vs $expectedDeletes")
-        graft.ingest.Backup.restore(s, bakDir, dstRoot)
-        // masked view — batch-1 cells of deleted keys hidden; both
-        // sides materialized once for the two-way check (the q195 note)
-        val src = readTable(srcRoot).localCheckpoint()
-        val dst = readTable(dstRoot).localCheckpoint()
-        require(src.exceptAll(dst).count() == 0 && dst.exceptAll(src).count() == 0,
-          "restore must reproduce the source's masked view — deletes must not resurrect")
-        dst.select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcRoot))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(bakDir))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dstRoot))
-      }
-    },
+    "q205_cells_incremental_backup" -> { (s, d) => withRoots(3) { case Seq(srcRoot, bakDir, dstRoot) =>
+      // batch v: versions v·10⁹ + doc_id — batch 2 lands strictly
+      // above every batch-1 version, the single-writer monotonic
+      // contract the incremental guarantee documents
+      def seed(v: Int): Unit = putCells(docCells(s, d, 17, s"$v * 1000000000 + doc_id",
+        s"cast(md5(concat(cast(doc_id as string), '+', '$v')) as binary)"), srcRoot, "q205")
+      seed(1)
+      val m1 = graft.ingest.Backup.full(s, srcRoot, "q205", bakDir)
+      val batch1Max = readCells(s, srcRoot, "q205").agg(max(col("version"))).collect()(0).getLong(0)
+      require(m1.watermark == batch1Max,
+        s"full backup must record the observed watermark: ${m1.watermark} vs $batch1Max")
+      // the delete AFTER the full backup: masks every other key's
+      // batch-1 cell (T = its batch-1 version) — invisible to the
+      // cell exports, carried only by the tombstone sidecar
+      putCells(docCells(s, d, 34, "1000000000 + doc_id", "X''"), srcRoot, "q205", Tombstone)
+      seed(2)
+      val m2 = graft.ingest.Backup.incremental(s, srcRoot, "q205", bakDir)
+      val incr = s.read.parquet(s"$bakDir/${m2.increments.last}")
+      val batch2 = readCells(s, srcRoot, "q205").filter(col("version") > m1.watermark)
+      require(incr.count() == batch2.count() && m2.watermark > m1.watermark,
+        "incremental export must be exactly the post-watermark slice")
+      val markers = s.read.parquet(s"$bakDir/${m2.increments.last}-tombstones")
+      val expectedDeletes = docCount(s, d, 34)
+      require(markers.count() == expectedDeletes && expectedDeletes > 0,
+        s"the increment must carry the delete-marker delta: ${markers.count()} vs $expectedDeletes")
+      graft.ingest.Backup.restore(s, bakDir, dstRoot)
+      // masked view — batch-1 cells of deleted keys hidden
+      val (_, dst) = sameBag(readCells(s, srcRoot, "q205"), readCells(s, dstRoot, "q205"),
+        "restore must reproduce the source's masked view — deletes must not resurrect")
+      cellStrings(dst).localCheckpoint()
+    }},
 
     // SPLIT-LAYOUT bulk load — the region-split answer to key skew:
     // every seeded rowkey opens with the same byte ('d' of "doc-"), so
@@ -247,33 +240,22 @@ object StoreLifecycle {
     // 1-partition point lookup, pruned range scan; the emitted result
     // reads the whole table back through the connector, so the driver
     // hash pins placement ∘ split-aware pruning ∘ segment read.
-    "q207_cells_split_bulk_load" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q207-cells").toString
-      try {
-        val points = (1 to 9).map(i => s"doc-$i".getBytes("UTF-8"))
-        val cells = Tables.documents(s, d).filter(col("doc_id") % 7 === 0)
-          .select(lit("q207").as("tableName"),
-            expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            col("doc_id").cast("long").as("version"),
-            expr("cast(md5(cast(doc_id as string)) as binary)").as("body"))
-        BulkLoad.writeCells(cells, root, BulkLoad.Config(splitPoints = points))
-        val shardDirs = segShardDirs(root, "q207")
-        require(shardDirs.size > 6,
-          s"skewed keys must spread past the one default first-byte shard: ${shardDirs.size}")
-        def readTable = s.read.format("graft-cells")
-          .option("root", root).option("table", "q207").load()
-        val point = readTable.filter(col("rowkey") === lit("doc-7".getBytes("UTF-8")))
-        require(point.rdd.getNumPartitions == 1, "a point GET must plan exactly its region")
-        val range = readTable.filter(col("rowkey") >= lit("doc-3".getBytes("UTF-8")) &&
-          col("rowkey") < lit("doc-5".getBytes("UTF-8")))
-        require(range.rdd.getNumPartitions <= 3,
-          s"a key range must plan only its region span: ${range.rdd.getNumPartitions}")
-        readTable
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q207_cells_split_bulk_load" -> { (s, d) => withRoots(1) { case Seq(root) =>
+      val cells = docCells(s, d, 7, "cast(doc_id as long)",
+        "cast(md5(cast(doc_id as string)) as binary)", table = "q207")
+      BulkLoad.writeCells(cells, root, BulkLoad.Config(splitPoints = docSplits))
+      val shardDirs = segShardDirs(root, "q207")
+      require(shardDirs.size > 6,
+        s"skewed keys must spread past the one default first-byte shard: ${shardDirs.size}")
+      def readTable = readCells(s, root, "q207")
+      val point = readTable.filter(col("rowkey") === lit("doc-7".getBytes("UTF-8")))
+      require(point.rdd.getNumPartitions == 1, "a point GET must plan exactly its region")
+      val range = readTable.filter(col("rowkey") >= lit("doc-3".getBytes("UTF-8")) &&
+        col("rowkey") < lit("doc-5".getBytes("UTF-8")))
+      require(range.rdd.getNumPartitions <= 3,
+        s"a key range must plan only its region span: ${range.rdd.getNumPartitions}")
+      cellStrings(readTable).localCheckpoint()
+    }},
 
     // COMPACTION under a concurrent writer — HBase compactions
     // tolerate live writes; so does this store's: the sweep deletes
@@ -284,33 +266,23 @@ object StoreLifecycle {
     // snapshot cells obey maxVersions=2 retention, and the emitted
     // result is the full post-compaction table — the driver hash pins
     // retention AND the no-lost-write guarantee together.
-    "q208_cells_compaction_race" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q208-cells").toString
-      try {
-        val spec = PushTableSink.TableSpec(maxVersions = 2)
-        val cells = Tables.documents(s, d).filter(col("doc_id") % 23 === 0)
-          .select(col("doc_id"), explode(sequence(lit(1), lit(3))).as("v"))
-          .select(lit("q208").as("tableName"),
-            expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 8 + v").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), '#', cast(v as string))) as binary)").as("body"))
-        BulkLoad.writeCells(cells, root, BulkLoad.Config(tableSpec = spec))
-        val racing = PushTableSink.CellPut("q208", "doc-race".getBytes("UTF-8"), 1L,
-          org.apache.commons.codec.digest.DigestUtils.md5Hex("race").getBytes("UTF-8"))
-        val report = Compaction.major(s, root, "q208",
-          beforeSweep = () => FileStore(root).putBatch("q208", Seq(racing)))
-        val res = s.read.format("graft-cells")
-          .option("root", root).option("table", "q208").load()
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-        val raceRows = res.filter(col("key_str") === "doc-race").count()
-        require(raceRows == 1, s"the racing put must survive the sweep: $raceRows")
-        require(res.count() == report.keptCells + 1,
-          "post-compaction table = retained snapshot cells + the racing cell")
-        res
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q208_cells_compaction_race" -> { (s, d) => withRoots(1) { case Seq(root) =>
+      val spec = PushTableSink.TableSpec(maxVersions = 2)
+      val cells = docCells(s, d, 23, "doc_id * 8 + v",
+        "cast(md5(concat(cast(doc_id as string), '#', cast(v as string))) as binary)",
+        table = "q208", gen = explode(sequence(lit(1), lit(3))).as("v"))
+      BulkLoad.writeCells(cells, root, BulkLoad.Config(tableSpec = spec))
+      val racing = PushTableSink.CellPut("q208", "doc-race".getBytes("UTF-8"), 1L,
+        org.apache.commons.codec.digest.DigestUtils.md5Hex("race").getBytes("UTF-8"))
+      val report = Compaction.major(s, root, "q208",
+        beforeSweep = () => FileStore(root).putBatch("q208", Seq(racing)))
+      val res = cellStrings(readCells(s, root, "q208")).localCheckpoint()
+      val raceRows = res.filter(col("key_str") === "doc-race").count()
+      require(raceRows == 1, s"the racing put must survive the sweep: $raceRows")
+      require(res.count() == report.keptCells + 1,
+        "post-compaction table = retained snapshot cells + the racing cell")
+      res
+    }},
 
     // BACKUP carries the table DESCRIPTOR, not just cells — the HBase
     // ExportSnapshot contract: a restored table that silently fell
@@ -337,49 +309,35 @@ object StoreLifecycle {
     // result is the inner joined latest-state, so the driver hash pins
     // region alignment ∘ latest-version dedup ∘ delete masking ∘ join
     // correctness.
-    "q211_cells_colocated_join" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q211-cells").toString
-      try {
-        val points = (1 to 9).map(i => s"doc-$i".getBytes("UTF-8"))
-        def seed(table: String, pred: Int, tag: String, versions: Seq[Int]): Unit =
-          BulkLoad.writeCells(
-            Tables.documents(s, d).filter(col("doc_id") % pred === 0)
-              .select(col("doc_id"), explode(lit(versions.toArray)).as("v"))
-              .select(lit(table).as("tableName"),
-                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-                expr("doc_id * 2 + v").as("version"),
-                expr(s"cast(md5(concat(cast(doc_id as string), '$tag', cast(v as string))) as binary)").as("body")),
-            root, BulkLoad.Config(splitPoints = points))
-        seed("qa", 3, "A", Seq(1, 2)) // two versions: latest (v=2) must win
-        seed("qb", 6, "B", Seq(1))
-        // delete on A masking BOTH versions (T = v2) of every 12th key:
-        // the masked path through the join must drop these keys
-        Tables.documents(s, d).filter(col("doc_id") % 12 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 2 + 2").as("version"),
-            lit(Array.emptyByteArray).as("body")) // ignored by marker writes
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "qa")
-          .option("tombstone", "true").save()
-        val joined = graft.sources.ColocatedCells.joinLatest(s, root, "qa", "qb")
-        require(!joined.queryExecution.executedPlan.toString.contains("Exchange"),
-          "co-located join must not shuffle")
-        // the outer face: A-only keys (in %3 but not %6, or delete-
-        // survivors with no B row) carry a null B side, shuffle-free too
-        val left = graft.sources.ColocatedCells.joinLatest(s, root, "qa", "qb", "left")
-        require(!left.queryExecution.executedPlan.toString.contains("Exchange"),
-          "left co-located join must not shuffle")
-        val aOnly = left.filter(col("version_b").isNull).count()
-        val aLive = left.count()
-        val inner = joined.count()
-        require(aOnly == aLive - inner && aOnly > 0,
-          s"left face must emit exactly the A-only keys: aOnly=$aOnly live=$aLive inner=$inner")
-        joined.select(col("rowkey").cast("string").as("key_str"),
-            col("version_a"), col("body_a").cast("string").as("body_a_md5"),
-            col("version_b"), col("body_b").cast("string").as("body_b_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q211_cells_colocated_join" -> { (s, d) => withRoots(1) { case Seq(root) =>
+      def seed(table: String, pred: Int, tag: String, versions: Seq[Int]): Unit =
+        BulkLoad.writeCells(docCells(s, d, pred, "doc_id * 2 + v",
+          s"cast(md5(concat(cast(doc_id as string), '$tag', cast(v as string))) as binary)",
+          table = table, gen = explode(lit(versions.toArray)).as("v")),
+          root, BulkLoad.Config(splitPoints = docSplits))
+      seed("qa", 3, "A", Seq(1, 2)) // two versions: latest (v=2) must win
+      seed("qb", 6, "B", Seq(1))
+      // delete on A masking BOTH versions (T = v2) of every 12th key:
+      // the masked path through the join must drop these keys
+      putCells(docCells(s, d, 12, "doc_id * 2 + 2", "X''"), root, "qa", Tombstone)
+      val joined = graft.sources.ColocatedCells.joinLatest(s, root, "qa", "qb")
+      require(!joined.queryExecution.executedPlan.toString.contains("Exchange"),
+        "co-located join must not shuffle")
+      // the outer face: A-only keys (in %3 but not %6, or delete-
+      // survivors with no B row) carry a null B side, shuffle-free too
+      val left = graft.sources.ColocatedCells.joinLatest(s, root, "qa", "qb", "left")
+      require(!left.queryExecution.executedPlan.toString.contains("Exchange"),
+        "left co-located join must not shuffle")
+      val aOnly = left.filter(col("version_b").isNull).count()
+      val aLive = left.count()
+      val inner = joined.count()
+      require(aOnly == aLive - inner && aOnly > 0,
+        s"left face must emit exactly the A-only keys: aOnly=$aOnly live=$aLive inner=$inner")
+      joined.select(col("rowkey").cast("string").as("key_str"),
+          col("version_a"), col("body_a").cast("string").as("body_a_md5"),
+          col("version_b"), col("body_b").cast("string").as("body_b_md5"))
+        .localCheckpoint()
+    }},
 
     // STREAM-STATIC enrichment FROM the cell store — the composition a
     // serving pipeline runs: a live event stream joins the store's
@@ -392,51 +350,42 @@ object StoreLifecycle {
     // the base tables. 100 TB: the static side is a pushdown-capable
     // scan; a selective stream filter on the join key would prune it
     // to point lookups.
-    "q221_cells_stream_enrich" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q221-cells").toString
-      val ck = Files.createTempDirectory("graft-q221-ck")
+    "q221_cells_stream_enrich" -> { (s, d) => withRoots(2) { case Seq(root, ck) =>
       val sinkName = "q221_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      try {
-        Tables.customer(s, d)
-          .select(expr("cast(concat('u-', c_custkey) as binary)").as("rowkey"),
-            col("c_custkey").cast("long").as("version"),
-            expr("cast(md5(concat(cast(c_custkey as string), 'S')) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q221").save()
-        // flush the per-cell puts into sorted segments before serving
-        // — the HBase memstore-flush posture for a table that will be
-        // SCANNED per micro-batch: without it the dimension side pays
-        // |rows| tiny-file opens per batch (measured 14.7× super-linear
-        // sf1→sf10); with it, sequential segment streams. Puts landing
-        // after the flush remain visible — the read faces merge both
-        // store-file kinds, the stream-static contract is unchanged.
-        Compaction.minor(s, root, "q221", maxInputBytes = Long.MaxValue)
-        val state = s.read.format("graft-cells")
-          .option("root", root).option("table", "q221").load()
-          .select(col("rowkey").cast("string").as("ukey"),
-            col("body").cast("string").as("state_md5"))
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val raw0 = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(d)
-        val enriched = raw0
-          .select(col("user_id").cast("long").as("user_id"),
-            Tables.tsAsMillis(raw0).as("ts_ms"), col("event_type"))
-          .join(state, concat(lit("u-"), col("user_id")) === col("ukey"))
-          .select(col("user_id"), col("ts_ms"), col("event_type"), col("state_md5"))
-        val q = enriched.writeStream
-          .format("memory").queryName(sinkName)
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val out = s.table(sinkName).localCheckpoint()
-        s.catalog.dropTempView(sinkName)
-        out
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
-      }
-    },
+      putCells(Tables.customer(s, d)
+        .select(expr("cast(concat('u-', c_custkey) as binary)").as("rowkey"),
+          col("c_custkey").cast("long").as("version"),
+          expr("cast(md5(concat(cast(c_custkey as string), 'S')) as binary)").as("body")),
+        root, "q221")
+      // flush the per-cell puts into sorted segments before serving
+      // — the HBase memstore-flush posture for a table that will be
+      // SCANNED per micro-batch: without it the dimension side pays
+      // |rows| tiny-file opens per batch (measured 14.7× super-linear
+      // sf1→sf10); with it, sequential segment streams. Puts landing
+      // after the flush remain visible — the read faces merge both
+      // store-file kinds, the stream-static contract is unchanged.
+      Compaction.minor(s, root, "q221", maxInputBytes = Long.MaxValue)
+      val state = readCells(s, root, "q221")
+        .select(col("rowkey").cast("string").as("ukey"),
+          col("body").cast("string").as("state_md5"))
+      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val raw0 = s.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet").parquet(d)
+      val enriched = raw0
+        .select(col("user_id").cast("long").as("user_id"),
+          Tables.tsAsMillis(raw0).as("ts_ms"), col("event_type"))
+        .join(state, concat(lit("u-"), col("user_id")) === col("ukey"))
+        .select(col("user_id"), col("ts_ms"), col("event_type"), col("state_md5"))
+      val q = enriched.writeStream
+        .format("memory").queryName(sinkName)
+        .option("checkpointLocation", ck)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      val out = s.table(sinkName).localCheckpoint()
+      s.catalog.dropTempView(sinkName)
+      out
+    }},
 
     // CHANGE-FEED DELETE EVENTS — the WAL/replication contract HBase
     // ships Deletes through: `option("changeFeed","true")` turns the
@@ -452,70 +401,46 @@ object StoreLifecycle {
     // their key's max delete bound) equals the masked batch view both
     // ways. The emitted result is the MV, so the driver hash pins
     // event carriage ∘ apply semantics ∘ batch-face agreement.
-    "q226_cells_change_feed_mv" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q226-cells").toString
-      val ck = Files.createTempDirectory("graft-q226-ck")
+    "q226_cells_change_feed_mv" -> { (s, d) => withRoots(2) { case Seq(root, ck) =>
       val sinkName = "q226_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      try {
-        def seed(v: Int): Unit = Tables.documents(s, d).filter(col("doc_id") % 15 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr(s"doc_id * 4 + $v").as("version"),
-            expr(s"cast(md5(concat(cast(doc_id as string), '^', '$v')) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q226").save()
-        seed(1); seed(2)
-        def readTable = s.read.format("graft-cells")
-          .option("root", root).option("table", "q226").load()
-        val putsMax = readTable.agg(max(col("version"))).collect()(0).getLong(0)
-        // delete every third seeded key at T = v2 (masks both versions)
-        Tables.documents(s, d).filter(col("doc_id") % 45 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 4 + 2").as("version"),
-            lit(Array.emptyByteArray).as("body")) // ignored by marker writes
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q226")
-          .option("tombstone", "true").save()
-        // sentinel: a delete ABOVE every put version — only delivered
-        // if markers advance the feed watermark
-        FileStore(root).deleteCells("q226",
-          Seq(("feed-sentinel".getBytes("UTF-8"), putsMax + 1000)))
-        val feed = s.readStream.format("graft-cells")
-          .option("root", root).option("table", "q226")
-          .option("changeFeed", "true").load()
-        val q = feed
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"), col("op"))
-          .writeStream.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val log = s.table(sinkName).localCheckpoint()
-        s.catalog.dropTempView(sinkName)
-        val expectedDeletes = Tables.documents(s, d).filter(col("doc_id") % 45 === 0).count()
-        val delRows = log.filter(col("op") === "delete")
-        require(delRows.count() == expectedDeletes + 1,
-          s"the feed must deliver every delete marker: ${delRows.count()} vs ${expectedDeletes + 1}")
-        require(delRows.filter(col("key_str") === "feed-sentinel").count() == 1,
-          "a marker above the put max must advance the watermark and be delivered")
-        // fold the MV: drop puts at versions <= their key's max delete bound
-        val bounds = delRows.groupBy(col("key_str")).agg(max(col("version")).as("del_v"))
-        val mv = log.filter(col("op") === "put")
-          .join(bounds, Seq("key_str"), "left")
-          .filter(col("del_v").isNull || col("version") > col("del_v"))
-          .select(col("key_str"), col("version"), col("body_md5"))
-          .localCheckpoint()
-        val masked = readTable.select(col("rowkey").cast("string").as("key_str"),
-          col("version"), col("body").cast("string").as("body_md5"))
-          .localCheckpoint() // evaluated once, compared twice (the q195 note)
-        require(mv.exceptAll(masked).count() == 0 && masked.exceptAll(mv).count() == 0,
-          "the MV folded from the change feed must equal the masked batch view")
-        mv
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
-      }
-    },
+      def seed(v: Int): Unit = putCells(docCells(s, d, 15, s"doc_id * 4 + $v",
+        s"cast(md5(concat(cast(doc_id as string), '^', '$v')) as binary)"), root, "q226")
+      seed(1); seed(2)
+      val putsMax = readCells(s, root, "q226").agg(max(col("version"))).collect()(0).getLong(0)
+      // delete every third seeded key at T = v2 (masks both versions)
+      putCells(docCells(s, d, 45, "doc_id * 4 + 2", "X''"), root, "q226", Tombstone)
+      // sentinel: a delete ABOVE every put version — only delivered
+      // if markers advance the feed watermark
+      FileStore(root).deleteCells("q226",
+        Seq(("feed-sentinel".getBytes("UTF-8"), putsMax + 1000)))
+      val feed = s.readStream.format("graft-cells")
+        .option("root", root).option("table", "q226")
+        .option("changeFeed", "true").load()
+      val q = feed
+        .select(col("rowkey").cast("string").as("key_str"), col("version"),
+          col("body").cast("string").as("body_md5"), col("op"))
+        .writeStream.format("memory").queryName(sinkName)
+        .option("checkpointLocation", ck)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      val log = s.table(sinkName).localCheckpoint()
+      s.catalog.dropTempView(sinkName)
+      val expectedDeletes = docCount(s, d, 45)
+      val delRows = log.filter(col("op") === "delete")
+      require(delRows.count() == expectedDeletes + 1,
+        s"the feed must deliver every delete marker: ${delRows.count()} vs ${expectedDeletes + 1}")
+      require(delRows.filter(col("key_str") === "feed-sentinel").count() == 1,
+        "a marker above the put max must advance the watermark and be delivered")
+      // fold the MV: drop puts at versions <= their key's max delete bound
+      val bounds = delRows.groupBy(col("key_str")).agg(max(col("version")).as("del_v"))
+      val mv = log.filter(col("op") === "put")
+        .join(bounds, Seq("key_str"), "left")
+        .filter(col("del_v").isNull || col("version") > col("del_v"))
+        .select(col("key_str"), col("version"), col("body_md5"))
+      sameBag(mv, cellStrings(readCells(s, root, "q226")),
+        "the MV folded from the change feed must equal the masked batch view")._1
+    }},
 
     // STORAGE-PARTITIONED JOIN through the CATALOG face — the q211
     // co-located join discovered by CATALYST ITSELF: the store's
@@ -532,55 +457,23 @@ object StoreLifecycle {
     // correctness. 100 TB: the SPJ declines (and shuffles, correctly)
     // exactly when layouts differ — the function's canonical name IS
     // the layout fingerprint.
-    "q228_cells_storage_partitioned_join" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q228-cells").toString
-      // catalog instances memoize per NAME in the session's
-      // CatalogManager — a per-run unique name keeps re-runs (bench
-      // passes, verify) pointing at THIS run's temp root
-      val cat = "g228_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      val prevBucketing = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      val prevPush = s.conf.getOption("spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-      val prevBroadcast = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        val points = (1 to 9).map(i => s"doc-$i".getBytes("UTF-8"))
-        def seed(table: String, pred: Int, tag: String, vOff: Int): Unit =
-          BulkLoad.writeCells(
-            Tables.documents(s, d).filter(col("doc_id") % pred === 0)
-              .select(lit(table).as("tableName"),
-                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-                expr(s"doc_id + $vOff").as("version"),
-                expr(s"cast(md5(concat(cast(doc_id as string), '$tag')) as binary)").as("body")),
-            root, BulkLoad.Config(splitPoints = points))
-        seed("spja", 14, "SA", 1)
-        seed("spjb", 28, "SB", 2)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        // broadcast would sidestep co-partitioning; force the sort-merge
-        // path the property is about (restored below — the bench shares
-        // this session across queries)
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val joined = s.table(s"$cat.spja").as("a")
-          .join(s.table(s"$cat.spjb").as("b"), col("a.rowkey") === col("b.rowkey"))
-          .select(col("a.rowkey").cast("string").as("key_str"),
-            col("a.version").as("version_a"),
-            col("a.body").cast("string").as("body_a_md5"),
-            col("b.version").as("version_b"),
-            col("b.body").cast("string").as("body_b_md5"))
+    "q228_cells_storage_partitioned_join" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      def seed(table: String, pred: Int, tag: String, vOff: Int): Unit =
+        BulkLoad.writeCells(docCells(s, d, pred, s"doc_id + $vOff",
+          s"cast(md5(concat(cast(doc_id as string), '$tag')) as binary)", table = table),
+          root, BulkLoad.Config(splitPoints = docSplits))
+      seed("spja", 14, "SA", 1)
+      seed("spjb", 28, "SB", 2)
+      // the SPJ conf is restored by withConf — the bench shares this
+      // session across queries
+      withConf(s, SpjConf: _*) {
+        val joined = abJoin(s.table(s"$cat.spja"), s.table(s"$cat.spjb"))
         val plan = joined.queryExecution.executedPlan.toString
         require(!plan.contains("Exchange"),
           s"same-layout catalog tables must storage-partition-join with no exchange:\n$plan")
         joined.localCheckpoint()
-      } finally {
-        def restore(key: String, prev: Option[String]): Unit =
-          prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
-        restore("spark.sql.sources.v2.bucketing.enabled", prevBucketing)
-        restore("spark.sql.sources.v2.bucketing.pushPartValues.enabled", prevPush)
-        restore("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       }
-    },
+    }},
 
     // SQL TIME TRAVEL through the catalog — `VERSION AS OF` as a
     // first-class snapshot read: the catalog's loadTable(ident,
@@ -591,31 +484,20 @@ object StoreLifecycle {
     // emitted result IS the snapshot, so the driver hash pins bound
     // seeding ∘ filename pruning ∘ the SQL surface. 100 TB: a
     // snapshot read costs the slice, never the table.
-    "q229_cells_sql_time_travel" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q229-cells").toString
-      val cat = "g229_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        def seed(v: Int): Unit = BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 16 === 0)
-            .select(lit("q229").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr(s"$v * 1000000000 + doc_id").as("version"),
-              expr(s"cast(md5(concat(cast(doc_id as string), 'T', '$v')) as binary)").as("body")),
-          root)
-        seed(1); seed(2)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val full = s.table(s"$cat.q229").count()
-        val snap = s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str, version,
-                     cast(body as string) AS body_md5
-              FROM $cat.q229 VERSION AS OF 1999999999""")
-          .localCheckpoint()
-        require(full == 2 * snap.count() && snap.count() > 0,
-          s"the snapshot is exactly the first batch: full=$full snap=${snap.count()}")
-        snap
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q229_cells_sql_time_travel" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      def seed(v: Int): Unit = BulkLoad.writeCells(docCells(s, d, 16, s"$v * 1000000000 + doc_id",
+        s"cast(md5(concat(cast(doc_id as string), 'T', '$v')) as binary)", table = "q229"), root)
+      seed(1); seed(2)
+      val full = s.table(s"$cat.q229").count()
+      val snap = s.sql(
+        s"""SELECT cast(rowkey as string) AS key_str, version,
+                   cast(body as string) AS body_md5
+            FROM $cat.q229 VERSION AS OF 1999999999""")
+        .localCheckpoint()
+      require(full == 2 * snap.count() && snap.count() > 0,
+        s"the snapshot is exactly the first batch: full=$full snap=${snap.count()}")
+      snap
+    }},
 
     // THE EDIT LOG IN SQL — the `$changes` metadata-table suffix
     // (Iceberg's metadata-table idiom over this store's WAL face):
@@ -627,42 +509,26 @@ object StoreLifecycle {
     // exactly what the markers cover, and the emitted result is the
     // full typed log, so the driver hash pins the op column, marker
     // versions, and unmasked carriage end to end.
-    "q230_cells_sql_changes" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q230-cells").toString
-      val cat = "g230_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        def seedPut(v: Int): Unit = Tables.documents(s, d).filter(col("doc_id") % 22 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr(s"doc_id * 4 + $v").as("version"),
-            expr(s"cast(md5(concat(cast(doc_id as string), ';', '$v')) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q230").save()
-        seedPut(1); seedPut(2)
-        Tables.documents(s, d).filter(col("doc_id") % 44 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 4 + 3").as("version"),
-            lit(Array.emptyByteArray).as("body")) // ignored by marker writes
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q230")
-          .option("tombstone", "true").save()
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val puts = Tables.documents(s, d).filter(col("doc_id") % 22 === 0).count() * 2
-        val dels = Tables.documents(s, d).filter(col("doc_id") % 44 === 0).count()
-        val log = s.sql(
-          "SELECT cast(rowkey as string) AS key_str, version, op " +
-            s"FROM $cat.`q230$$changes`")
-          .localCheckpoint()
-        require(log.count() == puts + dels && dels > 0,
-          s"the edit log reports every edit: ${log.count()} vs ${puts + dels}")
-        // the masked BASE face hides exactly the marker-covered puts
-        // (every %44 key's v1+v2 — the marker at v3 covers both)
-        val masked = s.table(s"$cat.q230").count()
-        require(masked == puts - 2 * dels,
-          s"the base table is the masked view: $masked vs ${puts - 2 * dels}")
-        log
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q230_cells_sql_changes" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      def seedPut(v: Int): Unit = putCells(docCells(s, d, 22, s"doc_id * 4 + $v",
+        s"cast(md5(concat(cast(doc_id as string), ';', '$v')) as binary)"), root, "q230")
+      seedPut(1); seedPut(2)
+      putCells(docCells(s, d, 44, "doc_id * 4 + 3", "X''"), root, "q230", Tombstone)
+      val puts = docCount(s, d, 22) * 2
+      val dels = docCount(s, d, 44)
+      val log = s.sql(
+        "SELECT cast(rowkey as string) AS key_str, version, op " +
+          s"FROM $cat.`q230$$changes`")
+        .localCheckpoint()
+      require(log.count() == puts + dels && dels > 0,
+        s"the edit log reports every edit: ${log.count()} vs ${puts + dels}")
+      // the masked BASE face hides exactly the marker-covered puts
+      // (every %44 key's v1+v2 — the marker at v3 covers both)
+      val masked = s.table(s"$cat.q230").count()
+      require(masked == puts - 2 * dels,
+        s"the base table is the masked view: $masked vs ${puts - 2 * dels}")
+      log
+    }},
 
     // SQL DELETE — the last DML face: `DELETE FROM cat.tbl WHERE
     // rowkey IN (…) [AND version <= T]` writes tombstone MARKERS
@@ -679,46 +545,29 @@ object StoreLifecycle {
     // semantics); still-unsupported shapes (ranges, non-key columns)
     // are DECLINED at canDeleteWhere so Spark fails loudly instead of
     // over-deleting.
-    "q231_cells_sql_delete" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q231-cells").toString
-      val cat = "g231_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        def seed(v: Int) = Tables.documents(s, d).filter(col("doc_id") % 26 === 0)
-          .select(lit("q231").as("tableName"),
-            expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr(s"$v * 1000000000 + doc_id").as("version"),
-            expr(s"cast(md5(concat(cast(doc_id as string), '/', '$v')) as binary)").as("body"))
-        BulkLoad.writeCells(seed(1), root)
-        BulkLoad.writeCells(seed(2), root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        def inList(pred: Int): String = Tables.documents(s, d)
-          .filter(col("doc_id") % pred === 0).select(col("doc_id").cast("long"))
-          .collect().map(_.getLong(0)).sorted
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
-        // bounded: mask batch 1 of every %52 key (marker at the bound)
-        s.sql(s"DELETE FROM $cat.q231 WHERE rowkey IN ${inList(52)} AND version <= 1999999999")
-        // bare: mask EVERYTHING of every %104 key (marker at its latest)
-        s.sql(s"DELETE FROM $cat.q231 WHERE rowkey IN ${inList(104)}")
-        val n52 = Tables.documents(s, d).filter(col("doc_id") % 52 === 0).count()
-        val n104 = Tables.documents(s, d).filter(col("doc_id") % 104 === 0).count()
-        val markers = s.sql(
-          s"SELECT cast(rowkey as string) AS k, version FROM $cat.`q231$$changes` " +
-            "WHERE op = 'delete'").collect().map(r => (r.getString(0), r.getLong(1)))
-        require(markers.length == n52 + n104 && n104 > 0,
-          s"one marker per bounded key + one per bare key: ${markers.length} vs ${n52 + n104}")
-        require(markers.count(_._2 == 1999999999L) == n52,
-          "bounded deletes stamp the statement's bound")
-        require(markers.filter(_._2 != 1999999999L).forall { case (k, v) =>
-          v == 2000000000L + k.stripPrefix("doc-").toLong },
-          "bare deletes stamp each key's current latest version")
-        s.table(s"$cat.q231")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q231_cells_sql_delete" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      def seed(v: Int) = docCells(s, d, 26, s"$v * 1000000000 + doc_id",
+        s"cast(md5(concat(cast(doc_id as string), '/', '$v')) as binary)", table = "q231")
+      BulkLoad.writeCells(seed(1), root)
+      BulkLoad.writeCells(seed(2), root)
+      // bounded: mask batch 1 of every %52 key (marker at the bound)
+      s.sql(s"DELETE FROM $cat.q231 WHERE rowkey IN ${keyList(docIds(s, d, 52))} AND version <= 1999999999")
+      // bare: mask EVERYTHING of every %104 key (marker at its latest)
+      s.sql(s"DELETE FROM $cat.q231 WHERE rowkey IN ${keyList(docIds(s, d, 104))}")
+      val n52 = docCount(s, d, 52)
+      val n104 = docCount(s, d, 104)
+      val markers = s.sql(
+        s"SELECT cast(rowkey as string) AS k, version FROM $cat.`q231$$changes` " +
+          "WHERE op = 'delete'").collect().map(r => (r.getString(0), r.getLong(1)))
+      require(markers.length == n52 + n104 && n104 > 0,
+        s"one marker per bounded key + one per bare key: ${markers.length} vs ${n52 + n104}")
+      require(markers.count(_._2 == 1999999999L) == n52,
+        "bounded deletes stamp the statement's bound")
+      require(markers.filter(_._2 != 1999999999L).forall { case (k, v) =>
+        v == 2000000000L + k.stripPrefix("doc-").toLong },
+        "bare deletes stamp each key's current latest version")
+      cellStrings(s.table(s"$cat.q231")).localCheckpoint()
+    }},
 
     // THE SERVING VIEW IN SQL — the `$latest` metadata table: every
     // SELECT against a multi-version catalog table returns ALL
@@ -732,54 +581,35 @@ object StoreLifecycle {
     // opened-file count equals the surviving key count exactly (history
     // and masked cells pruned at metadata level — the I/O shape that
     // holds when each key carries thousands of versions at 100 TB).
-    "q232_cells_sql_latest" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q232-cells").toString
-      val cat = "g232_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        // flush policy OFF (r15): the opened==winners invariant counts
-        // PER-CELL put opens — a flushed segment opens once for all
-        graft.ingest.FileStore(root).ensureTable("q232",
-          PushTableSink.TableSpec(compactionThreshold = 0))
-        def seed(v: Int): Unit = Tables.documents(s, d).filter(col("doc_id") % 18 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr(s"doc_id * 4 + $v").as("version"),
-            expr(s"cast(md5(concat(cast(doc_id as string), '~', '$v')) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q232").save()
-        seed(1); seed(2)
-        // every third seeded key vanishes entirely (marker above both)
-        Tables.documents(s, d).filter(col("doc_id") % 54 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 4 + 2").as("version"),
-            lit(Array.emptyByteArray).as("body")) // ignored by marker writes
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q232")
-          .option("tombstone", "true").save()
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        graft.sources.CellsSource.filesOpened.set(0)
-        val latest = s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str, version,
-                     cast(body as string) AS body_md5
-              FROM $cat.`q232$$latest`""").localCheckpoint()
-        val opened = graft.sources.CellsSource.filesOpened.get()
-        val expectKeys = Tables.documents(s, d)
-          .filter(col("doc_id") % 18 === 0 && col("doc_id") % 54 =!= 0).count()
-        require(latest.count() == expectKeys,
-          s"one row per surviving key: ${latest.count()} vs $expectKeys")
-        require(opened == expectKeys,
-          s"the latest fold opens ONLY winners ($expectKeys), never history: $opened")
-        // ≡ the base face's max_by fold, both ways
-        val folded = s.table(s"$cat.q232").groupBy(col("rowkey"))
-          .agg(max_by(struct(col("version"), col("body")), col("version")).as("m"))
-          .select(col("rowkey").cast("string").as("key_str"),
-            col("m.version").as("version"), col("m.body").cast("string").as("body_md5"))
-          .localCheckpoint() // evaluated once, compared twice (the q195 note)
-        require(latest.exceptAll(folded).count() == 0 && folded.exceptAll(latest).count() == 0,
-          "tbl$latest must equal the base-face max_by fold")
-        latest
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q232_cells_sql_latest" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      // flush policy OFF (r15): the opened==winners invariant counts
+      // PER-CELL put opens — a flushed segment opens once for all
+      graft.ingest.FileStore(root).ensureTable("q232",
+        PushTableSink.TableSpec(compactionThreshold = 0))
+      def seed(v: Int): Unit = putCells(docCells(s, d, 18, s"doc_id * 4 + $v",
+        s"cast(md5(concat(cast(doc_id as string), '~', '$v')) as binary)"), root, "q232")
+      seed(1); seed(2)
+      // every third seeded key vanishes entirely (marker above both)
+      putCells(docCells(s, d, 54, "doc_id * 4 + 2", "X''"), root, "q232", Tombstone)
+      graft.sources.CellsSource.filesOpened.set(0)
+      val latest = s.sql(
+        s"""SELECT cast(rowkey as string) AS key_str, version,
+                   cast(body as string) AS body_md5
+            FROM $cat.`q232$$latest`""").localCheckpoint()
+      val opened = graft.sources.CellsSource.filesOpened.get()
+      val expectKeys = Tables.documents(s, d)
+        .filter(col("doc_id") % 18 === 0 && col("doc_id") % 54 =!= 0).count()
+      require(latest.count() == expectKeys,
+        s"one row per surviving key: ${latest.count()} vs $expectKeys")
+      require(opened == expectKeys,
+        s"the latest fold opens ONLY winners ($expectKeys), never history: $opened")
+      // ≡ the base face's max_by fold, both ways
+      val folded = s.table(s"$cat.q232").groupBy(col("rowkey"))
+        .agg(max_by(struct(col("version"), col("body")), col("version")).as("m"))
+        .select(col("rowkey").cast("string").as("key_str"),
+          col("m.version").as("version"), col("m.body").cast("string").as("body_md5"))
+      sameBag(latest, folded, "tbl$latest must equal the base-face max_by fold")._1
+    }},
 
     // CURRENT-STATE JOIN, CATALYST-PLANNED, ZERO-EXCHANGE — `a$latest
     // JOIN b$latest`: the q228 storage-partitioned join lifted to the
@@ -791,54 +621,26 @@ object StoreLifecycle {
     // carries NO Exchange on either side. At 100 TB this is the join a
     // serving user actually writes — current state against current
     // state, region-by-region where the data lives.
-    "q233_cells_latest_spj_join" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q233-cells").toString
-      val cat = "g233_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      val prevBucketing = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      val prevPush = s.conf.getOption("spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-      val prevBroadcast = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        val points = (1 to 9).map(i => s"doc-$i".getBytes("UTF-8"))
-        def seed(table: String, pred: Int, tag: String, vOff: Int): Unit =
-          BulkLoad.writeCells(
-            Tables.documents(s, d).filter(col("doc_id") % pred === 0)
-              .select(col("doc_id"), explode(array(lit(0), lit(1))).as("g"))
-              .select(lit(table).as("tableName"),
-                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-                expr(s"doc_id * 4 + $vOff + g").as("version"),
-                expr(s"cast(md5(concat(cast(doc_id as string), '$tag', cast(g as string))) as binary)").as("body")),
-            root, BulkLoad.Config(splitPoints = points))
-        seed("lspja", 16, "LA", 1) // versions *4+1, *4+2 — latest body tag LA1
-        seed("lspjb", 32, "LB", 5) // versions *4+5, *4+6 — latest body tag LB1
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val joined = s.table(s"$cat.`lspja$$latest`").as("a")
-          .join(s.table(s"$cat.`lspjb$$latest`").as("b"), col("a.rowkey") === col("b.rowkey"))
-          .select(col("a.rowkey").cast("string").as("key_str"),
-            col("a.version").as("version_a"),
-            col("a.body").cast("string").as("body_a_md5"),
-            col("b.version").as("version_b"),
-            col("b.body").cast("string").as("body_b_md5"))
+    "q233_cells_latest_spj_join" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      def seed(table: String, pred: Int, tag: String, vOff: Int): Unit =
+        BulkLoad.writeCells(docCells(s, d, pred, s"doc_id * 4 + $vOff + g",
+          s"cast(md5(concat(cast(doc_id as string), '$tag', cast(g as string))) as binary)",
+          table = table, gen = explode(array(lit(0), lit(1))).as("g")),
+          root, BulkLoad.Config(splitPoints = docSplits))
+      seed("lspja", 16, "LA", 1) // versions *4+1, *4+2 — latest body tag LA1
+      seed("lspjb", 32, "LB", 5) // versions *4+5, *4+6 — latest body tag LB1
+      withConf(s, SpjConf: _*) {
+        val joined = abJoin(s.table(s"$cat.`lspja$$latest`"), s.table(s"$cat.`lspjb$$latest`"))
         val plan = joined.queryExecution.executedPlan.toString
         require(!plan.contains("Exchange"),
           s"same-layout $$latest faces must storage-partition-join with no exchange:\n$plan")
         val out = joined.localCheckpoint()
-        val bKeys = Tables.documents(s, d).filter(col("doc_id") % 32 === 0).count()
+        val bKeys = docCount(s, d, 32)
         require(out.count() == bKeys,
           s"one row per co-populated key (fold BEFORE join, no cross-product): ${out.count()} vs $bKeys")
         out
-      } finally {
-        def restore(key: String, prev: Option[String]): Unit =
-          prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
-        restore("spark.sql.sources.v2.bucketing.enabled", prevBucketing)
-        restore("spark.sql.sources.v2.bucketing.pushPartValues.enabled", prevPush)
-        restore("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       }
-    },
+    }},
 
     // SQL MERGE INTO — the DML face of the q73 upsert: DSv2 row-level
     // operations ([[graft.sources.CellsRowLevelOperation]], delta /
@@ -864,80 +666,65 @@ object StoreLifecycle {
     // two-sidedly. Above the key cap the pre-pass declines loudly to
     // the honest region-parallel scan. Writes are per-task batched
     // idempotent renames, no coordinator.
-    "q234_cells_sql_merge" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q234-cells").toString
-      val cat = "g234_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        // target: %24 keys at v1 ('O' bodies)
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 24 === 0)
-            .select(lit("q234").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("doc_id * 4 + 1").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'O')) as binary)").as("body")),
-          root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        graft.sources.MergeSourcePruning.install(s)
-        graft.sources.CellsSource.filesOpened.set(0)
-        graft.sources.CellsSource.runtimeFilteredKeys.set(0)
-        // source: %16 keys at v2 ('N' bodies); %96 keys are deletions
-        s.sql(
-          s"""MERGE INTO $cat.q234 t
-              USING (SELECT cast(concat('doc-', doc_id) as binary) AS rowkey,
-                            cast(doc_id * 4 + 2 as bigint) AS version,
-                            cast(md5(concat(cast(doc_id as string), 'N')) as binary) AS body,
-                            doc_id % 96 = 0 AS del
-                     FROM parquet.`$d/documents.parquet`
-                     WHERE doc_id % 16 = 0) s
-              ON t.rowkey = s.rowkey
-              WHEN MATCHED AND s.del THEN DELETE
-              WHEN MATCHED THEN UPDATE SET version = s.version, body = s.body
-              WHEN NOT MATCHED AND NOT s.del THEN
-                INSERT (rowkey, version, body) VALUES (s.rowkey, s.version, s.body)""")
-        // the I/O shape, captured BEFORE any further read touches the
-        // counters: the pre-pass delivered the source's keys to the
-        // scan, and the scan opened exactly the MATCHED cells (%48 —
-        // target %24 ∩ source %16), not the whole target
-        val mergeOpens = graft.sources.CellsSource.filesOpened.get()
-        val mergeNarrowedKeys = graft.sources.CellsSource.runtimeFilteredKeys.get()
-        val merged = s.table(s"$cat.q234")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-        // ≡ the q73 union+argmax upsert over the same logical inputs
-        val docs = Tables.documents(s, d)
-        val target0 = docs.filter(col("doc_id") % 24 === 0)
-          .select(expr("concat('doc-', doc_id)").as("key_str"),
-            expr("cast(doc_id * 4 + 1 as bigint)").as("version"),
-            expr("md5(concat(cast(doc_id as string), 'O'))").as("body_md5"))
-        val source0 = docs.filter(col("doc_id") % 16 === 0)
-          .select(expr("concat('doc-', doc_id)").as("key_str"),
-            expr("cast(doc_id * 4 + 2 as bigint)").as("version"),
-            expr("md5(concat(cast(doc_id as string), 'N'))").as("body_md5"),
-            (col("doc_id") % 96 === 0).as("del"))
-        val upsert = target0.withColumn("del", lit(false)).unionByName(source0)
-          .groupBy(col("key_str"))
-          .agg(max_by(struct(col("version"), col("body_md5"), col("del")), col("version")).as("m"))
-          .filter(!col("m.del"))
-          .select(col("key_str"), col("m.version").as("version"), col("m.body_md5").as("body_md5"))
-        require(merged.exceptAll(upsert).count() == 0 && upsert.exceptAll(merged).count() == 0,
-          "MERGE must equal the union+argmax upsert (the q73 operator) both ways")
-        // marker physics: exactly one EXACT marker per replaced/deleted
-        // old cell (every matched %48 key's v1), no bound markers
-        val n48 = docs.filter(col("doc_id") % 48 === 0).count()
-        val markers = s.sql(s"SELECT version, op FROM $cat.`q234$$changes` WHERE op != 'put'")
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-        require(markers.length == n48 && markers.forall(_._2 == "delete_version"),
-          s"one exact marker per replaced cell, never a bound: ${markers.length} vs $n48")
-        val n16 = docs.filter(col("doc_id") % 16 === 0).count()
-        require(mergeNarrowedKeys == n16,
-          s"the source-key pre-pass must reach the target scan: $mergeNarrowedKeys vs $n16 source keys")
-        require(mergeOpens == n48,
-          s"a narrowed MERGE opens exactly the matched cells (two-sided): $mergeOpens vs $n48")
-        merged
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q234_cells_sql_merge" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      // target: %24 keys at v1 ('O' bodies)
+      BulkLoad.writeCells(docCells(s, d, 24, "doc_id * 4 + 1",
+        "cast(md5(concat(cast(doc_id as string), 'O')) as binary)", table = "q234"), root)
+      graft.sources.MergeSourcePruning.install(s)
+      graft.sources.CellsSource.filesOpened.set(0)
+      graft.sources.CellsSource.runtimeFilteredKeys.set(0)
+      // source: %16 keys at v2 ('N' bodies); %96 keys are deletions
+      s.sql(
+        s"""MERGE INTO $cat.q234 t
+            USING (SELECT cast(concat('doc-', doc_id) as binary) AS rowkey,
+                          cast(doc_id * 4 + 2 as bigint) AS version,
+                          cast(md5(concat(cast(doc_id as string), 'N')) as binary) AS body,
+                          doc_id % 96 = 0 AS del
+                   FROM parquet.`$d/documents.parquet`
+                   WHERE doc_id % 16 = 0) s
+            ON t.rowkey = s.rowkey
+            WHEN MATCHED AND s.del THEN DELETE
+            WHEN MATCHED THEN UPDATE SET version = s.version, body = s.body
+            WHEN NOT MATCHED AND NOT s.del THEN
+              INSERT (rowkey, version, body) VALUES (s.rowkey, s.version, s.body)""")
+      // the I/O shape, captured BEFORE any further read touches the
+      // counters: the pre-pass delivered the source's keys to the
+      // scan, and the scan opened exactly the MATCHED cells (%48 —
+      // target %24 ∩ source %16), not the whole target
+      val mergeOpens = graft.sources.CellsSource.filesOpened.get()
+      val mergeNarrowedKeys = graft.sources.CellsSource.runtimeFilteredKeys.get()
+      val merged = cellStrings(s.table(s"$cat.q234")).localCheckpoint()
+      // ≡ the q73 union+argmax upsert over the same logical inputs
+      val docs = Tables.documents(s, d)
+      val target0 = docs.filter(col("doc_id") % 24 === 0)
+        .select(expr("concat('doc-', doc_id)").as("key_str"),
+          expr("cast(doc_id * 4 + 1 as bigint)").as("version"),
+          expr("md5(concat(cast(doc_id as string), 'O'))").as("body_md5"))
+      val source0 = docs.filter(col("doc_id") % 16 === 0)
+        .select(expr("concat('doc-', doc_id)").as("key_str"),
+          expr("cast(doc_id * 4 + 2 as bigint)").as("version"),
+          expr("md5(concat(cast(doc_id as string), 'N'))").as("body_md5"),
+          (col("doc_id") % 96 === 0).as("del"))
+      val upsert = target0.withColumn("del", lit(false)).unionByName(source0)
+        .groupBy(col("key_str"))
+        .agg(max_by(struct(col("version"), col("body_md5"), col("del")), col("version")).as("m"))
+        .filter(!col("m.del"))
+        .select(col("key_str"), col("m.version").as("version"), col("m.body_md5").as("body_md5"))
+      sameBag(merged, upsert, "MERGE must equal the union+argmax upsert (the q73 operator) both ways")
+      // marker physics: exactly one EXACT marker per replaced/deleted
+      // old cell (every matched %48 key's v1), no bound markers
+      val n48 = docCount(s, d, 48)
+      val markers = s.sql(s"SELECT version, op FROM $cat.`q234$$changes` WHERE op != 'put'")
+        .collect().map(r => (r.getLong(0), r.getString(1)))
+      require(markers.length == n48 && markers.forall(_._2 == "delete_version"),
+        s"one exact marker per replaced cell, never a bound: ${markers.length} vs $n48")
+      val n16 = docCount(s, d, 16)
+      require(mergeNarrowedKeys == n16,
+        s"the source-key pre-pass must reach the target scan: $mergeNarrowedKeys vs $n16 source keys")
+      require(mergeOpens == n48,
+        s"a narrowed MERGE opens exactly the matched cells (two-sided): $mergeOpens vs $n48")
+      merged
+    }},
 
     // SQL UPDATE — both physical shapes of the row-level operation in
     // one gate: an IN-PLACE update (body rewritten, coordinate kept)
@@ -949,40 +736,28 @@ object StoreLifecycle {
     // emitted result is the full post-update table; the driver hash
     // pins predicate routing ∘ in-place-vs-move discrimination ∘
     // marker physics. 100 TB: same scan/write posture as q234.
-    "q235_cells_sql_update" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q235-cells").toString
-      val cat = "g235_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        def seed(v: Int) = Tables.documents(s, d).filter(col("doc_id") % 20 === 0)
-          .select(lit("q235").as("tableName"),
-            expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr(s"doc_id * 4 + $v").as("version"),
-            expr(s"cast(md5(concat(cast(doc_id as string), 'W', '$v')) as binary)").as("body"))
-        BulkLoad.writeCells(seed(1), root)
-        BulkLoad.writeCells(seed(2), root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val n20 = Tables.documents(s, d).filter(col("doc_id") % 20 === 0).count()
-        // IN-PLACE: rewrite every v1 body, coordinates unchanged
-        s.sql(s"UPDATE $cat.q235 SET body = cast(md5(concat(cast(rowkey as string), 'P')) as binary) " +
-          "WHERE version % 4 = 1")
-        require(s.sql(s"SELECT count(*) FROM $cat.`q235$$changes` WHERE op != 'put'")
-          .collect()(0).getLong(0) == 0,
-          "in-place updates are overwrite puts — no markers may land")
-        // MOVE: shift every v2 cell up; old coordinates exact-deleted
-        s.sql(s"UPDATE $cat.q235 SET version = version + 1000000000 WHERE version % 4 = 2")
-        val moveMarkers = s.sql(
-          s"SELECT count(*) FROM $cat.`q235$$changes` WHERE op = 'delete_version'")
-          .collect()(0).getLong(0)
-        require(moveMarkers == n20, s"one exact marker per moved cell: $moveMarkers vs $n20")
-        val out = s.table(s"$cat.q235")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-        require(out.count() == 2 * n20, "updates never change the cell count")
-        out
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q235_cells_sql_update" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      def seed(v: Int) = docCells(s, d, 20, s"doc_id * 4 + $v",
+        s"cast(md5(concat(cast(doc_id as string), 'W', '$v')) as binary)", table = "q235")
+      BulkLoad.writeCells(seed(1), root)
+      BulkLoad.writeCells(seed(2), root)
+      val n20 = docCount(s, d, 20)
+      // IN-PLACE: rewrite every v1 body, coordinates unchanged
+      s.sql(s"UPDATE $cat.q235 SET body = cast(md5(concat(cast(rowkey as string), 'P')) as binary) " +
+        "WHERE version % 4 = 1")
+      require(s.sql(s"SELECT count(*) FROM $cat.`q235$$changes` WHERE op != 'put'")
+        .collect()(0).getLong(0) == 0,
+        "in-place updates are overwrite puts — no markers may land")
+      // MOVE: shift every v2 cell up; old coordinates exact-deleted
+      s.sql(s"UPDATE $cat.q235 SET version = version + 1000000000 WHERE version % 4 = 2")
+      val moveMarkers = s.sql(
+        s"SELECT count(*) FROM $cat.`q235$$changes` WHERE op = 'delete_version'")
+        .collect()(0).getLong(0)
+      require(moveMarkers == n20, s"one exact marker per moved cell: $moveMarkers vs $n20")
+      val out = cellStrings(s.table(s"$cat.q235")).localCheckpoint()
+      require(out.count() == 2 * n20, "updates never change the cell count")
+      out
+    }},
 
     // ALTER TABLE RETENTION — the HBase `alter 'maxVersions'` lifecycle
     // as SQL DDL, with the r15 READ-TIME contract (HBase StoreScanner:
@@ -998,45 +773,32 @@ object StoreLifecycle {
     // the major's report shows it rewrote exactly the masked view. The
     // emitted result is the post-major table; the driver hash pins DDL
     // routing ∘ read-time masking ∘ the major's byte reclaim.
-    "q236_cells_sql_alter_retention" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q236-cells").toString
-      val cat = "g236_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q236 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('maxVersions'='5')")
-        // fixture seeding rides the bulk path (the 8.6× heavy-ingest
-        // face; the recorded maxVersions=5 DDL is write-once and
-        // survives) — the gate measures ALTER + retention, not the
-        // put path
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 21 === 0)
-            .select(col("doc_id"), explode(array(lit(1), lit(2), lit(3))).as("g"))
-            .select(lit("q236").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("doc_id * 4 + g").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), '|', cast(g as string))) as binary)").as("body")),
-          root)
-        val n21 = Tables.documents(s, d).filter(col("doc_id") % 21 === 0).count()
-        require(s.table(s"$cat.q236").count() == 3 * n21,
-          "under the cap of 5 all three generations serve")
-        s.sql(s"ALTER TABLE $cat.q236 SET TBLPROPERTIES('maxVersions' = '1')")
-        def view() = s.table(s"$cat.q236")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-        val before = view().collect().map(_.toString).sorted.toSeq
-        require(before.size == n21,
-          "the altered cap masks over-cap versions on the very next read")
-        require(s.table(s"$cat.`q236$$changes`").count() == 3 * n21,
-          "the hidden generations are still physically present (edit log never masks)")
-        Compaction.major(s, root, "q236")
-        val out = view().localCheckpoint()
-        require(out.collect().map(_.toString).sorted.toSeq == before,
-          "the major reclaims bytes, never changes answers — view identical across it")
-        out
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q236_cells_sql_alter_retention" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      s.sql(s"CREATE TABLE $cat.q236 (rowkey BINARY, version BIGINT, body BINARY) " +
+        "TBLPROPERTIES('maxVersions'='5')")
+      // fixture seeding rides the bulk path (the 8.6× heavy-ingest
+      // face; the recorded maxVersions=5 DDL is write-once and
+      // survives) — the gate measures ALTER + retention, not the
+      // put path
+      BulkLoad.writeCells(docCells(s, d, 21, "doc_id * 4 + g",
+        "cast(md5(concat(cast(doc_id as string), '|', cast(g as string))) as binary)",
+        table = "q236", gen = explode(array(lit(1), lit(2), lit(3))).as("g")), root)
+      val n21 = docCount(s, d, 21)
+      require(s.table(s"$cat.q236").count() == 3 * n21,
+        "under the cap of 5 all three generations serve")
+      s.sql(s"ALTER TABLE $cat.q236 SET TBLPROPERTIES('maxVersions' = '1')")
+      def view() = cellStrings(s.table(s"$cat.q236"))
+      val before = view().collect().map(_.toString).sorted.toSeq
+      require(before.size == n21,
+        "the altered cap masks over-cap versions on the very next read")
+      require(s.table(s"$cat.`q236$$changes`").count() == 3 * n21,
+        "the hidden generations are still physically present (edit log never masks)")
+      Compaction.major(s, root, "q236")
+      val out = view().localCheckpoint()
+      require(out.collect().map(_.toString).sorted.toSeq == before,
+        "the major reclaims bytes, never changes answers — view identical across it")
+      out
+    }},
 
     // CDC THROUGH PURE SQL SURFACE — `spark.readStream.table(
     // "cat.tbl$changes")`: the change feed consumed with a TABLE NAME,
@@ -1048,14 +810,9 @@ object StoreLifecycle {
     // typed marker row. The emitted result is everything both drains
     // delivered; the driver hash pins catalog stream resolution ∘
     // window replay ∘ marker typing.
-    "q237_cells_catalog_stream" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q237-cells").toString
-      val ck = Files.createTempDirectory("graft-q237-ck").toString
-      val out = Files.createTempDirectory("graft-q237-out").toString + "/rows"
-      val cat = "g237_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    "q237_cells_catalog_stream" -> { (s, d) => withRoots(3) { case Seq(root, ck, outDir) =>
+      val out = outDir + "/rows"
+      withCatalog(s, root) { cat =>
         // generation DOMINATES the version (v*1e9 + id): the feed's
         // offset is a global version watermark, so a second generation
         // must land strictly above the first window's max everywhere —
@@ -1065,13 +822,9 @@ object StoreLifecycle {
         // feed's watermark reads segment trailers exactly like put
         // filenames, and this gate measures the catalog stream, not
         // the put path
-        def seed(pred: Int, v: Int): Unit = BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % pred === 0)
-            .select(lit("q237").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr(s"$v * 1000000000 + doc_id").as("version"),
-              expr(s"cast(md5(concat(cast(doc_id as string), '>', '$v')) as binary)").as("body")),
-          root)
+        def seed(pred: Int, v: Int): Unit = BulkLoad.writeCells(docCells(s, d, pred,
+          s"$v * 1000000000 + doc_id", s"cast(md5(concat(cast(doc_id as string), '>', '$v')) as binary)",
+          table = "q237"), root)
         def drain(): Unit = {
           val q = s.readStream.table(s"$cat.`q237$$changes`")
             .select(col("rowkey").cast("string").as("key_str"), col("version"),
@@ -1080,24 +833,20 @@ object StoreLifecycle {
             .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
               df.write.mode("append").parquet(out)
             }
-            .option("checkpointLocation", ck.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
             .start()
           q.awaitTermination()
         }
         seed(17, 1)
         drain()
-        val n17 = Tables.documents(s, d).filter(col("doc_id") % 17 === 0).count()
+        val n17 = docCount(s, d, 17)
         require(s.read.parquet(out).count() == n17, "first drain = the seed window")
         // between drains: a second put generation and a SQL DELETE of
         // every third seeded key (marker above both versions)
         seed(17, 2)
-        val delKeys = Tables.documents(s, d).filter(col("doc_id") % 51 === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-        val inList = delKeys
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
-        s.sql(s"DELETE FROM $cat.q237 WHERE rowkey IN $inList") // bare: stamps latest (v2)
+        val delKeys = docIds(s, d, 51)
+        s.sql(s"DELETE FROM $cat.q237 WHERE rowkey IN ${keyList(delKeys)}") // bare: stamps latest (v2)
         drain()
         val log = s.read.parquet(out).localCheckpoint()
         require(log.count() == 2 * n17 + delKeys.length,
@@ -1105,13 +854,8 @@ object StoreLifecycle {
         require(log.filter(col("op") === "delete").count() == delKeys.length,
           "markers arrive typed through the catalog stream")
         log
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(out).getParentFile)
       }
-    },
+    }},
 
     // CDC REPLICATION — the HBase cross-cluster replication consumer
     // composed ENTIRELY from this round's SQL surface: stream the
@@ -1131,24 +875,14 @@ object StoreLifecycle {
     // edits (never the table), MERGE probes the replica's regions via
     // runtime filtering, and every apply is idempotent renames — a
     // crashed consumer replays its window into the same state.
-    "q238_cells_cdc_replication" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q238-cells").toString
-      val ck = Files.createTempDirectory("graft-q238-ck").toString
-      val cat = "g238_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    "q238_cells_cdc_replication" -> { (s, d) => withRoots(2) { case Seq(root, ck) =>
+      withCatalog(s, root) { cat =>
         s.sql(s"CREATE TABLE $cat.q238r (rowkey BINARY, version BIGINT, body BINARY)")
         // source generations land as bulk loads (fixture hygiene — the
         // gate measures the replication loop, not the put path); the
         // feed ships segment-resident edits identically
-        def seed(v: Int): Unit = BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 19 === 0)
-            .select(lit("q238s").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr(s"$v * 1000000000 + doc_id").as("version"),
-              expr(s"cast(md5(concat(cast(doc_id as string), '*', '$v')) as binary)").as("body")),
-          root)
+        def seed(v: Int): Unit = BulkLoad.writeCells(docCells(s, d, 19, s"$v * 1000000000 + doc_id",
+          s"cast(md5(concat(cast(doc_id as string), '*', '$v')) as binary)", table = "q238s"), root)
         def drain(): Unit = {
           val q = s.readStream.table(s"$cat.`q238s$$changes`")
             .writeStream
@@ -1172,44 +906,29 @@ object StoreLifecycle {
               Seq(("delete", "false"), ("delete_version", "true")).foreach { case (op, exact) =>
                 val dels = batch.filter(col("op") === op).select("rowkey", "version")
                   .withColumn("body", lit(Array.emptyByteArray))
-                if (!dels.isEmpty)
-                  dels.write.format("graft-cells").mode("append")
-                    .option("root", root).option("table", "q238r")
-                    .option("tombstone", "true").option("tombstoneExact", exact).save()
+                if (!dels.isEmpty) putCells(dels, root, "q238r", Tombstone, "tombstoneExact" -> exact)
               }
             }
             .option("checkpointLocation", ck)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .trigger(Trigger.AvailableNow())
             .start()
           q.awaitTermination()
         }
         seed(1)
         drain()
-        val n19 = Tables.documents(s, d).filter(col("doc_id") % 19 === 0).count()
+        val n19 = docCount(s, d, 19)
         require(s.table(s"$cat.q238r").count() == n19,
           "after the first drain the replica carries exactly the seed window")
         // between drains: a second generation and a bare SQL DELETE of
         // every third seeded key (stamps its latest — masks everything)
         seed(2)
-        val inList = Tables.documents(s, d).filter(col("doc_id") % 57 === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
-        s.sql(s"DELETE FROM $cat.q238s WHERE rowkey IN $inList")
+        s.sql(s"DELETE FROM $cat.q238s WHERE rowkey IN ${keyList(docIds(s, d, 57))}")
         drain()
-        def view(t: String) = s.table(s"$cat.$t")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-        val src = view("q238s").localCheckpoint() // the q195 note
-        val rep = view("q238r").localCheckpoint()
-        require(rep.exceptAll(src).count() == 0 && src.exceptAll(rep).count() == 0,
-          "the replica's masked view must equal the source's — the replication contract")
-        rep
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
+        def view(t: String) = cellStrings(s.table(s"$cat.$t"))
+        sameBag(view("q238s"), view("q238r"),
+          "the replica's masked view must equal the source's — the replication contract")._2
       }
-    },
+    }},
 
     // INSERT OVERWRITE — the HBase `truncate_preserve` + load lifecycle
     // as one SQL statement (DSv2 SupportsTruncate): every cell, segment
@@ -1221,51 +940,29 @@ object StoreLifecycle {
     // shows zero markers, and the row count is exactly the new
     // generation. The emitted result is the overwritten table; the
     // driver hash pins truncate ∘ reload ∘ marker clearance.
-    "q239_cells_sql_insert_overwrite" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q239-cells").toString
-      val cat = "g239_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q239 (rowkey BINARY, version BIGINT, body BINARY)")
-        s.sql(
-          s"""INSERT INTO $cat.q239
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast(doc_id * 4 + 2 as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'OLD')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % 22 = 0""")
-        // bare-delete every second seeded key: markers at *4+2
-        val inList = Tables.documents(s, d).filter(col("doc_id") % 44 === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
-        s.sql(s"DELETE FROM $cat.q239 WHERE rowkey IN $inList")
-        // overwrite with a generation at versions BELOW the old marker
-        // bounds: only a real truncate (markers included) makes the
-        // %132 keys (44∩33) visible
-        s.sql(
-          s"""INSERT OVERWRITE $cat.q239
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast(doc_id * 4 + 1 as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'NEW')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % 33 = 0""")
-        val n33 = Tables.documents(s, d).filter(col("doc_id") % 33 === 0).count()
-        val out = s.table(s"$cat.q239")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-        require(out.count() == n33, s"exactly the new generation: ${out.count()} vs $n33")
-        val overlap = Tables.documents(s, d).filter(col("doc_id") % 132 === 0).count()
-        require(overlap > 0 && out.filter(col("key_str").isin(
-          Tables.documents(s, d).filter(col("doc_id") % 132 === 0)
-            .select(expr("concat('doc-', doc_id)")).collect().map(_.getString(0)).toSeq: _*))
-          .count() == overlap,
-          "keys the old markers covered are visible below the old bounds — markers cleared")
-        require(s.sql(s"SELECT count(*) FROM $cat.`q239$$changes` WHERE op != 'put'")
-          .collect()(0).getLong(0) == 0, "no marker survives an overwrite")
-        out
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q239_cells_sql_insert_overwrite" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      s.sql(s"CREATE TABLE $cat.q239 (rowkey BINARY, version BIGINT, body BINARY)")
+      insertDocs(s, d, s"$cat.q239", 22, "cast(doc_id * 4 + 2 as bigint)", "'OLD'")
+      // bare-delete every second seeded key: markers at *4+2
+      s.sql(s"DELETE FROM $cat.q239 WHERE rowkey IN ${keyList(docIds(s, d, 44))}")
+      // overwrite with a generation at versions BELOW the old marker
+      // bounds: only a real truncate (markers included) makes the
+      // %132 keys (44∩33) visible
+      insertDocs(s, d, s"$cat.q239", 33, "cast(doc_id * 4 + 1 as bigint)", "'NEW'",
+        verb = "INSERT OVERWRITE")
+      val n33 = docCount(s, d, 33)
+      val out = cellStrings(s.table(s"$cat.q239")).localCheckpoint()
+      require(out.count() == n33, s"exactly the new generation: ${out.count()} vs $n33")
+      val overlap = docCount(s, d, 132)
+      require(overlap > 0 && out.filter(col("key_str").isin(
+        Tables.documents(s, d).filter(col("doc_id") % 132 === 0)
+          .select(expr("concat('doc-', doc_id)")).collect().map(_.getString(0)).toSeq: _*))
+        .count() == overlap,
+        "keys the old markers covered are visible below the old bounds — markers cleared")
+      require(s.sql(s"SELECT count(*) FROM $cat.`q239$$changes` WHERE op != 'put'")
+        .collect()(0).getLong(0) == 0, "no marker survives an overwrite")
+      out
+    }},
 
     // TTL AS DDL — HBase's column-family TTL: the expiry lives in the
     // table descriptor (`TBLPROPERTIES('ttlMillis'=T)`, CREATE or
@@ -1278,45 +975,32 @@ object StoreLifecycle {
     // their newest, and SHOW TBLPROPERTIES reflects the ALTER. The
     // emitted result is the post-major table; the driver hash pins
     // descriptor carriage ∘ cutoff derivation ∘ the GC.
-    "q240_cells_sql_ttl_ddl" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q240-cells").toString
-      val cat = "g240_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q240 (rowkey BINARY, version BIGINT, body BINARY)")
-        // versions are epoch-millis-like stamps: an OLD generation for
-        // every %13 key, a RECENT one for every %26 key — so %13∧¬%26
-        // keys hold ONLY expired versions (the minVersions=1 case)
-        def seed(pred: Int, base: Long, tag: String): Unit =
-          s.sql(s"""INSERT INTO $cat.q240
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($base + doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), '$tag')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % $pred = 0""")
-        seed(13, 0L, "T1")
-        seed(26, 5000000L, "T2")
-        val n13 = Tables.documents(s, d).filter(col("doc_id") % 13 === 0).count()
-        val n26 = Tables.documents(s, d).filter(col("doc_id") % 26 === 0).count()
-        // no TTL yet: a major expires nothing
-        Compaction.major(s, root, "q240", nowMillis = () => 5600000L)
-        require(s.table(s"$cat.q240").count() == n13 + n26,
-          "the FOREVER default expires nothing")
-        s.sql(s"ALTER TABLE $cat.q240 SET TBLPROPERTIES('ttlMillis' = '1000000')")
-        val props = s.sql(s"SHOW TBLPROPERTIES $cat.q240")
-          .collect().map(r => (r.getString(0), r.getString(1))).toMap
-        require(props.get("ttlMillis").contains("1000000"), s"$props")
-        // cutoff = 5,600,000 − 1,000,000: the old generation expires
-        // EXCEPT where it is a key's only (latest) version
-        Compaction.major(s, root, "q240", nowMillis = () => 5600000L)
-        val out = s.table(s"$cat.q240")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-        require(out.count() == n13, s"one survivor per key: ${out.count()} vs $n13")
-        out
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q240_cells_sql_ttl_ddl" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      s.sql(s"CREATE TABLE $cat.q240 (rowkey BINARY, version BIGINT, body BINARY)")
+      // versions are epoch-millis-like stamps: an OLD generation for
+      // every %13 key, a RECENT one for every %26 key — so %13∧¬%26
+      // keys hold ONLY expired versions (the minVersions=1 case)
+      def seed(pred: Int, base: Long, tag: String): Unit =
+        insertDocs(s, d, s"$cat.q240", pred, s"cast($base + doc_id as bigint)", s"'$tag'")
+      seed(13, 0L, "T1")
+      seed(26, 5000000L, "T2")
+      val n13 = docCount(s, d, 13)
+      val n26 = docCount(s, d, 26)
+      // no TTL yet: a major expires nothing
+      Compaction.major(s, root, "q240", nowMillis = () => 5600000L)
+      require(s.table(s"$cat.q240").count() == n13 + n26,
+        "the FOREVER default expires nothing")
+      s.sql(s"ALTER TABLE $cat.q240 SET TBLPROPERTIES('ttlMillis' = '1000000')")
+      val props = s.sql(s"SHOW TBLPROPERTIES $cat.q240")
+        .collect().map(r => (r.getString(0), r.getString(1))).toMap
+      require(props.get("ttlMillis").contains("1000000"), s"$props")
+      // cutoff = 5,600,000 − 1,000,000: the old generation expires
+      // EXCEPT where it is a key's only (latest) version
+      Compaction.major(s, root, "q240", nowMillis = () => 5600000L)
+      val out = cellStrings(s.table(s"$cat.q240")).localCheckpoint()
+      require(out.count() == n13, s"one survivor per key: ${out.count()} vs $n13")
+      out
+    }},
 
     // PRE-SPLIT FROM SQL — HBase `create 'tbl', SPLITS => […]` as DDL:
     // TBLPROPERTIES('splitPoints'='<hex>,…') records the region
@@ -1331,58 +1015,30 @@ object StoreLifecycle {
     // actually routed writes), and the executed plan carries no
     // Exchange. The emitted result is the joined current state; the
     // driver hash pins DDL split routing ∘ catalog SPJ ∘ join rows.
-    "q241_cells_sql_presplit_join" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q241-cells").toString
-      val cat = "g241_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      val prevBucketing = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      val prevPush = s.conf.getOption("spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-      val prevBroadcast = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val points = (1 to 9).map(i => s"doc-$i".getBytes("UTF-8").map(b => f"$b%02x").mkString)
-          .mkString(",")
-        def create(tbl: String): Unit = s.sql(
-          s"CREATE TABLE $cat.$tbl (rowkey BINARY, version BIGINT, body BINARY) " +
-            s"TBLPROPERTIES('splitPoints' = '$points')")
-        create("pja"); create("pjb")
-        def load(tbl: String, pred: Int, tag: String, v: Int): Unit = s.sql(
-          s"""INSERT INTO $cat.$tbl
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast(doc_id * 2 + $v as bigint),
-                     cast(md5(concat(cast(doc_id as string), '$tag')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % $pred = 0""")
-        load("pja", 14, "PA", 1)
-        load("pjb", 28, "PB", 2)
-        val props = s.sql(s"SHOW TBLPROPERTIES $cat.pja")
-          .collect().map(r => (r.getString(0), r.getString(1))).toMap
-        require(props.get("splitPoints").contains(points),
-          s"the declared boundaries echo back: $props")
-        require(segShardDirs(root, "pja").size > 1 && segShardDirs(root, "pjb").size > 1,
-          "the declared split actually routed writes across regions")
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val joined = s.table(s"$cat.pja").as("a")
-          .join(s.table(s"$cat.pjb").as("b"), col("a.rowkey") === col("b.rowkey"))
-          .select(col("a.rowkey").cast("string").as("key_str"),
-            col("a.version").as("version_a"),
-            col("a.body").cast("string").as("body_a_md5"),
-            col("b.version").as("version_b"),
-            col("b.body").cast("string").as("body_b_md5"))
+    "q241_cells_sql_presplit_join" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      val points = docSplits.map(_.map(b => f"$b%02x").mkString).mkString(",")
+      def create(tbl: String): Unit = s.sql(
+        s"CREATE TABLE $cat.$tbl (rowkey BINARY, version BIGINT, body BINARY) " +
+          s"TBLPROPERTIES('splitPoints' = '$points')")
+      create("pja"); create("pjb")
+      def load(tbl: String, pred: Int, tag: String, v: Int): Unit =
+        insertDocs(s, d, s"$cat.$tbl", pred, s"cast(doc_id * 2 + $v as bigint)", s"'$tag'")
+      load("pja", 14, "PA", 1)
+      load("pjb", 28, "PB", 2)
+      val props = s.sql(s"SHOW TBLPROPERTIES $cat.pja")
+        .collect().map(r => (r.getString(0), r.getString(1))).toMap
+      require(props.get("splitPoints").contains(points),
+        s"the declared boundaries echo back: $props")
+      require(segShardDirs(root, "pja").size > 1 && segShardDirs(root, "pjb").size > 1,
+        "the declared split actually routed writes across regions")
+      withConf(s, SpjConf: _*) {
+        val joined = abJoin(s.table(s"$cat.pja"), s.table(s"$cat.pjb"))
         val plan = joined.queryExecution.executedPlan.toString
         require(!plan.contains("Exchange"),
           s"identical DDL must storage-partition-join with no exchange:\n$plan")
         joined.localCheckpoint()
-      } finally {
-        def restore(key: String, prev: Option[String]): Unit =
-          prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
-        restore("spark.sql.sources.v2.bucketing.enabled", prevBucketing)
-        restore("spark.sql.sources.v2.bucketing.pushPartValues.enabled", prevPush)
-        restore("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       }
-    },
+    }},
 
     // MAINTENANCE AS SQL — Spark 4 ProcedureCatalog: `CALL
     // cat.compact_major(table => 't')` runs the store's major
@@ -1395,46 +1051,32 @@ object StoreLifecycle {
     // maxVersions per key under the DDL the table was CREATED with.
     // The emitted result is the post-compact table; the driver hash
     // pins procedure resolution ∘ argument binding ∘ the GC.
-    "q242_cells_sql_call_maintenance" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q242-cells").toString
-      val cat = "g242_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q242 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('maxVersions'='2')")
-        // three generations through BULK segments (bulk loads bypass
-        // the put path's eager prune, so the major has real GC to do)
-        (1 to 3).foreach { v =>
-          BulkLoad.writeCells(
-            Tables.documents(s, d).filter(col("doc_id") % 15 === 0)
-              .select(lit("q242").as("tableName"),
-                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-                expr(s"doc_id * 8 + $v").as("version"),
-                expr(s"cast(md5(concat(cast(doc_id as string), '=', '$v')) as binary)").as("body")),
-            root)
-        }
-        val n15 = Tables.documents(s, d).filter(col("doc_id") % 15 === 0).count()
-        // r15 read-time retention: the maxVersions=2 DDL masks the
-        // oldest generation on every read ALREADY — the CALL below
-        // only reclaims its bytes (all 3 generations are on disk:
-        // the $changes edit log, which never masks, sees them)
-        require(s.table(s"$cat.q242").count() == 2 * n15,
-          "the read face caps to maxVersions immediately")
-        require(s.table(s"$cat.`q242$$changes`").count() == 3 * n15,
-          "the edit log proves all 3 generations physically present")
-        val rep = s.sql(s"CALL $cat.compact_major(`table` => 'q242')").collect()(0)
-        require(rep.getLong(0) == 2 * n15,
-          s"the CALL reports the retained count: ${rep.getLong(0)} vs ${2 * n15}")
-        require(segFiles(root, "q242").forall(n =>
-          CellSegment.isSegment(n) || n.startsWith("_")),
-          "post-compact the store holds only fresh segments")
-        s.table(s"$cat.q242")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q242_cells_sql_call_maintenance" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      s.sql(s"CREATE TABLE $cat.q242 (rowkey BINARY, version BIGINT, body BINARY) " +
+        "TBLPROPERTIES('maxVersions'='2')")
+      // three generations through BULK segments (bulk loads bypass
+      // the put path's eager prune, so the major has real GC to do)
+      (1 to 3).foreach { v =>
+        BulkLoad.writeCells(docCells(s, d, 15, s"doc_id * 8 + $v",
+          s"cast(md5(concat(cast(doc_id as string), '=', '$v')) as binary)", table = "q242"), root)
+      }
+      val n15 = docCount(s, d, 15)
+      // r15 read-time retention: the maxVersions=2 DDL masks the
+      // oldest generation on every read ALREADY — the CALL below
+      // only reclaims its bytes (all 3 generations are on disk:
+      // the $changes edit log, which never masks, sees them)
+      require(s.table(s"$cat.q242").count() == 2 * n15,
+        "the read face caps to maxVersions immediately")
+      require(s.table(s"$cat.`q242$$changes`").count() == 3 * n15,
+        "the edit log proves all 3 generations physically present")
+      val rep = s.sql(s"CALL $cat.compact_major(`table` => 'q242')").collect()(0)
+      require(rep.getLong(0) == 2 * n15,
+        s"the CALL reports the retained count: ${rep.getLong(0)} vs ${2 * n15}")
+      require(segFiles(root, "q242").forall(n =>
+        CellSegment.isSegment(n) || n.startsWith("_")),
+        "post-compact the store holds only fresh segments")
+      cellStrings(s.table(s"$cat.q242")).localCheckpoint()
+    }},
 
     // CURRENT-STATE ENRICHMENT, BROADCAST-PLANNED — the user-shaped
     // serving join: a parquet FACT table enriched from a store
@@ -1449,47 +1091,30 @@ object StoreLifecycle {
     // stats ∘ plan choice ∘ latest fold ∘ join rows end to end. At
     // 100 TB this is the difference between shuffling the fact table
     // and shipping a winner-sized dimension to it.
-    "q243_cells_latest_broadcast_enrich" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q243-cells").toString
-      val cat = "g243_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        // one bulk load carries both versions (fixture hygiene: the
-        // gate measures stats-earned broadcast, not the put path)
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 21 === 0)
-            .select(col("doc_id"), explode(array(lit(1), lit(2))).as("g"))
-            .select(lit("q243").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("doc_id * 4 + g").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), '$', cast(g as string))) as binary)").as("body")),
-          root)
-        // every third dimension key is fully masked — live stats must
-        // exclude it, and the join must not resurrect it
-        Tables.documents(s, d).filter(col("doc_id") % 63 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 4 + 2").as("version"),
-            lit(Array.emptyByteArray).as("body")) // ignored by marker writes
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q243")
-          .option("tombstone", "true").save()
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val fact = Tables.documents(s, d).filter(col("doc_id") % 7 === 0)
-          .select(col("doc_id").cast("long").as("doc_id"),
-            expr("concat('doc-', doc_id)").as("key_str"))
-        val enriched = fact.join(
-          s.table(s"$cat.`q243$$latest`")
-            .select(col("rowkey").cast("string").as("key_str"),
-              col("version").as("state_version"),
-              col("body").cast("string").as("state_md5")),
-          Seq("key_str"))
-          .select(col("key_str"), col("doc_id"), col("state_version"), col("state_md5"))
-        val plan = enriched.queryExecution.executedPlan.toString
-        require(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
-          s"the live-winner statistics must earn the broadcast under the default threshold:\n$plan")
-        enriched.localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q243_cells_latest_broadcast_enrich" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      // one bulk load carries both versions (fixture hygiene: the
+      // gate measures stats-earned broadcast, not the put path)
+      BulkLoad.writeCells(docCells(s, d, 21, "doc_id * 4 + g",
+        "cast(md5(concat(cast(doc_id as string), '$', cast(g as string))) as binary)",
+        table = "q243", gen = explode(array(lit(1), lit(2))).as("g")), root)
+      // every third dimension key is fully masked — live stats must
+      // exclude it, and the join must not resurrect it
+      putCells(docCells(s, d, 63, "doc_id * 4 + 2", "X''"), root, "q243", Tombstone)
+      val fact = Tables.documents(s, d).filter(col("doc_id") % 7 === 0)
+        .select(col("doc_id").cast("long").as("doc_id"),
+          expr("concat('doc-', doc_id)").as("key_str"))
+      val enriched = fact.join(
+        s.table(s"$cat.`q243$$latest`")
+          .select(col("rowkey").cast("string").as("key_str"),
+            col("version").as("state_version"),
+            col("body").cast("string").as("state_md5")),
+        Seq("key_str"))
+        .select(col("key_str"), col("doc_id"), col("state_version"), col("state_md5"))
+      val plan = enriched.queryExecution.executedPlan.toString
+      require(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
+        s"the live-winner statistics must earn the broadcast under the default threshold:\n$plan")
+      enriched.localCheckpoint()
+    }},
 
     // AGGREGATE PUSHDOWN — the HBase coprocessor-aggregation analog
     // (AggregationClient: count/min/max computed region-side, only
@@ -1505,57 +1130,36 @@ object StoreLifecycle {
     // set relationally. 100 TB: count(*) touches ~48 B/cell of index
     // (one 52 B trailer per compacted segment via the stats tiers),
     // never the bodies that dominate bytes.
-    "q244_cells_agg_pushdown" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q244-cells").toString
-      val cat = "g244_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        // flush policy OFF (r15): the gate's hard case IS a per-cell
-        // put backlog alongside segments and markers — the default
-        // threshold would fold it away before the aggregate runs
-        graft.ingest.FileStore(root).ensureTable("q244",
-          PushTableSink.TableSpec(compactionThreshold = 0))
-        // segments: %8 keys at two versions
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 8 === 0)
-            .select(col("doc_id"), explode(array(lit(1), lit(2))).as("g"))
-            .select(lit("q244").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("doc_id * 10 + g").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'G', cast(g as string))) as binary)").as("body")),
-          root)
-        // put backlog: %30 keys at a third version (cross-kind dedup in play)
-        Tables.documents(s, d).filter(col("doc_id") % 30 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 10 + 3").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), 'P3')) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q244").save()
-        // bound markers: each %40 key loses its v1
-        Tables.documents(s, d).filter(col("doc_id") % 40 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 10 + 1").as("version"), lit(Array.emptyByteArray).as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q244")
-          .option("tombstone", "true").save()
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        def pushed(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.collectFirst {
-            case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-              if r.scan.isInstanceOf[graft.sources.CellsAggScan] => r
-          }.isDefined
-        graft.sources.CellsSource.filesOpened.set(0)
-        val base = s.sql(
-          s"SELECT count(*) AS n_cells, min(version) AS min_v, max(version) AS max_v FROM $cat.q244")
-        val latest = s.sql(s"SELECT count(*) AS n_latest FROM $cat.`q244$$latest`")
-        require(pushed(base) && pushed(latest),
-          "both aggregates must push into the metadata scan")
-        val out = base.crossJoin(latest).localCheckpoint()
-        require(graft.sources.CellsSource.filesOpened.get() == 0,
-          s"pushed aggregates must read ZERO file contents, opened ${graft.sources.CellsSource.filesOpened.get()}")
-        out
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q244_cells_agg_pushdown" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      // flush policy OFF (r15): the gate's hard case IS a per-cell
+      // put backlog alongside segments and markers — the default
+      // threshold would fold it away before the aggregate runs
+      graft.ingest.FileStore(root).ensureTable("q244",
+        PushTableSink.TableSpec(compactionThreshold = 0))
+      // segments: %8 keys at two versions
+      BulkLoad.writeCells(docCells(s, d, 8, "doc_id * 10 + g",
+        "cast(md5(concat(cast(doc_id as string), 'G', cast(g as string))) as binary)",
+        table = "q244", gen = explode(array(lit(1), lit(2))).as("g")), root)
+      // put backlog: %30 keys at a third version (cross-kind dedup in play)
+      putCells(docCells(s, d, 30, "doc_id * 10 + 3",
+        "cast(md5(concat(cast(doc_id as string), 'P3')) as binary)"), root, "q244")
+      // bound markers: each %40 key loses its v1
+      putCells(docCells(s, d, 40, "doc_id * 10 + 1", "X''"), root, "q244", Tombstone)
+      def pushed(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.collectFirst {
+          case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[graft.sources.CellsAggScan] => r
+        }.isDefined
+      graft.sources.CellsSource.filesOpened.set(0)
+      val base = s.sql(
+        s"SELECT count(*) AS n_cells, min(version) AS min_v, max(version) AS max_v FROM $cat.q244")
+      val latest = s.sql(s"SELECT count(*) AS n_latest FROM $cat.`q244$$latest`")
+      require(pushed(base) && pushed(latest),
+        "both aggregates must push into the metadata scan")
+      val out = base.crossJoin(latest).localCheckpoint()
+      require(graft.sources.CellsSource.filesOpened.get() == 0,
+        s"pushed aggregates must read ZERO file contents, opened ${graft.sources.CellsSource.filesOpened.get()}")
+      out
+    }},
 
     // REPORTED ORDERING → SORT-FREE CO-LOCATED MERGE JOIN — segments
     // are (rowkey, version)-sorted and a compacted table reports that
@@ -1570,29 +1174,14 @@ object StoreLifecycle {
     // (the Sort returns) — spec-pinned in CellsOrderingSpec. 100 TB:
     // scan → join with no shuffle and no sort is the cheapest join
     // shape that exists; compaction is what buys it.
-    "q245_cells_sorted_merge_join" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q245-cells").toString
-      val cat = "g245_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      val prevBucketing = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      val prevPush = s.conf.getOption("spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-      val prevBroadcast = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        val points = (1 to 9).map(i => s"doc-$i".getBytes("UTF-8"))
-        def seed(table: String, pred: Int, tag: String): Unit =
-          BulkLoad.writeCells(
-            Tables.documents(s, d).filter(col("doc_id") % pred === 0)
-              .select(lit(table).as("tableName"),
-                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-                expr("doc_id * 2 + 1").as("version"),
-                expr(s"cast(md5(concat(cast(doc_id as string), '$tag')) as binary)").as("body")),
-            root, BulkLoad.Config(splitPoints = points))
-        seed("smja", 16, "SA")
-        seed("smjb", 32, "SB")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    "q245_cells_sorted_merge_join" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      def seed(table: String, pred: Int, tag: String): Unit =
+        BulkLoad.writeCells(docCells(s, d, pred, "doc_id * 2 + 1",
+          s"cast(md5(concat(cast(doc_id as string), '$tag')) as binary)", table = table),
+          root, BulkLoad.Config(splitPoints = docSplits))
+      seed("smja", 16, "SA")
+      seed("smjb", 32, "SB")
+      withConf(s, SpjConf: _*) {
         val joined = s.table(s"$cat.smja").as("a")
           .join(s.table(s"$cat.smjb").as("b"), col("a.rowkey") === col("b.rowkey"))
           .select(col("a.rowkey").cast("string").as("key_str"),
@@ -1621,15 +1210,8 @@ object StoreLifecycle {
           s"co-located merge join must be exchange-free AND sort-free: smj=$smj ex=$exchanges sorts=$sorts\n" +
             joined.queryExecution.executedPlan)
         out
-      } finally {
-        def restore(key: String, prev: Option[String]): Unit =
-          prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
-        restore("spark.sql.sources.v2.bucketing.enabled", prevBucketing)
-        restore("spark.sql.sources.v2.bucketing.pushPartValues.enabled", prevPush)
-        restore("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       }
-    },
+    }},
 
     // $VERSIONS STORE-FILE INVENTORY — the DESCRIBE HISTORY face
     // ([[graft.sources.CellsVersionsTable]]): one row per store file
@@ -1643,58 +1225,40 @@ object StoreLifecycle {
     // hashes against DuckDB deriving file/cell counts from the same
     // md5 keyspace — including the SEGMENT-PER-SHARD count
     // (distinct first bytes of the key digests = populated regions).
-    "q246_cells_versions_inventory" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q246-cells").toString
-      val cat = "g246_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        // flush policy OFF (r15): the inventory oracle counts the RAW
-        // put backlog one file per cell — the operator override for
-        // layout-inspecting reads
-        graft.ingest.FileStore(root).ensureTable("q246",
-          PushTableSink.TableSpec(compactionThreshold = 0))
-        // one bulk generation of %6 keys, md5-spread over the regions
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 6 === 0)
-            .select(lit("q246").as("tableName"),
-              expr("unhex(md5(concat('doc-', doc_id)))").as("rowkey"),
-              expr("doc_id * 2 + 1").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'V')) as binary)").as("body")),
-          root)
-        // a put backlog (%30) and both marker kinds (%60 bound, %90 exact)
-        def face(pred: Int, vOff: Int, opts: Map[String, String]): Unit = {
-          val w = Tables.documents(s, d).filter(col("doc_id") % pred === 0)
-            .select(expr("unhex(md5(concat('doc-', doc_id)))").as("rowkey"),
-              expr(s"doc_id * 2 + $vOff").as("version"),
-              lit("x".getBytes("UTF-8")).as("body"))
-            .write.format("graft-cells").mode("append")
-            .option("root", root).option("table", "q246")
-          opts.foldLeft(w) { case (b, (k, v)) => b.option(k, v) }.save()
-        }
-        face(30, 2, Map.empty)
-        face(60, 1, Map("tombstone" -> "true"))
-        face(90, 2, Map("tombstone" -> "true", "tombstoneExact" -> "true"))
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        graft.sources.CellsSource.filesOpened.set(0)
-        val inv = s.sql(
-          s"""SELECT kind, count(*) AS files, sum(cells) AS cells,
-                     sum(distinct_keys) AS dkeys, min(min_version) AS min_v,
-                     max(max_version) AS max_v, max(seq_no) AS max_seq
-              FROM $cat.`q246$$versions` GROUP BY kind""")
-          .localCheckpoint()
-        // the watermark is discoverable: VERSION AS OF it sees everything
-        val watermark = s.sql(s"SELECT max(max_version) FROM $cat.`q246$$versions`")
-          .collect()(0).getLong(0)
-        val full = s.table(s"$cat.q246").count()
-        val asOf = s.sql(s"SELECT count(*) FROM $cat.q246 VERSION AS OF $watermark")
-          .collect()(0).getLong(0)
-        require(asOf == full,
-          s"max(max_version) must be the usable time-travel watermark: $asOf vs $full")
-        require(graft.sources.CellsSource.filesOpened.get() == 0,
-          "the inventory face must read zero file contents")
-        inv
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q246_cells_versions_inventory" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      // flush policy OFF (r15): the inventory oracle counts the RAW
+      // put backlog one file per cell — the operator override for
+      // layout-inspecting reads
+      graft.ingest.FileStore(root).ensureTable("q246",
+        PushTableSink.TableSpec(compactionThreshold = 0))
+      // one bulk generation of %6 keys, md5-spread over the regions
+      BulkLoad.writeCells(docCells(s, d, 6, "doc_id * 2 + 1",
+        "cast(md5(concat(cast(doc_id as string), 'V')) as binary)", table = "q246", key = Md5DocKey), root)
+      // a put backlog (%30) and both marker kinds (%60 bound, %90 exact)
+      def face(pred: Int, vOff: Int, opts: (String, String)*): Unit =
+        putCells(docCells(s, d, pred, s"doc_id * 2 + $vOff", "X'78'", key = Md5DocKey), root, "q246", opts: _*)
+      face(30, 2)
+      face(60, 1, Tombstone)
+      face(90, 2, Tombstone, "tombstoneExact" -> "true")
+      graft.sources.CellsSource.filesOpened.set(0)
+      val inv = s.sql(
+        s"""SELECT kind, count(*) AS files, sum(cells) AS cells,
+                   sum(distinct_keys) AS dkeys, min(min_version) AS min_v,
+                   max(max_version) AS max_v, max(seq_no) AS max_seq
+            FROM $cat.`q246$$versions` GROUP BY kind""")
+        .localCheckpoint()
+      // the watermark is discoverable: VERSION AS OF it sees everything
+      val watermark = s.sql(s"SELECT max(max_version) FROM $cat.`q246$$versions`")
+        .collect()(0).getLong(0)
+      val full = s.table(s"$cat.q246").count()
+      val asOf = s.sql(s"SELECT count(*) FROM $cat.q246 VERSION AS OF $watermark")
+        .collect()(0).getLong(0)
+      require(asOf == full,
+        s"max(max_version) must be the usable time-travel watermark: $asOf vs $full")
+      require(graft.sources.CellsSource.filesOpened.get() == 0,
+        "the inventory face must read zero file contents")
+      inv
+    }},
 
     // LIMIT / TOP-N PUSHDOWN — the HBase Scan#setLimit analog:
     // `ORDER BY rowkey LIMIT k` pushes as a partial top-N
@@ -1708,37 +1272,23 @@ object StoreLifecycle {
     // region and STRICTLY fewer rows than the table holds (the
     // truncation is real I/O savings, not a no-op). At 100 TB this is
     // "read ~k rows per region" versus "read the table, then sort".
-    "q247_cells_limit_pushdown" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q247-cells").toString
-      val cat = "g247_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 4 === 0)
-            .select(lit("q247").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("doc_id * 2 + 1").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'L')) as binary)").as("body")),
-          root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val total = Tables.documents(s, d).filter(col("doc_id") % 4 === 0).count()
-        graft.sources.CellsSource.cappedRowsEmitted.set(0)
-        val top = s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str, version
-              FROM $cat.q247 ORDER BY rowkey LIMIT 20""")
-        val pushed = top.queryExecution.optimizedPlan.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            r.scan.description()
-        }.getOrElse("")
-        require(pushed.contains("topK=20"), s"top-N must reach the scan: $pushed")
-        val out = top.localCheckpoint()
-        val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
-        val regions = graft.ingest.FileStore(root).splitsOf("q247").size
-        require(emitted > 0 && emitted <= 20L * regions && emitted < total,
-          s"per-region truncation must be real: emitted $emitted, regions $regions, total $total")
-        out
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q247_cells_limit_pushdown" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      BulkLoad.writeCells(docCells(s, d, 4, "doc_id * 2 + 1",
+        "cast(md5(concat(cast(doc_id as string), 'L')) as binary)", table = "q247"), root)
+      val total = docCount(s, d, 4)
+      graft.sources.CellsSource.cappedRowsEmitted.set(0)
+      val top = s.sql(
+        s"""SELECT cast(rowkey as string) AS key_str, version
+            FROM $cat.q247 ORDER BY rowkey LIMIT 20""")
+      val pushed = scanDesc(top)
+      require(pushed.contains("topK=20"), s"top-N must reach the scan: $pushed")
+      val out = top.localCheckpoint()
+      val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
+      val regions = graft.ingest.FileStore(root).splitsOf("q247").size
+      require(emitted > 0 && emitted <= 20L * regions && emitted < total,
+        s"per-region truncation must be real: emitted $emitted, regions $regions, total $total")
+      out
+    }},
 
     // NATIVE STREAMING SINK — q238's CDC replication loop with ZERO
     // foreachBatch and zero MERGE: three declarative streams tail the
@@ -1756,21 +1306,11 @@ object StoreLifecycle {
     // drain 2 applies them, the replica's masked view equals the
     // source's BOTH ways. At 100 TB each trigger moves one feed
     // window per region — never the table.
-    "q248_cells_streaming_sink_replication" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q248-cells").toString
-      val cks = (1 to 3).map(_ => Files.createTempDirectory("graft-q248-ck").toString)
-      val cat = "g248_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    "q248_cells_streaming_sink_replication" -> { (s, d) => withRoots(4) { case Seq(root, cks @ _*) =>
+      withCatalog(s, root) { cat =>
         s.sql(s"CREATE TABLE $cat.q248r (rowkey BINARY, version BIGINT, body BINARY)")
-        def seed(v: Int): Unit = BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 23 === 0)
-            .select(lit("q248s").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              lit(v.toLong * 1000000000L).as("version"),
-              expr(s"cast(md5(concat(cast(doc_id as string), '~', '$v')) as binary)").as("body")),
-          root)
+        def seed(v: Int): Unit = BulkLoad.writeCells(docCells(s, d, 23, s"${v * 1000000000L}L",
+          s"cast(md5(concat(cast(doc_id as string), '~', '$v')) as binary)", table = "q248s"), root)
         // the replication consumer: three persistent streams, one per
         // edit kind — no driver code touches a row
         def drain(): Unit = {
@@ -1791,21 +1331,16 @@ object StoreLifecycle {
               .option("tombstone", "true").option("tombstoneExact", "true")
               .option("checkpointLocation", cks(2)))
           streams.foreach { w =>
-            val q = w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+            val q = w.trigger(Trigger.AvailableNow()).start()
             q.awaitTermination()
           }
         }
         seed(1)
         drain()
-        val n23 = Tables.documents(s, d).filter(col("doc_id") % 23 === 0).count()
+        val n23 = docCount(s, d, 23)
         require(s.table(s"$cat.q248r").count() == n23,
           "after the first drain the replica carries exactly the seed window")
         seed(2)
-        def keyList(m: Int): String = Tables.documents(s, d)
-          .filter(col("doc_id") % m === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
         // a bare delete (stamps the current latest → bound marker) and
         // an exact-version delete masking ONLY generation 2. Both land
         // at version 2e9 — ABOVE drain 1's committed watermark (1e9),
@@ -1813,23 +1348,15 @@ object StoreLifecycle {
         // committed offset are outside the incremental window — an
         // exact delete of an already-streamed old version is a batch
         // repair, not a feed event)
-        s.sql(s"DELETE FROM $cat.q248s WHERE rowkey IN ${keyList(69)}")
-        s.sql(s"DELETE FROM $cat.q248s WHERE rowkey IN ${keyList(115)} " +
+        s.sql(s"DELETE FROM $cat.q248s WHERE rowkey IN ${keyList(docIds(s, d, 69))}")
+        s.sql(s"DELETE FROM $cat.q248s WHERE rowkey IN ${keyList(docIds(s, d, 115))} " +
           "AND version = 2000000000")
         drain()
-        def view(t: String) = s.table(s"$cat.$t")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-        val src = view("q248s").localCheckpoint() // the q195 note
-        val rep = view("q248r").localCheckpoint()
-        require(rep.exceptAll(src).count() == 0 && src.exceptAll(rep).count() == 0,
-          "the replica's masked view must equal the source's — with zero foreachBatch")
-        rep
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        cks.foreach(ck => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck)))
+        def view(t: String) = cellStrings(s.table(s"$cat.$t"))
+        sameBag(view("q248s"), view("q248r"),
+          "the replica's masked view must equal the source's — with zero foreachBatch")._2
       }
-    },
+    }},
 
     // CALL VACUUM — the CleanerChore / remove_orphan_files verb: the
     // store's write protocols are crash-safe (atomic renames), but a
@@ -1844,52 +1371,38 @@ object StoreLifecycle {
     // the table's masked view, hash-checked against the oracle. At
     // 100 TB this is the nightly chore: I/O ∝ listings + orphan bytes,
     // never cell count.
-    "q249_cells_vacuum" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q249-cells").toString
-      val cat = "g249_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 11 === 0)
-            .select(lit("q249").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("doc_id * 3 + 1").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'VAC')) as binary)").as("body")),
-          root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // the three orphan classes a crash leaves behind
-        val staging = java.nio.file.Paths.get(root, "_overwrite_staging", "crashed", "q249")
-        Files.createDirectories(staging)
-        Files.write(staging.resolve("junk.bin"), Array.fill[Byte](128)(1))
-        val trash = java.nio.file.Paths.get(root, "_overwrite_trash", "torn", "q249")
-        Files.createDirectories(trash)
-        Files.write(trash.resolve("old.bin"), Array.fill[Byte](64)(2))
-        val shard = {
-          val l = Files.list(java.nio.file.Paths.get(root, "q249"))
-          try {
-            val it = l.iterator()
-            var p: java.nio.file.Path = null
-            while (p == null && it.hasNext) { val c = it.next(); if (Files.isDirectory(c)) p = c }
-            p
-          } finally l.close()
-        }
-        Files.write(shard.resolve("put-torn.tmp"), Array.fill[Byte](32)(3))
-        // fresh artifacts survive the default 24h age gate
-        val r0 = s.sql(s"CALL $cat.vacuum()").collect()(0)
-        require((0 to 3).map(r0.getLong).sum == 0L,
-          s"the age gate must protect fresh (possibly-live) artifacts: $r0")
-        // the known-crash override sweeps all three classes, bytes accounted
-        val r1 = s.sql(s"CALL $cat.vacuum(older_than_ms => 0)").collect()(0)
-        require(r1.getLong(0) == 1 && r1.getLong(1) == 1 && r1.getLong(2) == 1 &&
-          r1.getLong(3) >= 128 + 64 + 32, s"sweep exactly the planted orphans: $r1")
-        val r2 = s.sql(s"CALL $cat.vacuum(older_than_ms => 0)").collect()(0)
-        require((0 to 3).map(r2.getLong).sum == 0L, s"vacuum is idempotent: $r2")
-        s.table(s"$cat.q249")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q249_cells_vacuum" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      BulkLoad.writeCells(docCells(s, d, 11, "doc_id * 3 + 1",
+        "cast(md5(concat(cast(doc_id as string), 'VAC')) as binary)", table = "q249"), root)
+      // the three orphan classes a crash leaves behind
+      val staging = java.nio.file.Paths.get(root, "_overwrite_staging", "crashed", "q249")
+      Files.createDirectories(staging)
+      Files.write(staging.resolve("junk.bin"), Array.fill[Byte](128)(1))
+      val trash = java.nio.file.Paths.get(root, "_overwrite_trash", "torn", "q249")
+      Files.createDirectories(trash)
+      Files.write(trash.resolve("old.bin"), Array.fill[Byte](64)(2))
+      val shard = {
+        val l = Files.list(java.nio.file.Paths.get(root, "q249"))
+        try {
+          val it = l.iterator()
+          var p: java.nio.file.Path = null
+          while (p == null && it.hasNext) { val c = it.next(); if (Files.isDirectory(c)) p = c }
+          p
+        } finally l.close()
+      }
+      Files.write(shard.resolve("put-torn.tmp"), Array.fill[Byte](32)(3))
+      // fresh artifacts survive the default 24h age gate
+      val r0 = s.sql(s"CALL $cat.vacuum()").collect()(0)
+      require((0 to 3).map(r0.getLong).sum == 0L,
+        s"the age gate must protect fresh (possibly-live) artifacts: $r0")
+      // the known-crash override sweeps all three classes, bytes accounted
+      val r1 = s.sql(s"CALL $cat.vacuum(older_than_ms => 0)").collect()(0)
+      require(r1.getLong(0) == 1 && r1.getLong(1) == 1 && r1.getLong(2) == 1 &&
+        r1.getLong(3) >= 128 + 64 + 32, s"sweep exactly the planted orphans: $r1")
+      val r2 = s.sql(s"CALL $cat.vacuum(older_than_ms => 0)").collect()(0)
+      require((0 to 3).map(r2.getLong).sum == 0L, s"vacuum is idempotent: $r2")
+      cellStrings(s.table(s"$cat.q249")).localCheckpoint()
+    }},
 
     // SQL TRUNCATE TABLE — HBase `truncate_preserve` as the standalone
     // statement (DSv2 TruncatableTable): every cell, segment AND
@@ -1900,50 +1413,28 @@ object StoreLifecycle {
     // visible at a version the old marker would have masked. At
     // 100 TB the sweep is one listing pass per region, in parallel at
     // the FS layer, no cell rewrite.
-    "q250_cells_sql_truncate" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q250-cells").toString
-      val cat = "g250_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q250 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('maxVersions'='4')")
-        // generation 1 (%13 keys) + a marker on every %39 key at a HIGH
-        // version — if truncate left it, the reload below would be masked
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 13 === 0)
-            .select(lit("q250").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("doc_id * 5 + 1").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'OLD')) as binary)").as("body")),
-          root)
-        val marked = Tables.documents(s, d).filter(col("doc_id") % 39 === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
-        s.sql(s"DELETE FROM $cat.q250 WHERE rowkey IN $marked AND version <= 9000000000")
-        val n13 = Tables.documents(s, d).filter(col("doc_id") % 13 === 0).count()
-        val n39 = Tables.documents(s, d).filter(col("doc_id") % 39 === 0).count()
-        require(s.table(s"$cat.q250").count() == n13 - n39, "markers mask before the truncate")
-        s.sql(s"TRUNCATE TABLE $cat.q250")
-        require(s.table(s"$cat.q250").count() == 0, "truncate empties the table")
-        val props = s.sql(s"SHOW TBLPROPERTIES $cat.q250")
-          .collect().map(r => (r.getString(0), r.getString(1))).toMap
-        require(props("maxVersions") == "4", "truncate_preserve keeps the descriptor")
-        // generation 2 reloads at versions the old markers covered —
-        // visible only because the truncate swept the markers too
-        Tables.documents(s, d).filter(col("doc_id") % 13 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 5 + 2").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), 'NEW')) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q250").save()
-        s.table(s"$cat.q250")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q250_cells_sql_truncate" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      s.sql(s"CREATE TABLE $cat.q250 (rowkey BINARY, version BIGINT, body BINARY) " +
+        "TBLPROPERTIES('maxVersions'='4')")
+      // generation 1 (%13 keys) + a marker on every %39 key at a HIGH
+      // version — if truncate left it, the reload below would be masked
+      BulkLoad.writeCells(docCells(s, d, 13, "doc_id * 5 + 1",
+        "cast(md5(concat(cast(doc_id as string), 'OLD')) as binary)", table = "q250"), root)
+      s.sql(s"DELETE FROM $cat.q250 WHERE rowkey IN ${keyList(docIds(s, d, 39))} AND version <= 9000000000")
+      val n13 = docCount(s, d, 13)
+      val n39 = docCount(s, d, 39)
+      require(s.table(s"$cat.q250").count() == n13 - n39, "markers mask before the truncate")
+      s.sql(s"TRUNCATE TABLE $cat.q250")
+      require(s.table(s"$cat.q250").count() == 0, "truncate empties the table")
+      val props = s.sql(s"SHOW TBLPROPERTIES $cat.q250")
+        .collect().map(r => (r.getString(0), r.getString(1))).toMap
+      require(props("maxVersions") == "4", "truncate_preserve keeps the descriptor")
+      // generation 2 reloads at versions the old markers covered —
+      // visible only because the truncate swept the markers too
+      putCells(docCells(s, d, 13, "doc_id * 5 + 2",
+        "cast(md5(concat(cast(doc_id as string), 'NEW')) as binary)"), root, "q250")
+      cellStrings(s.table(s"$cat.q250")).localCheckpoint()
+    }},
 
     // ROWKEY DERIVATION AS A CATALOG SQL FUNCTION — `cat.rowkey_of(
     // '<id json>')` computes the exact K2/K3 bytes every cell was
@@ -1957,43 +1448,28 @@ object StoreLifecycle {
     // segments the table holds. At 100 TB this is the difference
     // between a batched GET and a table scan, driven from a SQL
     // string a serving user can actually write.
-    "q251_cells_sql_rowkey_function" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q251-cells").toString
-      val cat = "g251_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        graft.functions.GraftFunctions.register(s)
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 17 === 0)
-            .select(lit("q251").as("tableName"),
-              expr("""hdi_rowkey(concat('{"id":"doc-', cast(doc_id as string), '"}'))""")
-                .as("rowkey"),
-              expr("doc_id * 7 + 1").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'RK')) as binary)").as("body")),
-          root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val probeIds = Tables.documents(s, d).filter(col("doc_id") % 85 === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-        val inList = probeIds
-          .map(id => s"""$cat.rowkey_of('{"id":"doc-$id"}')""")
-          .mkString("(", ", ", ")")
-        graft.sources.CellsSource.filesOpened.set(0)
-        val got = s.sql(
-          s"""SELECT version, cast(body as string) AS body_md5
-              FROM $cat.q251 WHERE rowkey IN $inList""")
-        val desc = got.queryExecution.optimizedPlan.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            r.scan.description()
-        }.getOrElse("")
-        require(desc.contains(s"keys=${probeIds.length}"),
-          s"the folded rowkey_of literals must push as point keys: $desc")
-        val out = got.localCheckpoint()
-        val opened = graft.sources.CellsSource.filesOpened.get()
-        require(opened > 0 && opened <= probeIds.length,
-          s"a ${probeIds.length}-key batched GET must open at most that many files, opened $opened")
-        out
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q251_cells_sql_rowkey_function" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      graft.functions.GraftFunctions.register(s)
+      BulkLoad.writeCells(docCells(s, d, 17, "doc_id * 7 + 1",
+        "cast(md5(concat(cast(doc_id as string), 'RK')) as binary)", table = "q251",
+        key = """hdi_rowkey(concat('{"id":"doc-', cast(doc_id as string), '"}'))"""), root)
+      val probeIds = docIds(s, d, 85)
+      val inList = probeIds
+        .map(id => s"""$cat.rowkey_of('{"id":"doc-$id"}')""")
+        .mkString("(", ", ", ")")
+      graft.sources.CellsSource.filesOpened.set(0)
+      val got = s.sql(
+        s"""SELECT version, cast(body as string) AS body_md5
+            FROM $cat.q251 WHERE rowkey IN $inList""")
+      val desc = scanDesc(got)
+      require(desc.contains(s"keys=${probeIds.length}"),
+        s"the folded rowkey_of literals must push as point keys: $desc")
+      val out = got.localCheckpoint()
+      val opened = graft.sources.CellsSource.filesOpened.get()
+      require(opened > 0 && opened <= probeIds.length,
+        s"a ${probeIds.length}-key batched GET must open at most that many files, opened $opened")
+      out
+    }},
 
     // PROVENANCE METADATA COLUMNS (SupportsMetadataColumns — the
     // Iceberg `_file` idiom): `_shard`/`_file`/`_kind` name the store
@@ -2005,44 +1481,29 @@ object StoreLifecycle {
     // pair to a real row of the `$versions` inventory face. At 100 TB
     // provenance costs nothing extra: the reader already knows its
     // file; the column materializes only when named.
-    "q252_cells_metadata_columns" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q252-cells").toString
-      val cat = "g252_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        // flush policy OFF (r15): the audit counts the RAW put backlog
-        // one file per cell — the operator override
-        graft.ingest.FileStore(root).ensureTable("q252",
-          PushTableSink.TableSpec(compactionThreshold = 0))
-        // segments: %6 keys (md5-spread digests → many regions);
-        // put backlog: %30 keys at a DISJOINT version (no shadowing)
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 6 === 0)
-            .select(lit("q252").as("tableName"),
-              expr("unhex(md5(concat('doc-', doc_id)))").as("rowkey"),
-              expr("doc_id * 2 + 1").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'S')) as binary)").as("body")),
-          root)
-        Tables.documents(s, d).filter(col("doc_id") % 30 === 0)
-          .select(expr("unhex(md5(concat('doc-', doc_id)))").as("rowkey"),
-            expr("doc_id * 2 + 2").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), 'P')) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q252").save()
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // every provenance pair names a real inventory file
-        val orphan = s.sql(
-          s"""SELECT t._shard, t._file FROM $cat.q252 t
-              LEFT ANTI JOIN $cat.`q252$$versions` v
-              ON t._shard = v.shard AND t._file = v.file""").count()
-        require(orphan == 0, s"provenance must name real inventory files, $orphan orphans")
-        s.sql(
-          s"""SELECT _kind AS kind, count(*) AS n,
-                     count(DISTINCT _file) AS files
-              FROM $cat.q252 GROUP BY _kind""")
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q252_cells_metadata_columns" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      // flush policy OFF (r15): the audit counts the RAW put backlog
+      // one file per cell — the operator override
+      graft.ingest.FileStore(root).ensureTable("q252",
+        PushTableSink.TableSpec(compactionThreshold = 0))
+      // segments: %6 keys (md5-spread digests → many regions);
+      // put backlog: %30 keys at a DISJOINT version (no shadowing)
+      BulkLoad.writeCells(docCells(s, d, 6, "doc_id * 2 + 1",
+        "cast(md5(concat(cast(doc_id as string), 'S')) as binary)", table = "q252", key = Md5DocKey), root)
+      putCells(docCells(s, d, 30, "doc_id * 2 + 2",
+        "cast(md5(concat(cast(doc_id as string), 'P')) as binary)", key = Md5DocKey), root, "q252")
+      // every provenance pair names a real inventory file
+      val orphan = s.sql(
+        s"""SELECT t._shard, t._file FROM $cat.q252 t
+            LEFT ANTI JOIN $cat.`q252$$versions` v
+            ON t._shard = v.shard AND t._file = v.file""").count()
+      require(orphan == 0, s"provenance must name real inventory files, $orphan orphans")
+      s.sql(
+        s"""SELECT _kind AS kind, count(*) AS n,
+                   count(DISTINCT _file) AS files
+            FROM $cat.q252 GROUP BY _kind""")
+        .localCheckpoint()
+    }},
 
     // NAMESPACES (SupportsNamespaces — the HBase one-level `ns:tbl`
     // model): CREATE NAMESPACE, namespaced DDL + DML, SHOW scoping,
@@ -2051,36 +1512,23 @@ object StoreLifecycle {
     // same-named table is a DIFFERENT store table (no cross-ns
     // leakage), and DROP NAMESPACE refuses non-empty without CASCADE.
     // The returned frame is the namespaced table's content.
-    "q253_cells_namespaces" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q253-cells").toString
-      val cat = "g253_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE NAMESPACE $cat.prod")
-        s.sql(s"CREATE TABLE $cat.prod.docs (rowkey BINARY, version BIGINT, body BINARY)")
-        s.sql(s"CREATE TABLE $cat.stage.docs (rowkey BINARY, version BIGINT, body BINARY)")
-        Tables.documents(s, d).filter(col("doc_id") % 29 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 9 + 1").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), 'NS')) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "prod:docs").save()
-        val ns = s.sql(s"SHOW NAMESPACES IN $cat").collect().map(_.getString(0)).toSet
-        require(ns == Set("prod", "stage"), s"explicit + implicit namespaces list: $ns")
-        require(s.table(s"$cat.stage.docs").count() == 0,
-          "same table name in another namespace is a different store table")
-        require(scala.util.Try(s.sql(s"DROP NAMESPACE $cat.stage")).isFailure,
-          "non-empty drop must refuse without CASCADE")
-        s.sql(s"DROP NAMESPACE $cat.stage CASCADE")
-        require(s.sql(s"SHOW NAMESPACES IN $cat").collect().map(_.getString(0)).toSet
-          == Set("prod"), "cascade removes the namespace and its tables")
-        s.table(s"$cat.prod.docs")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q253_cells_namespaces" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      s.sql(s"CREATE NAMESPACE $cat.prod")
+      s.sql(s"CREATE TABLE $cat.prod.docs (rowkey BINARY, version BIGINT, body BINARY)")
+      s.sql(s"CREATE TABLE $cat.stage.docs (rowkey BINARY, version BIGINT, body BINARY)")
+      putCells(docCells(s, d, 29, "doc_id * 9 + 1",
+        "cast(md5(concat(cast(doc_id as string), 'NS')) as binary)"), root, "prod:docs")
+      val ns = s.sql(s"SHOW NAMESPACES IN $cat").collect().map(_.getString(0)).toSet
+      require(ns == Set("prod", "stage"), s"explicit + implicit namespaces list: $ns")
+      require(s.table(s"$cat.stage.docs").count() == 0,
+        "same table name in another namespace is a different store table")
+      require(scala.util.Try(s.sql(s"DROP NAMESPACE $cat.stage")).isFailure,
+        "non-empty drop must refuse without CASCADE")
+      s.sql(s"DROP NAMESPACE $cat.stage CASCADE")
+      require(s.sql(s"SHOW NAMESPACES IN $cat").collect().map(_.getString(0)).toSet
+        == Set("prod"), "cascade removes the namespace and its tables")
+      cellStrings(s.table(s"$cat.prod.docs")).localCheckpoint()
+    }},
 
     // TOP-N OVER THE SERVING FACE — q232's `$latest` fold composed
     // with q247's pushed top-N: `SELECT … FROM tbl$latest ORDER BY
@@ -2091,38 +1539,24 @@ object StoreLifecycle {
     // level) and the cap bounds the rest. In-query invariants: the
     // scan carries topK, and capped readers emitted k rows where the
     // face holds 2× the keys in live winners alone.
-    "q254_cells_latest_topn" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q254-cells").toString
-      val cat = "g254_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 7 === 0)
-            .select(col("doc_id"), explode(array(lit(1), lit(2))).as("g"))
-            .select(lit("q254").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("doc_id * 2 + g").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'T', cast(g as string))) as binary)").as("body")),
-          root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val keys = Tables.documents(s, d).filter(col("doc_id") % 7 === 0).count()
-        graft.sources.CellsSource.cappedRowsEmitted.set(0)
-        val top = s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str, version
-              FROM $cat.`q254$$latest` ORDER BY rowkey LIMIT 25""")
-        val desc = top.queryExecution.optimizedPlan.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            r.scan.description()
-        }.getOrElse("")
-        require(desc.contains("topK=25") && desc.contains("latest"),
-          s"top-N must push into the serving face: $desc")
-        val out = top.localCheckpoint()
-        val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
-        require(emitted > 0 && emitted < keys,
-          s"the fold holds $keys winners (2x that in cells); emitted $emitted must be capped")
-        out
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q254_cells_latest_topn" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      BulkLoad.writeCells(docCells(s, d, 7, "doc_id * 2 + g",
+        "cast(md5(concat(cast(doc_id as string), 'T', cast(g as string))) as binary)",
+        table = "q254", gen = explode(array(lit(1), lit(2))).as("g")), root)
+      val keys = docCount(s, d, 7)
+      graft.sources.CellsSource.cappedRowsEmitted.set(0)
+      val top = s.sql(
+        s"""SELECT cast(rowkey as string) AS key_str, version
+            FROM $cat.`q254$$latest` ORDER BY rowkey LIMIT 25""")
+      val desc = scanDesc(top)
+      require(desc.contains("topK=25") && desc.contains("latest"),
+        s"top-N must push into the serving face: $desc")
+      val out = top.localCheckpoint()
+      val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
+      require(emitted > 0 && emitted < keys,
+        s"the fold holds $keys winners (2x that in cells); emitted $emitted must be capped")
+      out
+    }},
 
     // STREAMING MATERIALIZED VIEW INTO THE SERVING STORE — the
     // Flink/Storm-into-HBase idiom, fully declarative: a STATEFUL
@@ -2136,10 +1570,7 @@ object StoreLifecycle {
     // table holds EXACTLY one row per key (no version litter). At
     // 100 TB each trigger writes only the keys whose aggregate
     // CHANGED — never the state, never the table.
-    "q255_cells_streaming_upsert_mv" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q255-cells").toString
-      val ck = Files.createTempDirectory("graft-q255-ck").toString
-      val cat = "g255_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+    "q255_cells_streaming_upsert_mv" -> { (s, d) => withRoots(2) { case Seq(root, ck) =>
       // HISTORY (r17): this gate's rare undercount (one re-edited
       // key's count stuck at 1 — observed twice in sweep-level runs,
       // never isolated) was NOT streaming state at all. The forensic
@@ -2152,17 +1583,11 @@ object StoreLifecycle {
       // shard's maintenance monitor ([[FileStore.putBatch]],
       // flush/minor/major sweeps; FlushReplaceRaceSpec drives the
       // interleaving deterministically through the absorb seam).
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      withCatalog(s, root) { cat =>
         s.sql(s"CREATE TABLE $cat.q255mv (rowkey BINARY, version BIGINT, body BINARY)")
-        def seed(pred: Int, g: Int): Unit = BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % pred === 0)
-            .select(lit("q255s").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              lit(g.toLong * 1000000000L).as("version"),
-              expr(s"cast(md5(concat(cast(doc_id as string), '#$g')) as binary)").as("body")),
-          root)
+        def seed(pred: Int, g: Int): Unit = BulkLoad.writeCells(docCells(s, d, pred,
+          s"${g * 1000000000L}L", s"cast(md5(concat(cast(doc_id as string), '#$g')) as binary)",
+          table = "q255s"), root)
         // RESTART-FROM-CHECKPOINT on failure (r15 verdict: one bench
         // sweep under an ambient-slow window recorded a [STREAM_FAILED]
         // here — a single transient state-store/checkpoint IO error
@@ -2181,13 +1606,7 @@ object StoreLifecycle {
         // 2x774ms of addBatch wall to 32+ sink tasks logging ~19s of
         // blocked task-time (0.8s CPU) in a lock convoy on the single
         // shard. Restored once the bounded drain finishes.
-        def drain(): Unit = {
-          val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          try drainWith()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-        def drainWith(): Unit = {
+        def drain(): Unit = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
           var attempts = 0
           var done = false
           while (!done) {
@@ -2200,7 +1619,7 @@ object StoreLifecycle {
               .outputMode("update")
               .option("root", root).option("table", "q255mv")
               .option("checkpointLocation", ck)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+              .trigger(Trigger.AvailableNow()).start()
             try { q.awaitTermination(); done = true }
             catch {
               case e: org.apache.spark.sql.streaming.StreamingQueryException =>
@@ -2211,7 +1630,7 @@ object StoreLifecycle {
         }
         seed(27, 1)
         drain()
-        val n27 = Tables.documents(s, d).filter(col("doc_id") % 27 === 0).count()
+        val n27 = docCount(s, d, 27)
         require(s.table(s"$cat.q255mv").count() == n27,
           "after drain 1 the MV holds one row per key")
         seed(54, 2) // a SUBSET re-edits — their counts must move to 2
@@ -2239,11 +1658,8 @@ object StoreLifecycle {
           .select(col("rowkey").cast("string").as("key_str"),
             col("body").cast("string").as("edit_count"))
           .localCheckpoint()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
       }
-    },
+    }},
 
     // READ-TIME RETENTION — the r15 centerpiece (VERDICT r14 ask 1):
     // maxVersions + TTL + the minVersions floor applied by the READ
@@ -2265,81 +1681,72 @@ object StoreLifecycle {
     // version reads as absent). 100 TB: the fold is per-shard
     // metadata, O(live versions) longs, only on retention-active DDL.
     "q256_cells_read_time_retention" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q256-cells").toString
-      val cat = "g256_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       val T = 1000000000000L
-      try {
-        s.conf.set("spark.graft.retention.nowMillis", (5 * T).toString)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // flush OFF: the gate pins EXACT physical counts through the
-        // edit log, and a mid-wave flush moves a put into a segment
-        // where the put path's eager pruner can no longer see it — the
-        // over-cap version then survives physically (masked by
-        // read-time retention either way, reclaimed by the major), so
-        // the physical count would depend on task interleaving
-        s.sql(s"CREATE TABLE $cat.q256 (rowkey BINARY, version BIGINT, body BINARY) " +
-          s"TBLPROPERTIES('maxVersions'='2', 'ttlMillis'='${5 * T / 2}', " +
-          "'compactionThreshold'='0')")
-        val docs = Tables.documents(s, d)
-        val predA = col("doc_id") % 9 === 0
-        val predB = col("doc_id") % 10 === 5 && col("doc_id") % 9 =!= 0
-        val predC = col("doc_id") % 11 === 3 && col("doc_id") % 9 =!= 0 &&
-          col("doc_id") % 10 =!= 5
-        def rows(pred: org.apache.spark.sql.Column, versions: Seq[(Long, String)]) =
-          docs.filter(pred)
-            .select(col("doc_id"),
-              explode(array(versions.map { case (base, tag) =>
-                struct(lit(base).as("base"), lit(tag).as("tag")) }: _*)).as("g"))
-            .select(lit("q256").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              (col("g.base") + col("doc_id")).as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), g.tag)) as binary)").as("body"))
-        // A and B by bulk segment, C by the put path — the fold must
-        // rank across both store-file kinds
-        BulkLoad.writeCells(rows(predA, Seq((T, "R1"), (2 * T, "R2"), (3 * T, "R3"))), root)
-        BulkLoad.writeCells(rows(predB, Seq((T, "R1"), (2 * T, "R2"))), root)
-        rows(predC, Seq((13 * T / 5, "C26"), (3 * T, "C3"), (4 * T, "C4")))
-          .drop("tableName").write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q256").save()
-        val (na, nb, nc) =
-          (docs.filter(predA).count(), docs.filter(predB).count(), docs.filter(predC).count())
-        def view() = s.table(s"$cat.q256")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-        val before = view().collect().map(_.toString).sorted.toSeq
-        require(before.size == na + nb + 2 * nc,
-          s"rank/TTL/floor/cap fold: ${before.size} vs ${na + nb + 2 * nc}")
-        // A and B keep every seeded version on disk (bulk bypasses the
-        // put path); C's put path eagerly pruned its over-cap oldest
-        // at WRITE time (the W-side half of retention) — read-time
-        // masking owns everything the writer can't see (segments,
-        // later ALTERs, TTL)
-        require(s.table(s"$cat.`q256$$changes`").count() == 3 * na + 2 * nb + 2 * nc,
-          "hidden-but-unreclaimed versions stay physically present (edit log never masks)")
-        // F5 agrees cell-by-cell on a pinned key: doc-0 is class A
-        val store = graft.ingest.FileStore(root)
-        def cell(v: Long) = PushTableSink.CellPut("q256",
-          "doc-0".getBytes("UTF-8"), v, Array.emptyByteArray)
-        require(store.existsAt("q256", Seq(cell(3 * T), cell(2 * T), cell(T)), 5 * T)
-          == Seq(true, false, false),
-          "existence runs the same masked read path (hidden versions read absent)")
-        // the pushed aggregate composes: COUNT over the capped table
-        // runs the same retention fold on metadata — zero body bytes
-        graft.sources.CellsSource.filesOpened.set(0)
-        val aggN = s.sql(s"SELECT count(*) FROM $cat.q256").collect()(0).getLong(0)
-        require(aggN == before.size.toLong,
-          s"pushed COUNT must equal the masked view: $aggN vs ${before.size}")
-        require(graft.sources.CellsSource.filesOpened.get() == 0,
-          "the retention-aware pushed COUNT reads zero file contents")
-        Compaction.major(s, root, "q256", nowMillis = () => 5 * T)
-        val out = view().localCheckpoint()
-        require(out.collect().map(_.toString).sorted.toSeq == before,
-          "the major reclaims bytes, never changes answers — view identical across it")
-        out
-      } finally {
-        s.conf.unset("spark.graft.retention.nowMillis")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+      withConf(s, "spark.graft.retention.nowMillis" -> (5 * T).toString) {
+        withCatalogRoot(s) { (root, cat) =>
+          // flush OFF: the gate pins EXACT physical counts through the
+          // edit log, and a mid-wave flush moves a put into a segment
+          // where the put path's eager pruner can no longer see it — the
+          // over-cap version then survives physically (masked by
+          // read-time retention either way, reclaimed by the major), so
+          // the physical count would depend on task interleaving
+          s.sql(s"CREATE TABLE $cat.q256 (rowkey BINARY, version BIGINT, body BINARY) " +
+            s"TBLPROPERTIES('maxVersions'='2', 'ttlMillis'='${5 * T / 2}', " +
+            "'compactionThreshold'='0')")
+          val docs = Tables.documents(s, d)
+          val predA = col("doc_id") % 9 === 0
+          val predB = col("doc_id") % 10 === 5 && col("doc_id") % 9 =!= 0
+          val predC = col("doc_id") % 11 === 3 && col("doc_id") % 9 =!= 0 &&
+            col("doc_id") % 10 =!= 5
+          def rows(pred: org.apache.spark.sql.Column, versions: Seq[(Long, String)]) =
+            docs.filter(pred)
+              .select(col("doc_id"),
+                explode(array(versions.map { case (base, tag) =>
+                  struct(lit(base).as("base"), lit(tag).as("tag")) }: _*)).as("g"))
+              .select(lit("q256").as("tableName"),
+                expr(DocKey).as("rowkey"),
+                (col("g.base") + col("doc_id")).as("version"),
+                expr("cast(md5(concat(cast(doc_id as string), g.tag)) as binary)").as("body"))
+          // A and B by bulk segment, C by the put path — the fold must
+          // rank across both store-file kinds
+          BulkLoad.writeCells(rows(predA, Seq((T, "R1"), (2 * T, "R2"), (3 * T, "R3"))), root)
+          BulkLoad.writeCells(rows(predB, Seq((T, "R1"), (2 * T, "R2"))), root)
+          putCells(rows(predC, Seq((13 * T / 5, "C26"), (3 * T, "C3"), (4 * T, "C4")))
+            .drop("tableName"), root, "q256")
+          val (na, nb, nc) =
+            (docs.filter(predA).count(), docs.filter(predB).count(), docs.filter(predC).count())
+          def view() = cellStrings(s.table(s"$cat.q256"))
+          val before = view().collect().map(_.toString).sorted.toSeq
+          require(before.size == na + nb + 2 * nc,
+            s"rank/TTL/floor/cap fold: ${before.size} vs ${na + nb + 2 * nc}")
+          // A and B keep every seeded version on disk (bulk bypasses the
+          // put path); C's put path eagerly pruned its over-cap oldest
+          // at WRITE time (the W-side half of retention) — read-time
+          // masking owns everything the writer can't see (segments,
+          // later ALTERs, TTL)
+          require(s.table(s"$cat.`q256$$changes`").count() == 3 * na + 2 * nb + 2 * nc,
+            "hidden-but-unreclaimed versions stay physically present (edit log never masks)")
+          // F5 agrees cell-by-cell on a pinned key: doc-0 is class A
+          val store = graft.ingest.FileStore(root)
+          def cell(v: Long) = PushTableSink.CellPut("q256",
+            "doc-0".getBytes("UTF-8"), v, Array.emptyByteArray)
+          require(store.existsAt("q256", Seq(cell(3 * T), cell(2 * T), cell(T)), 5 * T)
+            == Seq(true, false, false),
+            "existence runs the same masked read path (hidden versions read absent)")
+          // the pushed aggregate composes: COUNT over the capped table
+          // runs the same retention fold on metadata — zero body bytes
+          graft.sources.CellsSource.filesOpened.set(0)
+          val aggN = s.sql(s"SELECT count(*) FROM $cat.q256").collect()(0).getLong(0)
+          require(aggN == before.size.toLong,
+            s"pushed COUNT must equal the masked view: $aggN vs ${before.size}")
+          require(graft.sources.CellsSource.filesOpened.get() == 0,
+            "the retention-aware pushed COUNT reads zero file contents")
+          Compaction.major(s, root, "q256", nowMillis = () => 5 * T)
+          val out = view().localCheckpoint()
+          require(out.collect().map(_.toString).sorted.toSeq == before,
+            "the major reclaims bytes, never changes answers — view identical across it")
+          out
+        }
       }
     },
 
@@ -2362,13 +1769,8 @@ object StoreLifecycle {
     // fired (flush counter moved). 100 TB: the policy check is one
     // listing per TOUCHED shard per batch; the flush reads only the
     // backlog it absorbs.
-    "q257_cells_auto_flush_policy" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q257-cells").toString
-      val ck = Files.createTempDirectory("graft-q257-ck").toString
-      val cat = "g257_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    "q257_cells_auto_flush_policy" -> { (s, d) => withRoots(2) { case Seq(root, ck) =>
+      withCatalog(s, root) { cat =>
         s.sql(s"CREATE TABLE $cat.q257 (rowkey BINARY, version BIGINT, body BINARY)")
         val threshold = 10L // the recorded default
         def maxBacklog(): Long = {
@@ -2377,11 +1779,8 @@ object StoreLifecycle {
           r.getLong(0)
         }
         def wave(g: Int): Unit = {
-          s.sql(s"""INSERT INTO $cat.q257
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'F', '$g')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % 13 = 0""")
+          insertDocs(s, d, s"$cat.q257", 13,
+            s"cast($g as bigint) * 1000000000 + cast(doc_id as bigint)", s"'F', '$g'")
           require(maxBacklog() <= threshold,
             s"wave $g left a put backlog above the threshold: ${maxBacklog()}")
         }
@@ -2389,37 +1788,26 @@ object StoreLifecycle {
         (1 to 3).foreach(wave)
         // the streaming-sink face rides the same hook: generation 4
         // arrives as a $changes replication drain into the same table
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 13 === 0)
-            .select(lit("q257s").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("4000000000 + doc_id").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'F', '4')) as binary)").as("body")),
-          root)
+        BulkLoad.writeCells(docCells(s, d, 13, "4000000000 + doc_id",
+          "cast(md5(concat(cast(doc_id as string), 'F', '4')) as binary)", table = "q257s"), root)
         val q = s.readStream.table(s"$cat.`q257s$$changes`")
           .filter(col("op") === "put").select("rowkey", "version", "body")
           .writeStream.format("graft-cells")
           .option("root", root).option("table", "q257")
           .option("checkpointLocation", ck)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+          .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
         require(maxBacklog() <= threshold,
           s"the streaming sink's puts flush too: ${maxBacklog()}")
         require(graft.ingest.FileStore.autoFlushes.get() > flushesBefore,
           "the hook must actually have fired (13-class keys share one region)")
-        val n13 = Tables.documents(s, d).filter(col("doc_id") % 13 === 0).count()
-        val out = s.table(s"$cat.q257")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
+        val n13 = docCount(s, d, 13)
+        val out = cellStrings(s.table(s"$cat.q257")).localCheckpoint()
         require(out.count() == 4 * n13,
           "flushing moves bytes between store-file kinds, never changes the view")
         out
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
       }
-    },
+    }},
 
     // AUTOMATIC REGION SPLIT (VERDICT r15 ask 1 — the
     // hbase.hregion.max.filesize lifecycle, closing autonomous
@@ -2442,82 +1830,63 @@ object StoreLifecycle {
     // agrees). 100 TB: one split rewrites one region once — the minor
     // compaction it was already owed — and the policy check is one
     // listing per touched shard on opted-in tables only.
-    "q261_cells_auto_region_split" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q261-cells").toString
-      val cat = "g261_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // split OFF at create — wave 1 calibrates the bound to the data
-        // scale so the gate splits O(log) times at every sf
-        s.sql(s"CREATE TABLE $cat.q261 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('compactionThreshold'='2')")
-        def wave(g: Int): Unit =
-          s.sql(s"""INSERT INTO $cat.q261
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'G', '$g')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % 7 = 0""")
-        wave(1)
-        // markers BEFORE any split: %21 keys mask their gen-1 — the
-        // split must carry them to whichever daughter owns the key
-        Tables.documents(s, d).filter(col("doc_id") % 21 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("1500000000 + doc_id").as("version"),
-            lit(Array.emptyByteArray).as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q261")
-          .option("tombstone", "true").save()
-        val store = FileStore(root)
-        val hot = Paths.get(root, "q261", "64")
-        val b1 = graft.ingest.RegionSplit.shardBytes(hot)
-        require(b1 > 0, "wave 1 must land in region 64 (keys lead with 'd')")
-        val table1 = s.table(s"$cat.q261")
-        val count1 = table1.count()
-        // (a) the MID-SPLIT pin: force one split NOW with a stage hook
-        // that re-counts through the connector at every protocol stage
-        // — the pushed COUNT walks filenames + segment indexes + the
-        // satellite, so this pins satellite-aware metadata reads too
-        graft.ingest.RegionSplit.probeHook = { stage =>
-          val n = s.table(s"$cat.q261").count()
-          require(n == count1, s"mid-split count diverged at $stage: $n != $count1")
-        }
-        val forced =
-          try graft.ingest.RegionSplit.maybeSplit(root, "q261", "64",
-            maxRegionBytes = math.max(2048L, b1 / 2), maxSplits = 1)
-          finally graft.ingest.RegionSplit.probeHook = _ => ()
-        require(forced == 1, s"the calibration split must fire once, got $forced")
-        require(s.table(s"$cat.q261").count() == count1, "post-split count diverged")
-        // (b) arm the automatic policy and drive the remaining waves
-        val bound = math.max(4096L, b1)
-        s.sql(s"ALTER TABLE $cat.q261 SET TBLPROPERTIES('maxRegionBytes' = '$bound')")
-        val splitsBefore = graft.ingest.RegionSplit.splitsDone.get()
-        wave(2); wave(3)
-        require(graft.ingest.RegionSplit.splitsDone.get() > splitsBefore,
-          "the put waves must split the hot region automatically")
-        val layout = store.splitsOf("q261")
-        require(layout.size > 257, s"layout must outgrow the forced split: ${layout.size}")
-        // (c) the policy's fixed point: every region ≤ bound, no debris
-        segShardDirs(root, "q261").foreach { sh =>
-          val b = graft.ingest.RegionSplit.shardBytes(Paths.get(root, "q261", sh))
-          require(b <= bound, s"region $sh holds $b > $bound after the waves")
-        }
-        require(!segFiles(root, "q261").exists(_.startsWith("_split")),
-          "no satellite/staging debris may survive completed splits")
-        // (e) point GET + F5 through the NEW layout
-        val probed = s.sql(s"SELECT count(*) AS n FROM $cat.q261 " +
-          "WHERE rowkey = cast('doc-7' as binary)").collect()(0).getLong(0)
-        require(probed == 3, s"doc-7 must serve its 3 generations post-split, got $probed")
-        require(store.exists("q261", Seq(graft.ingest.PushTableSink.CellPut(
-          "q261", "doc-7".getBytes("UTF-8"), 3000000007L, Array.emptyByteArray))) == Seq(true),
-          "F5 existence must route through the split layout")
-        // (d) rides the oracle: %21 keys' gen-1 stays masked everywhere
-        s.table(s"$cat.q261")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q261_cells_auto_region_split" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      // split OFF at create — wave 1 calibrates the bound to the data
+      // scale so the gate splits O(log) times at every sf
+      s.sql(s"CREATE TABLE $cat.q261 (rowkey BINARY, version BIGINT, body BINARY) " +
+        "TBLPROPERTIES('compactionThreshold'='2')")
+      def wave(g: Int): Unit = insertDocs(s, d, s"$cat.q261", 7,
+        s"cast($g as bigint) * 1000000000 + cast(doc_id as bigint)", s"'G', '$g'")
+      wave(1)
+      // markers BEFORE any split: %21 keys mask their gen-1 — the
+      // split must carry them to whichever daughter owns the key
+      putCells(docCells(s, d, 21, "1500000000 + doc_id", "X''"), root, "q261", Tombstone)
+      val store = FileStore(root)
+      val hot = Paths.get(root, "q261", "64")
+      val b1 = graft.ingest.RegionSplit.shardBytes(hot)
+      require(b1 > 0, "wave 1 must land in region 64 (keys lead with 'd')")
+      val table1 = s.table(s"$cat.q261")
+      val count1 = table1.count()
+      // (a) the MID-SPLIT pin: force one split NOW with a stage hook
+      // that re-counts through the connector at every protocol stage
+      // — the pushed COUNT walks filenames + segment indexes + the
+      // satellite, so this pins satellite-aware metadata reads too
+      graft.ingest.RegionSplit.probeHook = { stage =>
+        val n = s.table(s"$cat.q261").count()
+        require(n == count1, s"mid-split count diverged at $stage: $n != $count1")
+      }
+      val forced =
+        try graft.ingest.RegionSplit.maybeSplit(root, "q261", "64",
+          maxRegionBytes = math.max(2048L, b1 / 2), maxSplits = 1)
+        finally graft.ingest.RegionSplit.probeHook = _ => ()
+      require(forced == 1, s"the calibration split must fire once, got $forced")
+      require(s.table(s"$cat.q261").count() == count1, "post-split count diverged")
+      // (b) arm the automatic policy and drive the remaining waves
+      val bound = math.max(4096L, b1)
+      s.sql(s"ALTER TABLE $cat.q261 SET TBLPROPERTIES('maxRegionBytes' = '$bound')")
+      val splitsBefore = graft.ingest.RegionSplit.splitsDone.get()
+      wave(2); wave(3)
+      require(graft.ingest.RegionSplit.splitsDone.get() > splitsBefore,
+        "the put waves must split the hot region automatically")
+      val layout = store.splitsOf("q261")
+      require(layout.size > 257, s"layout must outgrow the forced split: ${layout.size}")
+      // (c) the policy's fixed point: every region ≤ bound, no debris
+      segShardDirs(root, "q261").foreach { sh =>
+        val b = graft.ingest.RegionSplit.shardBytes(Paths.get(root, "q261", sh))
+        require(b <= bound, s"region $sh holds $b > $bound after the waves")
+      }
+      require(!segFiles(root, "q261").exists(_.startsWith("_split")),
+        "no satellite/staging debris may survive completed splits")
+      // (e) point GET + F5 through the NEW layout
+      val probed = s.sql(s"SELECT count(*) AS n FROM $cat.q261 " +
+        "WHERE rowkey = cast('doc-7' as binary)").collect()(0).getLong(0)
+      require(probed == 3, s"doc-7 must serve its 3 generations post-split, got $probed")
+      require(store.exists("q261", Seq(graft.ingest.PushTableSink.CellPut(
+        "q261", "doc-7".getBytes("UTF-8"), 3000000007L, Array.emptyByteArray))) == Seq(true),
+        "F5 existence must route through the split layout")
+      // (d) rides the oracle: %21 keys' gen-1 stays masked everywhere
+      cellStrings(s.table(s"$cat.q261")).localCheckpoint()
+    }},
 
     // ATOMIC ROW VERBS, COMPLETED (VERDICT r16 ask 3 — HBase
     // checkAndDelete + append, closing the Table-API family beside
@@ -2542,76 +1911,70 @@ object StoreLifecycle {
     // verb — region-server work, never a scan; the gate's workload is
     // FIXED-size (bounded ids) so the scaling row must be flat, the
     // same contract q265 pins.
-    "q267_cells_check_delete_append" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q267-cells").toString
-      val cat = "g267_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q267 (rowkey BINARY, version BIGINT, body BINARY)")
-        val ids = Tables.documents(s, d)
-          .filter(col("doc_id") % 13 === 0 && col("doc_id") < 2000)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0))
-        require(ids.nonEmpty, "fixture ids must exist")
-        val rootB = root
-        // (a) per-key chains: seed by expect-absent CAS, then three
-        // appends IN ORDER — the whole chain inside one task, so the
-        // final body is exactly 'S<id>-x-y-z' for every key
-        s.sparkContext.parallelize(ids.toSeq, 32).foreach { id =>
-          val st = graft.ingest.FileStore(rootB)
-          val k = s"app-$id".getBytes("UTF-8")
-          require(st.checkAndPut("q267", k, None, s"S$id".getBytes("UTF-8")))
-          Seq("-x", "-y", "-z").foreach(t => st.append("q267", k, t.getBytes("UTF-8")))
-        }
-        // (b) the lost-update pin: 24 racing appends of distinct
-        // 4-byte tokens — every token present exactly once
-        val raceK = "race-app".getBytes("UTF-8")
-        s.sparkContext.parallelize(0 until 24, 24).foreach { i =>
-          graft.ingest.FileStore(rootB).append("q267", raceK,
-            f"<$i%02d>".getBytes("UTF-8")); ()
-        }
-        val raceBody = new String(
-          graft.ingest.FileStore(root).getLatest("q267", raceK).get._2, "UTF-8")
-        require(raceBody.length == 24 * 4, s"append lost updates: '$raceBody'")
-        (0 until 24).foreach(i => require(raceBody.contains(f"<$i%02d>"),
-          s"append dropped token $i: '$raceBody'"))
-        // (c) CAS-delete contention: exactly one of 32 wins
-        val cadK = "race-cad".getBytes("UTF-8")
-        require(graft.ingest.FileStore(root).checkAndPut("q267", cadK, None,
-          "init".getBytes("UTF-8")))
-        val wins = s.sparkContext.parallelize(1 to 32, 32).map { _ =>
-          if (graft.ingest.FileStore(rootB).checkAndDelete("q267", cadK,
-            Some("init".getBytes("UTF-8")))) 1 else 0
-        }.sum().toLong
-        require(wins == 1L, s"exactly one checkAndDelete must win, got $wins")
-        // (d) + the real delete workload: %26 rows go by value-checked
-        // delete; a WRONG expected on a survivor is refused
-        ids.filter(_ % 26 == 0).foreach { id =>
-          require(graft.ingest.FileStore(root).checkAndDelete("q267",
-            s"app-$id".getBytes("UTF-8"), Some(s"S$id-x-y-z".getBytes("UTF-8"))),
-            s"value-checked delete must apply for app-$id")
-        }
-        val survivor = ids.find(_ % 26 != 0).get
-        require(!graft.ingest.FileStore(root).checkAndDelete("q267",
-          s"app-$survivor".getBytes("UTF-8"), Some("wrong".getBytes("UTF-8"))),
-          "a mismatched expected must refuse the delete")
-        // (e) the SQL shell agrees: append('') echoes the body; a
-        // mismatched CALL check_and_delete reports applied=false
-        val echoed = s.sql(s"CALL $cat.append(table => 'q267', " +
-          s"rowkey => 'app-$survivor', value => '')").collect()(0).getString(0)
-        require(echoed == s"S$survivor-x-y-z", s"CALL append echoed '$echoed'")
-        require(!s.sql(s"CALL $cat.check_and_delete(table => 'q267', " +
-          s"rowkey => 'app-$survivor', expected => 'nope')")
-          .collect()(0).getBoolean(0), "CALL check_and_delete must refuse mismatch")
-        // the serving view: deleted rows masked, chains complete
-        s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str,
-                     cast(body as string) AS body
-              FROM $cat.`q267$$latest`
-              WHERE cast(rowkey as string) LIKE 'app-%'""")
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q267_cells_check_delete_append" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      s.sql(s"CREATE TABLE $cat.q267 (rowkey BINARY, version BIGINT, body BINARY)")
+      val ids = Tables.documents(s, d)
+        .filter(col("doc_id") % 13 === 0 && col("doc_id") < 2000)
+        .select(col("doc_id").cast("long")).collect().map(_.getLong(0))
+      require(ids.nonEmpty, "fixture ids must exist")
+      val rootB = root
+      // (a) per-key chains: seed by expect-absent CAS, then three
+      // appends IN ORDER — the whole chain inside one task, so the
+      // final body is exactly 'S<id>-x-y-z' for every key
+      s.sparkContext.parallelize(ids.toSeq, 32).foreach { id =>
+        val st = graft.ingest.FileStore(rootB)
+        val k = s"app-$id".getBytes("UTF-8")
+        require(st.checkAndPut("q267", k, None, s"S$id".getBytes("UTF-8")))
+        Seq("-x", "-y", "-z").foreach(t => st.append("q267", k, t.getBytes("UTF-8")))
+      }
+      // (b) the lost-update pin: 24 racing appends of distinct
+      // 4-byte tokens — every token present exactly once
+      val raceK = "race-app".getBytes("UTF-8")
+      s.sparkContext.parallelize(0 until 24, 24).foreach { i =>
+        graft.ingest.FileStore(rootB).append("q267", raceK,
+          f"<$i%02d>".getBytes("UTF-8")); ()
+      }
+      val raceBody = new String(
+        graft.ingest.FileStore(root).getLatest("q267", raceK).get._2, "UTF-8")
+      require(raceBody.length == 24 * 4, s"append lost updates: '$raceBody'")
+      (0 until 24).foreach(i => require(raceBody.contains(f"<$i%02d>"),
+        s"append dropped token $i: '$raceBody'"))
+      // (c) CAS-delete contention: exactly one of 32 wins
+      val cadK = "race-cad".getBytes("UTF-8")
+      require(graft.ingest.FileStore(root).checkAndPut("q267", cadK, None,
+        "init".getBytes("UTF-8")))
+      val wins = s.sparkContext.parallelize(1 to 32, 32).map { _ =>
+        if (graft.ingest.FileStore(rootB).checkAndDelete("q267", cadK,
+          Some("init".getBytes("UTF-8")))) 1 else 0
+      }.sum().toLong
+      require(wins == 1L, s"exactly one checkAndDelete must win, got $wins")
+      // (d) + the real delete workload: %26 rows go by value-checked
+      // delete; a WRONG expected on a survivor is refused
+      ids.filter(_ % 26 == 0).foreach { id =>
+        require(graft.ingest.FileStore(root).checkAndDelete("q267",
+          s"app-$id".getBytes("UTF-8"), Some(s"S$id-x-y-z".getBytes("UTF-8"))),
+          s"value-checked delete must apply for app-$id")
+      }
+      val survivor = ids.find(_ % 26 != 0).get
+      require(!graft.ingest.FileStore(root).checkAndDelete("q267",
+        s"app-$survivor".getBytes("UTF-8"), Some("wrong".getBytes("UTF-8"))),
+        "a mismatched expected must refuse the delete")
+      // (e) the SQL shell agrees: append('') echoes the body; a
+      // mismatched CALL check_and_delete reports applied=false
+      val echoed = s.sql(s"CALL $cat.append(table => 'q267', " +
+        s"rowkey => 'app-$survivor', value => '')").collect()(0).getString(0)
+      require(echoed == s"S$survivor-x-y-z", s"CALL append echoed '$echoed'")
+      require(!s.sql(s"CALL $cat.check_and_delete(table => 'q267', " +
+        s"rowkey => 'app-$survivor', expected => 'nope')")
+        .collect()(0).getBoolean(0), "CALL check_and_delete must refuse mismatch")
+      // the serving view: deleted rows masked, chains complete
+      s.sql(
+        s"""SELECT cast(rowkey as string) AS key_str,
+                   cast(body as string) AS body
+            FROM $cat.`q267$$latest`
+            WHERE cast(rowkey as string) LIKE 'app-%'""")
+        .localCheckpoint()
+    }},
 
     // IN-PLACE SNAPSHOT RESTORE + SNAPSHOT LISTING (VERDICT r16 ask 4
     // — HBase restore_snapshot / list_snapshots): restore swaps the
@@ -2633,67 +1996,54 @@ object StoreLifecycle {
     // after restore leaves the live view intact (inode independence).
     // 100 TB: restore is one link per store file + two renames —
     // metadata work, never data movement.
-    "q268_cells_restore_snapshot" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q268-cells").toString
-      val cat = "g268_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q268 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('compactionThreshold'='2')")
-        def wave(g: Int, mod: Int): Unit =
-          s.sql(s"""INSERT INTO $cat.q268
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'R', '$g')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % $mod = 0""")
-        wave(1, 7)
-        val n7 = Tables.documents(s, d).filter(col("doc_id") % 7 === 0).count()
-        def checksum(): Long =
-          s.table(s"$cat.q268").select(sum(crc32(concat_ws("|",
-            col("rowkey").cast("string"), col("version").cast("string"),
-            col("body").cast("string")))).as("c")).collect()(0).getLong(0)
-        val sum1 = checksum()
-        val pinned = s.sql(s"CALL $cat.snapshot(table => 'q268', name => 'r1')")
-          .collect()(0).getLong(0)
-        require(pinned > 0, "the snapshot must pin store files")
-        // (a) diverge the live table every way, then restore
-        wave(2, 7)
-        s.sql(s"DELETE FROM $cat.q268 WHERE rowkey = cast('doc-7' as binary) " +
-          "AND version = 1000000007")
-        s.sql(s"CALL $cat.compact_major(table => 'q268')")
-        require(s.table(s"$cat.q268").count() == 2 * n7 - 1 && checksum() != sum1,
-          "the live table must have diverged before restore")
-        // (d) the metadata face, pre-restore
-        val listed = s.sql(s"CALL $cat.list_snapshots()").collect()
-        require(listed.length == 1 && listed(0).getString(0) == "r1" &&
-          listed(0).getString(1) == "q268" && listed(0).getLong(2) == pinned,
-          s"list_snapshots must report the pin: ${listed.mkString(",")}")
-        val restored = s.sql(s"CALL $cat.restore_snapshot(name => 'r1')")
-          .collect()(0).getLong(0)
-        require(restored > 0, "restore must link files")
-        require(s.table(s"$cat.q268").count() == n7 && checksum() == sum1,
-          "restore must return the snapshot-time view checksum-identically")
-        // (b) repeatable: diverge again, restore again
-        wave(4, 35)
-        require(checksum() != sum1, "the second divergence must land")
-        s.sql(s"CALL $cat.restore_snapshot(name => 'r1')")
-        require(checksum() == sum1, "restore must be repeatable — links, not moves")
-        val listedAfter = s.sql(s"CALL $cat.list_snapshots()").collect()
-        require(listedAfter.length == 1 && listedAfter(0).getLong(2) == pinned,
-          "the snapshot survives its own restore with a stable file count")
-        // (c) the restored table is live; (e) the drop releases pins
-        wave(3, 21)
-        s.sql(s"CALL $cat.drop_snapshot(name => 'r1')")
-        val n21 = Tables.documents(s, d).filter(col("doc_id") % 21 === 0).count()
-        require(s.table(s"$cat.q268").count() == n7 + n21,
-          "the restored table must accept and serve new writes after the drop")
-        s.table(s"$cat.q268")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q268_cells_restore_snapshot" -> { (s, d) => withCatalogRoot(s) { (_, cat) =>
+      s.sql(s"CREATE TABLE $cat.q268 (rowkey BINARY, version BIGINT, body BINARY) " +
+        "TBLPROPERTIES('compactionThreshold'='2')")
+      def wave(g: Int, mod: Int): Unit = insertDocs(s, d, s"$cat.q268", mod,
+        s"cast($g as bigint) * 1000000000 + cast(doc_id as bigint)", s"'R', '$g'")
+      wave(1, 7)
+      val n7 = docCount(s, d, 7)
+      def checksum(): Long =
+        s.table(s"$cat.q268").select(sum(crc32(concat_ws("|",
+          col("rowkey").cast("string"), col("version").cast("string"),
+          col("body").cast("string")))).as("c")).collect()(0).getLong(0)
+      val sum1 = checksum()
+      val pinned = s.sql(s"CALL $cat.snapshot(table => 'q268', name => 'r1')")
+        .collect()(0).getLong(0)
+      require(pinned > 0, "the snapshot must pin store files")
+      // (a) diverge the live table every way, then restore
+      wave(2, 7)
+      s.sql(s"DELETE FROM $cat.q268 WHERE rowkey = cast('doc-7' as binary) " +
+        "AND version = 1000000007")
+      s.sql(s"CALL $cat.compact_major(table => 'q268')")
+      require(s.table(s"$cat.q268").count() == 2 * n7 - 1 && checksum() != sum1,
+        "the live table must have diverged before restore")
+      // (d) the metadata face, pre-restore
+      val listed = s.sql(s"CALL $cat.list_snapshots()").collect()
+      require(listed.length == 1 && listed(0).getString(0) == "r1" &&
+        listed(0).getString(1) == "q268" && listed(0).getLong(2) == pinned,
+        s"list_snapshots must report the pin: ${listed.mkString(",")}")
+      val restored = s.sql(s"CALL $cat.restore_snapshot(name => 'r1')")
+        .collect()(0).getLong(0)
+      require(restored > 0, "restore must link files")
+      require(s.table(s"$cat.q268").count() == n7 && checksum() == sum1,
+        "restore must return the snapshot-time view checksum-identically")
+      // (b) repeatable: diverge again, restore again
+      wave(4, 35)
+      require(checksum() != sum1, "the second divergence must land")
+      s.sql(s"CALL $cat.restore_snapshot(name => 'r1')")
+      require(checksum() == sum1, "restore must be repeatable — links, not moves")
+      val listedAfter = s.sql(s"CALL $cat.list_snapshots()").collect()
+      require(listedAfter.length == 1 && listedAfter(0).getLong(2) == pinned,
+        "the snapshot survives its own restore with a stable file count")
+      // (c) the restored table is live; (e) the drop releases pins
+      wave(3, 21)
+      s.sql(s"CALL $cat.drop_snapshot(name => 'r1')")
+      val n21 = docCount(s, d, 21)
+      require(s.table(s"$cat.q268").count() == n7 + n21,
+        "the restored table must accept and serve new writes after the drop")
+      cellStrings(s.table(s"$cat.q268")).localCheckpoint()
+    }},
 
     // STREAMING × REGION LIFECYCLE (VERDICT r16 ask 6 — the feed and
     // the sink racing live maintenance): a replication drain
@@ -2717,35 +2067,26 @@ object StoreLifecycle {
     // windows exist at any scale, which is why the coverage rules
     // (satellite expansion + read-time escalation) carry the
     // exactly-once contract instead of locks.
-    "q269_cells_stream_lifecycle_race" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q269-cells").toString
-      val ck = Files.createTempDirectory("graft-q269-ck").toString
-      val cat = "g269_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    "q269_cells_stream_lifecycle_race" -> { (s, d) => withRoots(2) { case Seq(root, ck) =>
+      withCatalog(s, root) { cat =>
         // source pre-split at 'doc-3'/'doc-6'; replica starts single-region
         s.sql(s"CREATE TABLE $cat.q269s (rowkey BINARY, version BIGINT, body BINARY) " +
           "TBLPROPERTIES('compactionThreshold'='2', " +
           "'splitPoints'='646f632d33,646f632d36')")
         s.sql(s"CREATE TABLE $cat.q269r (rowkey BINARY, version BIGINT, body BINARY) " +
           "TBLPROPERTIES('compactionThreshold'='2')")
-        def wave(g: Int): Unit =
-          s.sql(s"""INSERT INTO $cat.q269s
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'L', '$g')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % 8 = 0""")
+        def wave(g: Int): Unit = insertDocs(s, d, s"$cat.q269s", 8,
+          s"cast($g as bigint) * 1000000000 + cast(doc_id as bigint)", s"'L', '$g'")
         def drain(): Unit = {
           val q = s.readStream.table(s"$cat.`q269s$$changes`")
             .filter(col("op") === "put").select("rowkey", "version", "body")
             .writeStream.format("graft-cells")
             .option("root", root).option("table", "q269r")
             .option("checkpointLocation", ck)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+            .trigger(Trigger.AvailableNow()).start()
           q.awaitTermination()
         }
-        val n8 = Tables.documents(s, d).filter(col("doc_id") % 8 === 0).count()
+        val n8 = docCount(s, d, 8)
         wave(1); drain()
         require(s.table(s"$cat.q269r").count() == n8,
           "drain 1 must deliver exactly the seed window")
@@ -2791,19 +2132,11 @@ object StoreLifecycle {
         require(FileStore(root).splitsOf("q269r").size > layoutBefore,
           "the replica layout grew")
         // the contract: views equal both ways across every race
-        def view(t: String) = s.table(s"$cat.$t")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-        val src = view("q269s").localCheckpoint() // the q195 note
-        val rep = view("q269r").localCheckpoint()
-        require(rep.exceptAll(src).count() == 0 && src.exceptAll(rep).count() == 0,
-          "replica and source must agree after the lifecycle races")
-        rep
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
+        def view(t: String) = cellStrings(s.table(s"$cat.$t"))
+        sameBag(view("q269s"), view("q269r"),
+          "replica and source must agree after the lifecycle races")._2
       }
-    },
+    }},
 
     // REGION MERGE (HBase merge_region — the split's inverse, closing
     // the full region lifecycle): CALL cat.merge_regions folds a
@@ -2822,74 +2155,54 @@ object StoreLifecycle {
     // both ops; (e) point reads and F5 route through every layout.
     // 100 TB: a merge moves O(store files of one region) names — no
     // data bytes.
-    "q266_cells_region_merge" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q266-cells").toString
-      val cat = "g266_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+    "q266_cells_region_merge" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      // three regions pre-split at 'doc-3' and 'doc-6'
+      s.sql(s"CREATE TABLE $cat.q266 (rowkey BINARY, version BIGINT, body BINARY) " +
+        "TBLPROPERTIES('compactionThreshold'='2', " +
+        "'splitPoints'='646f632d33,646f632d36')")
+      (1 to 2).foreach { g =>
+        insertDocs(s, d, s"$cat.q266", 4,
+          s"cast($g as bigint) * 1000000000 + cast(doc_id as bigint)", s"'M', '$g'")
+      }
+      // a marker inside the region about to be absorbed ('doc-4…'
+      // sorts into ['doc-3','doc-6')): gen-1 of %44 keys masked
+      putCells(Tables.documents(s, d).filter(col("doc_id") % 44 === 0 && col("doc_id") % 10 === 4)
+        .select(expr(DocKey).as("rowkey"), expr("1500000000 + doc_id").as("version"),
+          lit(Array.emptyByteArray).as("body")), root, "q266", Tombstone)
+      val count0 = s.table(s"$cat.q266").count()
+      graft.ingest.RegionSplit.probeHook = { stage =>
+        val n = s.table(s"$cat.q266").count()
+        require(n == count0, s"mid-merge count diverged at $stage: $n != $count0")
+      }
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // three regions pre-split at 'doc-3' and 'doc-6'
-        s.sql(s"CREATE TABLE $cat.q266 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('compactionThreshold'='2', " +
-          "'splitPoints'='646f632d33,646f632d36')")
-        (1 to 2).foreach { g =>
-          s.sql(s"""INSERT INTO $cat.q266
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'M', '$g')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % 4 = 0""")
-        }
-        // a marker inside the region about to be absorbed ('doc-4…'
-        // sorts into ['doc-3','doc-6')): gen-1 of %44 keys masked
-        Tables.documents(s, d).filter(col("doc_id") % 44 === 0 && col("doc_id") % 10 === 4)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("1500000000 + doc_id").as("version"),
-            lit(Array.emptyByteArray).as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q266")
-          .option("tombstone", "true").save()
-        val count0 = s.table(s"$cat.q266").count()
-        graft.ingest.RegionSplit.probeHook = { stage =>
-          val n = s.table(s"$cat.q266").count()
-          require(n == count0, s"mid-merge count diverged at $stage: $n != $count0")
-        }
-        try {
-          val merged = s.sql(s"CALL $cat.merge_regions(table => 'q266', " +
-            "region => '646f632d33')").collect()(0).getBoolean(0)
-          require(merged, "the merge must apply")
-        } finally graft.ingest.RegionSplit.probeHook = _ => ()
-        val store = FileStore(root)
-        require(store.splitsOf("q266").size == 2,
-          s"boundary gone: ${store.splitsOf("q266").names}")
-        require(!Files.isDirectory(Paths.get(root, "q266", "646f632d33")),
-          "the absorbed directory is gone")
-        require(s.table(s"$cat.q266").count() == count0, "merging never changes the view")
-        // (d) the lifecycle round-trip: the fat merged region splits
-        // back automatically once the policy arms
-        val fatBytes = graft.ingest.RegionSplit.shardBytes(Paths.get(root, "q266", "-"))
-        require(fatBytes > 0)
-        s.sql(s"ALTER TABLE $cat.q266 SET TBLPROPERTIES('maxRegionBytes' = " +
-          s"'${math.max(2048L, fatBytes / 2)}')")
-        val splitsBefore = graft.ingest.RegionSplit.splitsDone.get()
-        // one more wave re-triggers the policy on the touched region
-        s.sql(s"""INSERT INTO $cat.q266
-            SELECT cast(concat('doc-', doc_id) as binary),
-                   cast(3000000000 + doc_id as bigint),
-                   cast(md5(concat(cast(doc_id as string), 'M3')) as binary)
-            FROM parquet.`$d/documents.parquet` WHERE doc_id % 4 = 0""")
-        require(graft.ingest.RegionSplit.splitsDone.get() > splitsBefore,
-          "the merged region must split back under the armed bound")
-        require(store.splitsOf("q266").size > 2, "the lifecycle round-trip grew the layout")
-        // (e) point read + F5 through the final layout
-        val probed = s.sql(s"SELECT count(*) AS n FROM $cat.q266 " +
-          "WHERE rowkey = cast('doc-4' as binary)").collect()(0).getLong(0)
-        require(probed == 3, s"doc-4 must serve its three generations, got $probed")
-        s.table(s"$cat.q266")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+        val merged = s.sql(s"CALL $cat.merge_regions(table => 'q266', " +
+          "region => '646f632d33')").collect()(0).getBoolean(0)
+        require(merged, "the merge must apply")
+      } finally graft.ingest.RegionSplit.probeHook = _ => ()
+      val store = FileStore(root)
+      require(store.splitsOf("q266").size == 2,
+        s"boundary gone: ${store.splitsOf("q266").names}")
+      require(!Files.isDirectory(Paths.get(root, "q266", "646f632d33")),
+        "the absorbed directory is gone")
+      require(s.table(s"$cat.q266").count() == count0, "merging never changes the view")
+      // (d) the lifecycle round-trip: the fat merged region splits
+      // back automatically once the policy arms
+      val fatBytes = graft.ingest.RegionSplit.shardBytes(Paths.get(root, "q266", "-"))
+      require(fatBytes > 0)
+      s.sql(s"ALTER TABLE $cat.q266 SET TBLPROPERTIES('maxRegionBytes' = " +
+        s"'${math.max(2048L, fatBytes / 2)}')")
+      val splitsBefore = graft.ingest.RegionSplit.splitsDone.get()
+      // one more wave re-triggers the policy on the touched region
+      insertDocs(s, d, s"$cat.q266", 4, "cast(3000000000 + doc_id as bigint)", "'M3'")
+      require(graft.ingest.RegionSplit.splitsDone.get() > splitsBefore,
+        "the merged region must split back under the armed bound")
+      require(store.splitsOf("q266").size > 2, "the lifecycle round-trip grew the layout")
+      // (e) point read + F5 through the final layout
+      val probed = s.sql(s"SELECT count(*) AS n FROM $cat.q266 " +
+        "WHERE rowkey = cast('doc-4' as binary)").collect()(0).getLong(0)
+      require(probed == 3, s"doc-4 must serve its three generations, got $probed")
+      cellStrings(s.table(s"$cat.q266")).localCheckpoint()
+    }},
 
     // ATOMIC ROW MUTATIONS (the last missing HBase verb class noted by
     // the r15 verdict — checkAndPut / increment): per-key compare-and-
@@ -2907,58 +2220,52 @@ object StoreLifecycle {
     // face serves the final value and history remains queryable.
     // 100 TB: atomic verbs are point reads + one put — region-server
     // work, never a scan.
-    "q265_cells_atomic_mutations" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q265-cells").toString
-      val cat = "g265_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q265 (rowkey BINARY, version BIGINT, body BINARY)")
-        // (a) the lost-update pin: per %11 doc under id 2000, 3
-        // increments of (doc_id % 5 + 1) land from a 32-way parallel
-        // job — the final counter must be exactly 3×(doc_id%5+1),
-        // every update kept. The id BOUND is the point: atomic verbs
-        // are per-row point ops whose cost must not scale with corpus
-        // size, so the gate drives a FIXED contention workload at
-        // every sf (the scaling row should be flat — that IS the
-        // 100 TB property)
-        val ids = Tables.documents(s, d)
-          .filter(col("doc_id") % 11 === 0 && col("doc_id") < 2000)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0))
-        val work = (for (id <- ids.toSeq; _ <- 1 to 3) yield (id, id % 5 + 1))
-        val rootB = root
-        s.sparkContext.parallelize(new scala.util.Random(42).shuffle(work), 32)
-          .foreach { case (id, delta) =>
-            graft.ingest.FileStore(rootB).increment("q265",
-              s"ctr-$id".getBytes("UTF-8"), delta)
-          }
-        // (b) CAS contention: exactly one of 32 concurrent winners
-        require(graft.ingest.FileStore(root).checkAndPut("q265",
-          "cas".getBytes("UTF-8"), None, 1L, "init".getBytes("UTF-8")),
-          "expect-absent must succeed on a fresh key")
-        val winners = s.sparkContext.parallelize(1 to 32, 32).map { i =>
-          if (graft.ingest.FileStore(rootB).checkAndPut("q265",
-            "cas".getBytes("UTF-8"), Some("init".getBytes("UTF-8")),
-            1000L + i, s"winner-$i".getBytes("UTF-8"))) 1 else 0
-        }.sum().toLong
-        require(winners == 1L, s"exactly one CAS must win, got $winners")
-        // (c) expect-absent now fails (the key exists)
-        require(!graft.ingest.FileStore(root).checkAndPut("q265",
-          "cas".getBytes("UTF-8"), None, 9999L, "x".getBytes("UTF-8")),
-          "expect-absent must fail on an existing key")
-        // (d) the SQL shell's face agrees: one more bump via CALL
-        val viaSql = s.sql(s"CALL $cat.increment(table => 'q265', " +
-          s"rowkey => 'ctr-${ids.min}', delta => 0)").collect()(0).getLong(0)
-        require(viaSql == 3 * (ids.min % 5 + 1), s"CALL increment read $viaSql")
-        // the counters as the serving view — big-endian 8-byte bodies
-        s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str,
-                     cast(conv(hex(body), 16, 10) as bigint) AS value
-              FROM $cat.`q265$$latest`
-              WHERE cast(rowkey as string) LIKE 'ctr-%'""")
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q265_cells_atomic_mutations" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      s.sql(s"CREATE TABLE $cat.q265 (rowkey BINARY, version BIGINT, body BINARY)")
+      // (a) the lost-update pin: per %11 doc under id 2000, 3
+      // increments of (doc_id % 5 + 1) land from a 32-way parallel
+      // job — the final counter must be exactly 3×(doc_id%5+1),
+      // every update kept. The id BOUND is the point: atomic verbs
+      // are per-row point ops whose cost must not scale with corpus
+      // size, so the gate drives a FIXED contention workload at
+      // every sf (the scaling row should be flat — that IS the
+      // 100 TB property)
+      val ids = Tables.documents(s, d)
+        .filter(col("doc_id") % 11 === 0 && col("doc_id") < 2000)
+        .select(col("doc_id").cast("long")).collect().map(_.getLong(0))
+      val work = (for (id <- ids.toSeq; _ <- 1 to 3) yield (id, id % 5 + 1))
+      val rootB = root
+      s.sparkContext.parallelize(new scala.util.Random(42).shuffle(work), 32)
+        .foreach { case (id, delta) =>
+          graft.ingest.FileStore(rootB).increment("q265",
+            s"ctr-$id".getBytes("UTF-8"), delta)
+        }
+      // (b) CAS contention: exactly one of 32 concurrent winners
+      require(graft.ingest.FileStore(root).checkAndPut("q265",
+        "cas".getBytes("UTF-8"), None, 1L, "init".getBytes("UTF-8")),
+        "expect-absent must succeed on a fresh key")
+      val winners = s.sparkContext.parallelize(1 to 32, 32).map { i =>
+        if (graft.ingest.FileStore(rootB).checkAndPut("q265",
+          "cas".getBytes("UTF-8"), Some("init".getBytes("UTF-8")),
+          1000L + i, s"winner-$i".getBytes("UTF-8"))) 1 else 0
+      }.sum().toLong
+      require(winners == 1L, s"exactly one CAS must win, got $winners")
+      // (c) expect-absent now fails (the key exists)
+      require(!graft.ingest.FileStore(root).checkAndPut("q265",
+        "cas".getBytes("UTF-8"), None, 9999L, "x".getBytes("UTF-8")),
+        "expect-absent must fail on an existing key")
+      // (d) the SQL shell's face agrees: one more bump via CALL
+      val viaSql = s.sql(s"CALL $cat.increment(table => 'q265', " +
+        s"rowkey => 'ctr-${ids.min}', delta => 0)").collect()(0).getLong(0)
+      require(viaSql == 3 * (ids.min % 5 + 1), s"CALL increment read $viaSql")
+      // the counters as the serving view — big-endian 8-byte bodies
+      s.sql(
+        s"""SELECT cast(rowkey as string) AS key_str,
+                   cast(conv(hex(body), 16, 10) as bigint) AS value
+            FROM $cat.`q265$$latest`
+            WHERE cast(rowkey as string) LIKE 'ctr-%'""")
+        .localCheckpoint()
+    }},
 
     // ZERO-COPY SNAPSHOT / CLONE (VERDICT r15 ask 5 — HBase
     // snapshot/clone_snapshot): `CALL cat.snapshot` hard-links the
@@ -2976,74 +2283,55 @@ object StoreLifecycle {
     // the clone still serves everything (inode independence). 100 TB:
     // a snapshot is one metadata link per store file — ~one per region
     // post-compaction — and zero data bytes.
-    "q264_cells_snapshot_clone" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q264-cells").toString
-      val cat = "g264_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q264 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('compactionThreshold'='2')")
-        def wave(g: Int): Unit =
-          s.sql(s"""INSERT INTO $cat.q264
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'S', '$g')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % 9 = 0""")
-        (1 to 3).foreach(wave)
-        val n9 = Tables.documents(s, d).filter(col("doc_id") % 9 === 0).count()
-        val pinned = s.sql(s"CALL $cat.snapshot(table => 'q264', name => 'snap1')")
+    "q264_cells_snapshot_clone" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      s.sql(s"CREATE TABLE $cat.q264 (rowkey BINARY, version BIGINT, body BINARY) " +
+        "TBLPROPERTIES('compactionThreshold'='2')")
+      def wave(g: Int): Unit = insertDocs(s, d, s"$cat.q264", 9,
+        s"cast($g as bigint) * 1000000000 + cast(doc_id as bigint)", s"'S', '$g'")
+      (1 to 3).foreach(wave)
+      val n9 = docCount(s, d, 9)
+      val pinned = s.sql(s"CALL $cat.snapshot(table => 'q264', name => 'snap1')")
+        .collect()(0).getLong(0)
+      require(pinned > 0, "the snapshot must pin store files")
+      def snapDf = readCells(s, graft.ingest.Snapshots.rootOf(root, "snap1"), "q264")
+      def checksum(df: org.apache.spark.sql.DataFrame): Long =
+        df.select(sum(crc32(concat_ws("|", col("rowkey").cast("string"),
+          col("version").cast("string"), col("body").cast("string")))).as("c"))
           .collect()(0).getLong(0)
-        require(pinned > 0, "the snapshot must pin store files")
-        def snapDf = s.read.format("graft-cells")
-          .option("root", graft.ingest.Snapshots.rootOf(root, "snap1"))
-          .option("table", "q264").load()
-        def checksum(df: org.apache.spark.sql.DataFrame): Long =
-          df.select(sum(crc32(concat_ws("|", col("rowkey").cast("string"),
-            col("version").cast("string"), col("body").cast("string")))).as("c"))
-            .collect()(0).getLong(0)
-        val snapSum0 = checksum(snapDf)
-        require(snapDf.count() == 3 * n9, "the snapshot pins the full 3-generation view")
-        // (a) GC the LIVE table hard: cap 1 + major — live keeps one
-        // version per key, the snapshot must not move a byte
-        s.sql(s"ALTER TABLE $cat.q264 SET TBLPROPERTIES('maxVersions' = '1')")
-        s.sql(s"CALL $cat.compact_major(table => 'q264')")
-        require(s.table(s"$cat.q264").count() == n9, "the major GC'd the live table")
-        require(snapDf.count() == 3 * n9 && checksum(snapDf) == snapSum0,
-          "the snapshot survives the major + retention sweep byte-identically")
-        // (b) vacuum never collects pinned files
-        s.sql(s"CALL $cat.vacuum(older_than_ms => 0)")
-        require(checksum(snapDf) == snapSum0, "vacuum must not touch pinned files")
-        // (c) the clone: full pre-GC content under the snapshot-time DDL
-        s.sql(s"CALL $cat.clone_snapshot(name => 'snap1', new_table => 'q264c')")
-        require(s.table(s"$cat.q264c").count() == 3 * n9, "the clone is the pinned view")
-        val cloneSpec = PushTableSink.TableSpec.fromJson(
-          FileStore(root).readSpecJson("q264c").get)
-        require(cloneSpec.maxVersions == Int.MaxValue && cloneSpec.compactionThreshold == 2,
-          "the clone carries the SNAPSHOT-time DDL, not the later ALTER")
-        // (d) independence: mutate the CLONE only
-        s.sql(s"DELETE FROM $cat.q264c WHERE rowkey = cast('doc-9' as binary) " +
-          "AND version <= 2000000009")
-        s.sql(s"""INSERT INTO $cat.q264c
-            SELECT cast(concat('doc-', doc_id) as binary),
-                   cast(9000000000 + doc_id as bigint),
-                   cast(md5(concat(cast(doc_id as string), 'S9')) as binary)
-            FROM parquet.`$d/documents.parquet` WHERE doc_id % 36 = 0""")
-        require(s.table(s"$cat.q264").count() == n9,
-          "clone mutations must not touch the live table")
-        require(checksum(snapDf) == snapSum0,
-          "clone mutations must not touch the snapshot")
-        // (e) dropping the snapshot releases pins, never clone content
-        s.sql(s"CALL $cat.drop_snapshot(name => 'snap1')")
-        val n36 = Tables.documents(s, d).filter(col("doc_id") % 36 === 0).count()
-        require(s.table(s"$cat.q264c").count() == 3 * n9 - 2 + n36,
-          "the clone serves everything after the snapshot is dropped")
-        s.table(s"$cat.q264c")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+      val snapSum0 = checksum(snapDf)
+      require(snapDf.count() == 3 * n9, "the snapshot pins the full 3-generation view")
+      // (a) GC the LIVE table hard: cap 1 + major — live keeps one
+      // version per key, the snapshot must not move a byte
+      s.sql(s"ALTER TABLE $cat.q264 SET TBLPROPERTIES('maxVersions' = '1')")
+      s.sql(s"CALL $cat.compact_major(table => 'q264')")
+      require(s.table(s"$cat.q264").count() == n9, "the major GC'd the live table")
+      require(snapDf.count() == 3 * n9 && checksum(snapDf) == snapSum0,
+        "the snapshot survives the major + retention sweep byte-identically")
+      // (b) vacuum never collects pinned files
+      s.sql(s"CALL $cat.vacuum(older_than_ms => 0)")
+      require(checksum(snapDf) == snapSum0, "vacuum must not touch pinned files")
+      // (c) the clone: full pre-GC content under the snapshot-time DDL
+      s.sql(s"CALL $cat.clone_snapshot(name => 'snap1', new_table => 'q264c')")
+      require(s.table(s"$cat.q264c").count() == 3 * n9, "the clone is the pinned view")
+      val cloneSpec = PushTableSink.TableSpec.fromJson(
+        FileStore(root).readSpecJson("q264c").get)
+      require(cloneSpec.maxVersions == Int.MaxValue && cloneSpec.compactionThreshold == 2,
+        "the clone carries the SNAPSHOT-time DDL, not the later ALTER")
+      // (d) independence: mutate the CLONE only
+      s.sql(s"DELETE FROM $cat.q264c WHERE rowkey = cast('doc-9' as binary) " +
+        "AND version <= 2000000009")
+      insertDocs(s, d, s"$cat.q264c", 36, "cast(9000000000 + doc_id as bigint)", "'S9'")
+      require(s.table(s"$cat.q264").count() == n9,
+        "clone mutations must not touch the live table")
+      require(checksum(snapDf) == snapSum0,
+        "clone mutations must not touch the snapshot")
+      // (e) dropping the snapshot releases pins, never clone content
+      s.sql(s"CALL $cat.drop_snapshot(name => 'snap1')")
+      val n36 = docCount(s, d, 36)
+      require(s.table(s"$cat.q264c").count() == 3 * n9 - 2 + n36,
+        "the clone serves everything after the snapshot is dropped")
+      cellStrings(s.table(s"$cat.q264c")).localCheckpoint()
+    }},
 
     // REVERSE SCAN (VERDICT r15 ask 4 — HBase Scan.setReversed):
     // `ORDER BY rowkey DESC [, version DESC] LIMIT k` pushes as a
@@ -3058,52 +2346,38 @@ object StoreLifecycle {
     // LIMIT hash. The single-column shape truncates at key-group
     // boundaries (bounded superset; Spark's retained TakeOrdered
     // finalizes — pushes are partial, truncation is I/O savings only).
-    "q263_cells_reverse_scan" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q263-cells").toString
-      val cat = "g263_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // three versions per %6 key, ONE bulk segment per region (the
-        // compacted steady state the reverse walk rides)
-        graft.ingest.FileStore(root).ensureTable("q263",
-          PushTableSink.TableSpec(compactionThreshold = 0))
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 6 === 0)
-            .select(col("doc_id"), explode(array(lit(1), lit(2), lit(3))).as("g"))
-            .select(lit("q263").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("doc_id * 4 + g").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'Z', cast(g as string))) as binary)").as("body")),
-          root)
-        // the LAST key in DESC order gets a bound marker at its g=3
-        // version: the reverse walk must mask it and serve g<3 plus
-        // the next keys instead — pinned through the oracle hash
-        val lastId = Tables.documents(s, d).filter(col("doc_id") % 6 === 0)
-          .agg(max(expr("concat('doc-', doc_id)"))).collect()(0).getString(0)
-        val lastMaxV = s.sql(s"SELECT max(version) AS v FROM $cat.q263 " +
-          s"WHERE rowkey = cast('$lastId' as binary)").collect()(0).getLong(0)
-        s.sql(s"DELETE FROM $cat.q263 WHERE rowkey = cast('$lastId' as binary) " +
-          s"AND version = $lastMaxV")
-        graft.sources.CellsSource.cappedRowsEmitted.set(0)
-        val q = s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str, version
-              FROM $cat.q263 ORDER BY rowkey DESC, version DESC LIMIT 10""")
-        val desc = q.queryExecution.optimizedPlan.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            r.scan.description()
-        }.getOrElse("")
-        require(desc.contains("topK=10 rev"), s"the reverse top-N must push: $desc")
-        val out = q.localCheckpoint()
-        val total = s.table(s"$cat.q263").count()
-        val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
-        // every 'doc-*' key shares region 64, so ONE shard serves the
-        // reverse walk: the exact two-column shape stops at exactly k
-        require(emitted > 0 && emitted <= 10 && emitted < total,
-          s"reverse truncation must bound emission: $emitted of $total rows")
-        out
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q263_cells_reverse_scan" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      // three versions per %6 key, ONE bulk segment per region (the
+      // compacted steady state the reverse walk rides)
+      graft.ingest.FileStore(root).ensureTable("q263",
+        PushTableSink.TableSpec(compactionThreshold = 0))
+      BulkLoad.writeCells(docCells(s, d, 6, "doc_id * 4 + g",
+        "cast(md5(concat(cast(doc_id as string), 'Z', cast(g as string))) as binary)",
+        table = "q263", gen = explode(array(lit(1), lit(2), lit(3))).as("g")), root)
+      // the LAST key in DESC order gets a bound marker at its g=3
+      // version: the reverse walk must mask it and serve g<3 plus
+      // the next keys instead — pinned through the oracle hash
+      val lastId = Tables.documents(s, d).filter(col("doc_id") % 6 === 0)
+        .agg(max(expr("concat('doc-', doc_id)"))).collect()(0).getString(0)
+      val lastMaxV = s.sql(s"SELECT max(version) AS v FROM $cat.q263 " +
+        s"WHERE rowkey = cast('$lastId' as binary)").collect()(0).getLong(0)
+      s.sql(s"DELETE FROM $cat.q263 WHERE rowkey = cast('$lastId' as binary) " +
+        s"AND version = $lastMaxV")
+      graft.sources.CellsSource.cappedRowsEmitted.set(0)
+      val q = s.sql(
+        s"""SELECT cast(rowkey as string) AS key_str, version
+            FROM $cat.q263 ORDER BY rowkey DESC, version DESC LIMIT 10""")
+      val desc = scanDesc(q)
+      require(desc.contains("topK=10 rev"), s"the reverse top-N must push: $desc")
+      val out = q.localCheckpoint()
+      val total = s.table(s"$cat.q263").count()
+      val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
+      // every 'doc-*' key shares region 64, so ONE shard serves the
+      // reverse walk: the exact two-column shape stops at exactly k
+      require(emitted > 0 && emitted <= 10 && emitted < total,
+        s"reverse truncation must bound emission: $emitted of $total rows")
+      out
+    }},
 
     // CTAS / RTAS (VERDICT r15 ask 3 — StagingTableCatalog): `CREATE
     // TABLE … AS SELECT` and `REPLACE TABLE … AS SELECT` land through
@@ -3120,81 +2394,72 @@ object StoreLifecycle {
     // unreachable by its own source scan; (d) a poisoned RTAS leaves
     // the old table byte-intact. 100 TB: the staged write is the same
     // distributed cell-put path as any load; commit is O(1) renames.
-    "q262_cells_ctas_rtas" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q262-cells").toString
-      val cat = "g262_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // (a) the poisoned CTAS: one in ~50 rows raises — the job dies
-        // mid-write, the staged generation aborts, NO table appears
-        val poisoned =
-          try {
-            s.sql(s"""CREATE TABLE $cat.q262 TBLPROPERTIES('compactionThreshold'='0')
-                AS SELECT cast(concat('doc-', doc_id) as binary) AS rowkey,
-                          cast(1000000000 + doc_id as bigint) AS version,
-                          cast(IF(doc_id % 50 = 49, raise_error('q262 poison'),
-                                  md5(concat(cast(doc_id as string), 'C1'))) as binary) AS body
-                FROM parquet.`$d/documents.parquet`""")
-            false
-          } catch { case _: Exception => true }
-        require(poisoned, "the poisoned CTAS must fail")
-        require(!Files.isDirectory(Paths.get(root, "q262")),
-          "a crashed CTAS must leave NO table")
-        require(s.sql(s"SHOW TABLES IN $cat").collect().isEmpty,
-          "nothing may be listed after the failed CTAS")
-        val stagingDir = Paths.get(root, "_ctas_staging")
-        val orphans =
-          if (!Files.isDirectory(stagingDir)) 0
-          else { val l = Files.list(stagingDir)
-                 try l.iterator().asScala.size finally l.close() }
-        require(orphans == 0, s"abort must sweep its staged generation, found $orphans")
-        // (b) the real CTAS: DDL properties + a pre-split layout ride
-        // into the committed table ('doc-5…' keys go to the second
-        // region — hex 646f632d35 = "doc-5")
-        s.sql(s"""CREATE TABLE $cat.q262
-            TBLPROPERTIES('compactionThreshold'='0', 'maxVersions'='5',
-                          'splitPoints'='646f632d35')
-            AS SELECT cast(concat('doc-', doc_id) as binary) AS rowkey,
-                      cast(1000000000 + doc_id as bigint) AS version,
-                      cast(md5(concat(cast(doc_id as string), 'C1')) as binary) AS body
-            FROM parquet.`$d/documents.parquet` WHERE doc_id % 8 = 0""")
-        val store = FileStore(root)
-        val layout = store.splitsOf("q262")
-        require(layout.size == 2 && layout.names == Vector("-", "646f632d35"),
-          s"the pre-split layout must commit with the table: ${layout.names}")
-        val spec = PushTableSink.TableSpec.fromJson(store.readSpecJson("q262").get)
-        require(spec.maxVersions == 5 && spec.compactionThreshold == 0,
-          "TBLPROPERTIES must commit with the table")
-        Seq("-", "646f632d35").foreach { sh =>
-          val l = Files.list(Paths.get(root, "q262", sh))
-          val n = try l.iterator().asScala.size finally l.close()
-          require(n > 0, s"region $sh must hold cells (placement honors the CTAS layout)")
-        }
-        val n8 = Tables.documents(s, d).filter(col("doc_id") % 8 === 0).count()
-        require(s.table(s"$cat.q262").count() == n8, "CTAS content = the query")
-        // (c) self-referential RTAS: the source scan reads the OLD
-        // generation for the whole job (the staged dir is invisible)
-        s.sql(s"""REPLACE TABLE $cat.q262 TBLPROPERTIES('compactionThreshold'='0')
-            AS SELECT rowkey, version + 1000000000 AS version, body FROM $cat.q262""")
-        require(s.table(s"$cat.q262").count() == n8,
-          "RTAS over itself must see the old generation exactly once")
-        // (d) a poisoned RTAS leaves the old table intact
-        val poisoned2 =
-          try {
-            s.sql(s"""REPLACE TABLE $cat.q262 TBLPROPERTIES('compactionThreshold'='0')
-                AS SELECT rowkey, version,
-                          cast(raise_error('q262 rtas poison') as binary) AS body
-                FROM $cat.q262""")
-            false
-          } catch { case _: Exception => true }
-        require(poisoned2, "the poisoned RTAS must fail")
-        s.table(s"$cat.q262")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q262_cells_ctas_rtas" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      // (a) the poisoned CTAS: one in ~50 rows raises — the job dies
+      // mid-write, the staged generation aborts, NO table appears
+      val poisoned =
+        try {
+          s.sql(s"""CREATE TABLE $cat.q262 TBLPROPERTIES('compactionThreshold'='0')
+              AS SELECT cast(concat('doc-', doc_id) as binary) AS rowkey,
+                        cast(1000000000 + doc_id as bigint) AS version,
+                        cast(IF(doc_id % 50 = 49, raise_error('q262 poison'),
+                                md5(concat(cast(doc_id as string), 'C1'))) as binary) AS body
+              FROM parquet.`$d/documents.parquet`""")
+          false
+        } catch { case _: Exception => true }
+      require(poisoned, "the poisoned CTAS must fail")
+      require(!Files.isDirectory(Paths.get(root, "q262")),
+        "a crashed CTAS must leave NO table")
+      require(s.sql(s"SHOW TABLES IN $cat").collect().isEmpty,
+        "nothing may be listed after the failed CTAS")
+      val stagingDir = Paths.get(root, "_ctas_staging")
+      val orphans =
+        if (!Files.isDirectory(stagingDir)) 0
+        else { val l = Files.list(stagingDir)
+               try l.iterator().asScala.size finally l.close() }
+      require(orphans == 0, s"abort must sweep its staged generation, found $orphans")
+      // (b) the real CTAS: DDL properties + a pre-split layout ride
+      // into the committed table ('doc-5…' keys go to the second
+      // region — hex 646f632d35 = "doc-5")
+      s.sql(s"""CREATE TABLE $cat.q262
+          TBLPROPERTIES('compactionThreshold'='0', 'maxVersions'='5',
+                        'splitPoints'='646f632d35')
+          AS SELECT cast(concat('doc-', doc_id) as binary) AS rowkey,
+                    cast(1000000000 + doc_id as bigint) AS version,
+                    cast(md5(concat(cast(doc_id as string), 'C1')) as binary) AS body
+          FROM parquet.`$d/documents.parquet` WHERE doc_id % 8 = 0""")
+      val store = FileStore(root)
+      val layout = store.splitsOf("q262")
+      require(layout.size == 2 && layout.names == Vector("-", "646f632d35"),
+        s"the pre-split layout must commit with the table: ${layout.names}")
+      val spec = PushTableSink.TableSpec.fromJson(store.readSpecJson("q262").get)
+      require(spec.maxVersions == 5 && spec.compactionThreshold == 0,
+        "TBLPROPERTIES must commit with the table")
+      Seq("-", "646f632d35").foreach { sh =>
+        val l = Files.list(Paths.get(root, "q262", sh))
+        val n = try l.iterator().asScala.size finally l.close()
+        require(n > 0, s"region $sh must hold cells (placement honors the CTAS layout)")
+      }
+      val n8 = docCount(s, d, 8)
+      require(s.table(s"$cat.q262").count() == n8, "CTAS content = the query")
+      // (c) self-referential RTAS: the source scan reads the OLD
+      // generation for the whole job (the staged dir is invisible)
+      s.sql(s"""REPLACE TABLE $cat.q262 TBLPROPERTIES('compactionThreshold'='0')
+          AS SELECT rowkey, version + 1000000000 AS version, body FROM $cat.q262""")
+      require(s.table(s"$cat.q262").count() == n8,
+        "RTAS over itself must see the old generation exactly once")
+      // (d) a poisoned RTAS leaves the old table intact
+      val poisoned2 =
+        try {
+          s.sql(s"""REPLACE TABLE $cat.q262 TBLPROPERTIES('compactionThreshold'='0')
+              AS SELECT rowkey, version,
+                        cast(raise_error('q262 rtas poison') as binary) AS body
+              FROM $cat.q262""")
+          false
+        } catch { case _: Exception => true }
+      require(poisoned2, "the poisoned RTAS must fail")
+      cellStrings(s.table(s"$cat.q262")).localCheckpoint()
+    }},
 
     // $VERSIONS PUSHDOWN (VERDICT r14 ask 4): the inventory face
     // prunes like every other face — a `shard =` predicate prunes at
@@ -3208,61 +2473,36 @@ object StoreLifecycle {
     // not plan text) and its plan advertises shards=1; the per-kind
     // emitted fold matches DuckDB; q246's unfiltered inventory hash
     // (still in the registry) pins that pushdown changed nothing.
-    "q258_cells_versions_pushdown" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q258-cells").toString
-      val cat = "g258_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        // raw put backlog (threshold 0) — the inventory counts files
-        graft.ingest.FileStore(root).ensureTable("q258",
-          PushTableSink.TableSpec(compactionThreshold = 0))
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 6 === 0)
-            .select(lit("q258").as("tableName"),
-              expr("unhex(md5(concat('doc-', doc_id)))").as("rowkey"),
-              expr("doc_id * 2 + 1").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'V')) as binary)").as("body")),
-          root)
-        Tables.documents(s, d).filter(col("doc_id") % 30 === 0)
-          .select(expr("unhex(md5(concat('doc-', doc_id)))").as("rowkey"),
-            expr("doc_id * 2 + 2").as("version"),
-            lit("x".getBytes("UTF-8")).as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q258").save()
-        Tables.documents(s, d).filter(col("doc_id") % 60 === 0)
-          .select(expr("unhex(md5(concat('doc-', doc_id)))").as("rowkey"),
-            expr("doc_id * 2 + 1").as("version"),
-            lit(Array.emptyByteArray).as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q258")
-          .option("tombstone", "true").save()
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // the single-shard probe: doc-0 is a %6 key, its digest's
-        // first byte IS its region
-        val shardName = org.apache.commons.codec.digest.DigestUtils
-          .md5Hex("doc-0").substring(0, 2)
-        graft.sources.CellsVersions.shardsListed.set(0)
-        val probe = s.sql(s"SELECT count(*) AS n FROM $cat.`q258$$versions` " +
-          s"WHERE shard = '$shardName'")
-        val desc = probe.queryExecution.optimizedPlan.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            r.scan.description()
-        }.getOrElse("")
-        require(desc.contains("shards=1"), s"the shard predicate must reach the scan: $desc")
-        require(probe.collect()(0).getLong(0) > 0, "the probed region holds files")
-        require(graft.sources.CellsVersions.shardsListed.get() == 1,
-          s"ONE directory listed out of the whole region set: ${graft.sources.CellsVersions.shardsListed.get()}")
-        // the per-kind fold under a pushed kind filter
-        val out = s.sql(
-          s"""SELECT kind, count(*) AS files, min(min_version) AS min_v,
-                     max(max_version) AS max_v
-              FROM $cat.`q258$$versions`
-              WHERE kind IN ('put', 'marker_bound') GROUP BY kind""")
-          .localCheckpoint()
-        require(out.count() >= 1, "at least one backlog kind present")
-        out
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q258_cells_versions_pushdown" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      // raw put backlog (threshold 0) — the inventory counts files
+      graft.ingest.FileStore(root).ensureTable("q258",
+        PushTableSink.TableSpec(compactionThreshold = 0))
+      BulkLoad.writeCells(docCells(s, d, 6, "doc_id * 2 + 1",
+        "cast(md5(concat(cast(doc_id as string), 'V')) as binary)", table = "q258", key = Md5DocKey), root)
+      putCells(docCells(s, d, 30, "doc_id * 2 + 2", "X'78'", key = Md5DocKey), root, "q258")
+      putCells(docCells(s, d, 60, "doc_id * 2 + 1", "X''", key = Md5DocKey), root, "q258", Tombstone)
+      // the single-shard probe: doc-0 is a %6 key, its digest's
+      // first byte IS its region
+      val shardName = org.apache.commons.codec.digest.DigestUtils
+        .md5Hex("doc-0").substring(0, 2)
+      graft.sources.CellsVersions.shardsListed.set(0)
+      val probe = s.sql(s"SELECT count(*) AS n FROM $cat.`q258$$versions` " +
+        s"WHERE shard = '$shardName'")
+      val desc = scanDesc(probe)
+      require(desc.contains("shards=1"), s"the shard predicate must reach the scan: $desc")
+      require(probe.collect()(0).getLong(0) > 0, "the probed region holds files")
+      require(graft.sources.CellsVersions.shardsListed.get() == 1,
+        s"ONE directory listed out of the whole region set: ${graft.sources.CellsVersions.shardsListed.get()}")
+      // the per-kind fold under a pushed kind filter
+      val out = s.sql(
+        s"""SELECT kind, count(*) AS files, min(min_version) AS min_v,
+                   max(max_version) AS max_v
+            FROM $cat.`q258$$versions`
+            WHERE kind IN ('put', 'marker_bound') GROUP BY kind""")
+        .localCheckpoint()
+      require(out.count() >= 1, "at least one backlog kind present")
+      out
+    }},
 
     // TOP-N, VERSION-DESC SHAPE (VERDICT r14 ask 5): `ORDER BY rowkey
     // ASC, version DESC LIMIT k` — the HBase Get.readVersions(k)
@@ -3277,39 +2517,25 @@ object StoreLifecycle {
     // invariants: the scan carries `topK=10 vdesc`; the capped readers
     // emitted ≥ 10 but ≤ 12 rows (3 complete 4-version key groups)
     // out of a 4-versions-per-key table — far under the row count.
-    "q259_cells_latest_k_versions" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q259-cells").toString
-      val cat = "g259_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        // one bulk load ⇒ one sorted segment per shard (compacted form)
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 5 === 0)
-            .select(col("doc_id"), explode(array(lit(1), lit(2), lit(3), lit(4))).as("g"))
-            .select(lit("q259").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("doc_id * 8 + g").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'K', cast(g as string))) as binary)").as("body")),
-          root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val total = 4 * Tables.documents(s, d).filter(col("doc_id") % 5 === 0).count()
-        graft.sources.CellsSource.cappedRowsEmitted.set(0)
-        val top = s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str, version
-              FROM $cat.q259 ORDER BY rowkey ASC, version DESC LIMIT 10""")
-        val desc = top.queryExecution.optimizedPlan.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            r.scan.description()
-        }.getOrElse("")
-        require(desc.contains("topK=10 vdesc"),
-          s"the DESC-version top-N must reach the scan: $desc")
-        val out = top.localCheckpoint()
-        val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
-        require(emitted >= 10 && emitted <= 12 && emitted < total,
-          s"key-group truncation: emitted $emitted of $total (expect 10..12)")
-        out
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q259_cells_latest_k_versions" -> { (s, d) => withCatalogRoot(s) { (root, cat) =>
+      // one bulk load ⇒ one sorted segment per shard (compacted form)
+      BulkLoad.writeCells(docCells(s, d, 5, "doc_id * 8 + g",
+        "cast(md5(concat(cast(doc_id as string), 'K', cast(g as string))) as binary)",
+        table = "q259", gen = explode(array(lit(1), lit(2), lit(3), lit(4))).as("g")), root)
+      val total = 4 * docCount(s, d, 5)
+      graft.sources.CellsSource.cappedRowsEmitted.set(0)
+      val top = s.sql(
+        s"""SELECT cast(rowkey as string) AS key_str, version
+            FROM $cat.q259 ORDER BY rowkey ASC, version DESC LIMIT 10""")
+      val desc = scanDesc(top)
+      require(desc.contains("topK=10 vdesc"),
+        s"the DESC-version top-N must reach the scan: $desc")
+      val out = top.localCheckpoint()
+      val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
+      require(emitted >= 10 && emitted <= 12 && emitted < total,
+        s"key-group truncation: emitted $emitted of $total (expect 10..12)")
+      out
+    }},
 
     // STREAMING PROVENANCE (VERDICT r14 ask 3): Spark's streaming exec
     // does not thread DSv2 metadata columns (spec-pinned), so the CDC
@@ -3325,21 +2551,11 @@ object StoreLifecycle {
     // names a serving file, puts attribute to segments, markers to
     // marker files. The emitted (key, version, op, _kind) log hashes
     // against DuckDB.
-    "q260_cells_stream_provenance" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q260-cells").toString
-      val ck = Files.createTempDirectory("graft-q260-ck").toString
-      val outDir = Files.createTempDirectory("graft-q260-out").toString + "/rows"
-      val cat = "g260_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        def seed(g: Int): Unit = BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 14 === 0)
-            .select(lit("q260").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr(s"$g * 1000000000 + doc_id").as("version"),
-              expr(s"cast(md5(concat(cast(doc_id as string), 'P', '$g')) as binary)").as("body")),
-          root)
+    "q260_cells_stream_provenance" -> { (s, d) => withRoots(3) { case Seq(root, ck, outParent) =>
+      val outDir = outParent + "/rows"
+      withCatalog(s, root) { cat =>
+        def seed(g: Int): Unit = BulkLoad.writeCells(docCells(s, d, 14, s"$g * 1000000000 + doc_id",
+          s"cast(md5(concat(cast(doc_id as string), 'P', '$g')) as binary)", table = "q260"), root)
         def drain(): Unit = {
           val q = s.readStream.format("graft-cells")
             .option("root", root).option("table", "q260")
@@ -3351,21 +2567,17 @@ object StoreLifecycle {
               df.write.mode("append").parquet(outDir)
             }
             .option("checkpointLocation", ck)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .trigger(Trigger.AvailableNow())
             .start()
           q.awaitTermination()
         }
         seed(1)
         drain()
-        val n14 = Tables.documents(s, d).filter(col("doc_id") % 14 === 0).count()
+        val n14 = docCount(s, d, 14)
         require(s.read.parquet(outDir).count() == n14, "drain 1 = the seed window")
         seed(2)
-        val delKeys = Tables.documents(s, d).filter(col("doc_id") % 42 === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-        val inList = delKeys
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
-        s.sql(s"DELETE FROM $cat.q260 WHERE rowkey IN $inList") // bare: stamps gen-2 latest
+        val delKeys = docIds(s, d, 42)
+        s.sql(s"DELETE FROM $cat.q260 WHERE rowkey IN ${keyList(delKeys)}") // bare: stamps gen-2 latest
         drain()
         val log = s.read.parquet(outDir).localCheckpoint()
         require(log.count() == 2 * n14 + delKeys.length,
@@ -3380,12 +2592,8 @@ object StoreLifecycle {
           "markers attribute to their marker file")
         log.select(col("key_str"), col("version"), col("op"), col("_kind"))
           .localCheckpoint()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(outDir).getParentFile)
       }
-    },
+    }},
 
     // CDC STATE VIEW — the delete-aware closure of the q143-class
     // materialized view as a FIRST-CLASS stateful streaming operator
@@ -3402,65 +2610,42 @@ object StoreLifecycle {
     // 100 TB: per-key state is bounded by maxVersions; the only
     // shuffle is keyed-state's hash exchange on rowkey; edits per
     // trigger are the watermark window, never the table.
-    "q227_cells_cdc_state_view" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q227-cells").toString
-      val ck = Files.createTempDirectory("graft-q227-ck")
+    "q227_cells_cdc_state_view" -> { (s, d) => withRoots(2) { case Seq(root, ck) =>
       val sinkName = "q227_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      try {
-        def seed(v: Int): Unit = Tables.documents(s, d).filter(col("doc_id") % 25 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr(s"doc_id * 8 + $v").as("version"),
-            expr(s"cast(md5(concat(cast(doc_id as string), '&', '$v')) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q227").save()
-        seed(1); seed(2); seed(3)
-        // delete every third seeded key ABOVE all its versions: the
-        // view must retract it entirely
-        Tables.documents(s, d).filter(col("doc_id") % 75 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 8 + 4").as("version"),
-            lit(Array.emptyByteArray).as("body")) // ignored by marker writes
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q227")
-          .option("tombstone", "true").save()
-        val feed = s.readStream.format("graft-cells")
-          .option("root", root).option("table", "q227")
-          .option("changeFeed", "true").load()
-        val q = graft.streaming.CellStateView.view(feed)
-          .toDF()
-          .writeStream.format("memory").queryName(sinkName)
-          .outputMode("update")
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val out = s.table(sinkName)
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"), col("deleted"))
-          .localCheckpoint()
-        s.catalog.dropTempView(sinkName)
-        val deletedKeys = Tables.documents(s, d).filter(col("doc_id") % 75 === 0).count()
-        val retractions = out.filter(col("deleted"))
-        require(retractions.count() == deletedKeys && deletedKeys > 0,
-          s"every fully-deleted key retracts exactly once: ${retractions.count()} vs $deletedKeys")
-        val visible = out.filter(!col("deleted"))
-          .select(col("key_str"), col("version"), col("body_md5"))
-          .localCheckpoint()
-        require(visible.join(retractions, Seq("key_str"), "left_semi").count() == 0,
-          "no visible row survives for a retracted key")
-        val masked = s.read.format("graft-cells")
-          .option("root", root).option("table", "q227").load()
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint() // evaluated once, compared twice (the q195 note)
-        require(visible.exceptAll(masked).count() == 0 && masked.exceptAll(visible).count() == 0,
-          "the state view must equal the masked batch view")
-        visible
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-        org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
-      }
-    },
+      def seed(v: Int): Unit = putCells(docCells(s, d, 25, s"doc_id * 8 + $v",
+        s"cast(md5(concat(cast(doc_id as string), '&', '$v')) as binary)"), root, "q227")
+      seed(1); seed(2); seed(3)
+      // delete every third seeded key ABOVE all its versions: the
+      // view must retract it entirely
+      putCells(docCells(s, d, 75, "doc_id * 8 + 4", "X''"), root, "q227", Tombstone)
+      val feed = s.readStream.format("graft-cells")
+        .option("root", root).option("table", "q227")
+        .option("changeFeed", "true").load()
+      val q = graft.streaming.CellStateView.view(feed)
+        .toDF()
+        .writeStream.format("memory").queryName(sinkName)
+        .outputMode("update")
+        .option("checkpointLocation", ck)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      val out = s.table(sinkName)
+        .select(col("rowkey").cast("string").as("key_str"), col("version"),
+          col("body").cast("string").as("body_md5"), col("deleted"))
+        .localCheckpoint()
+      s.catalog.dropTempView(sinkName)
+      val deletedKeys = docCount(s, d, 75)
+      val retractions = out.filter(col("deleted"))
+      require(retractions.count() == deletedKeys && deletedKeys > 0,
+        s"every fully-deleted key retracts exactly once: ${retractions.count()} vs $deletedKeys")
+      val visible = out.filter(!col("deleted"))
+        .select(col("key_str"), col("version"), col("body_md5"))
+        .localCheckpoint()
+      require(visible.join(retractions, Seq("key_str"), "left_semi").count() == 0,
+        "no visible row survives for a retracted key")
+      sameBag(visible, cellStrings(readCells(s, root, "q227")),
+        "the state view must equal the masked batch view")._1
+    }},
 
     // RUNTIME (join-driven) rowkey filtering — DSv2
     // SupportsRuntimeFiltering in the driver gate: joining a SELECTIVE
@@ -3474,45 +2659,35 @@ object StoreLifecycle {
     // count (+FP slack) — counted, not asserted from the plan alone.
     // 100 TB: this is the difference between scanning a 100 TB table
     // to join 10k keys and issuing 10k GETs.
-    "q225_cells_runtime_filter_join" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q225-cells").toString
-      try {
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 12 === 0)
-            .select(lit("q225").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              col("doc_id").cast("long").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'J')) as binary)").as("body")),
-          root)
-        val cells = s.read.format("graft-cells")
-          .option("root", root).option("table", "q225").load()
-        // selective dimension straight off the parquet scan, so its
-        // Filter survives into the optimized plan (the DPP trigger)
-        val dim = Tables.documents(s, d).filter(col("doc_id") % 120 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("k"),
-            col("source").as("dim_source"))
-        val joined = cells.join(broadcast(dim), col("rowkey") === col("k"))
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"), col("dim_source"))
-        val plan = joined.queryExecution.executedPlan.toString
-        require(plan.contains("dynamicpruning"),
-          s"the cells scan must carry a join-driven runtime filter:\n$plan")
-        val dimCount = dim.count()
-        graft.sources.CellsSource.filesOpened.set(0)
-        val res = joined.localCheckpoint()
-        val opened = graft.sources.CellsSource.filesOpened.get()
-        // two-sided: ≥ |dim| pins the BATCHED-GET plan itself (every
-        // probed key costs one index-entry seek — a whole-segment
-        // stream would count 1 open and pass a ≤-only bound
-        // vacuously, which round 12 caught masking a real bug: the
-        // reader factory captured pre-filter keys, so digest
-        // narrowing never reached the executors); ≤ |dim|+8 bounds
-        // the bloom false-positive slack
-        require(opened >= dimCount && opened <= dimCount + 8,
-          s"runtime-filtered join must read ~|dim| cells, opened=$opened dim=$dimCount")
-        res
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q225_cells_runtime_filter_join" -> { (s, d) => withRoots(1) { case Seq(root) =>
+      BulkLoad.writeCells(docCells(s, d, 12, "cast(doc_id as long)",
+        "cast(md5(concat(cast(doc_id as string), 'J')) as binary)", table = "q225"), root)
+      val cells = readCells(s, root, "q225")
+      // selective dimension straight off the parquet scan, so its
+      // Filter survives into the optimized plan (the DPP trigger)
+      val dim = Tables.documents(s, d).filter(col("doc_id") % 120 === 0)
+        .select(expr(DocKey).as("k"), col("source").as("dim_source"))
+      val joined = cells.join(broadcast(dim), col("rowkey") === col("k"))
+        .select(col("rowkey").cast("string").as("key_str"), col("version"),
+          col("body").cast("string").as("body_md5"), col("dim_source"))
+      val plan = joined.queryExecution.executedPlan.toString
+      require(plan.contains("dynamicpruning"),
+        s"the cells scan must carry a join-driven runtime filter:\n$plan")
+      val dimCount = dim.count()
+      graft.sources.CellsSource.filesOpened.set(0)
+      val res = joined.localCheckpoint()
+      val opened = graft.sources.CellsSource.filesOpened.get()
+      // two-sided: ≥ |dim| pins the BATCHED-GET plan itself (every
+      // probed key costs one index-entry seek — a whole-segment
+      // stream would count 1 open and pass a ≤-only bound
+      // vacuously, which round 12 caught masking a real bug: the
+      // reader factory captured pre-filter keys, so digest
+      // narrowing never reached the executors); ≤ |dim|+8 bounds
+      // the bloom false-positive slack
+      require(opened >= dimCount && opened <= dimCount + 8,
+        s"runtime-filtered join must read ~|dim| cells, opened=$opened dim=$dimCount")
+      res
+    }},
 
     // SEGMENT ROW BLOOM — the HBase BloomFilter analog in the driver
     // gate: every bulk segment carries a bloom over its distinct key
@@ -3525,37 +2700,25 @@ object StoreLifecycle {
     // bloom never drops a real cell. 100 TB: absent-key probes are the
     // common ingest-F5 case; without the bloom each one pays a 48 B/cell
     // index load per segment the cache has evicted.
-    "q223_cells_bloom_point_get" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q223-cells").toString
-      try {
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 21 === 0)
-            .select(lit("q223").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              col("doc_id").cast("long").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'B')) as binary)").as("body")),
-          root)
-        def readTable = s.read.format("graft-cells")
-          .option("root", root).option("table", "q223").load()
-        val store = FileStore(root)
-        val before = CellSegment.indexReads.get()
-        (1 to 20).foreach { i =>
-          require(readTable.filter(col("rowkey") === lit(s"absent-$i".getBytes("UTF-8")))
-            .count() == 0, "absent key must read empty")
-        }
-        require(store.exists("q223", (1 to 20).map(i => PushTableSink.CellPut("q223",
-          s"missing-$i".getBytes("UTF-8"), 1L, Array.emptyByteArray))).forall(_ == false),
-          "absent cells must not exist")
-        require(CellSegment.indexReads.get() == before,
-          "absent-key probes must resolve off the ROW bloom with zero index reads")
-        val hit = readTable.filter(col("rowkey") === lit("doc-21".getBytes("UTF-8"))).count()
-        require(hit == 1, s"present-key point GET must pass the bloom: $hit")
-        readTable
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q223_cells_bloom_point_get" -> { (s, d) => withRoots(1) { case Seq(root) =>
+      BulkLoad.writeCells(docCells(s, d, 21, "cast(doc_id as long)",
+        "cast(md5(concat(cast(doc_id as string), 'B')) as binary)", table = "q223"), root)
+      def readTable = readCells(s, root, "q223")
+      val store = FileStore(root)
+      val before = CellSegment.indexReads.get()
+      (1 to 20).foreach { i =>
+        require(readTable.filter(col("rowkey") === lit(s"absent-$i".getBytes("UTF-8")))
+          .count() == 0, "absent key must read empty")
+      }
+      require(store.exists("q223", (1 to 20).map(i => PushTableSink.CellPut("q223",
+        s"missing-$i".getBytes("UTF-8"), 1L, Array.emptyByteArray))).forall(_ == false),
+        "absent cells must not exist")
+      require(CellSegment.indexReads.get() == before,
+        "absent-key probes must resolve off the ROW bloom with zero index reads")
+      val hit = readTable.filter(col("rowkey") === lit("doc-21".getBytes("UTF-8"))).count()
+      require(hit == 1, s"present-key point GET must pass the bloom: $hit")
+      cellStrings(readTable).localCheckpoint()
+    }},
 
     // DELETE TOMBSTONES — the HBase Delete-marker model end to end:
     // every key carries versions 1-3 split across BOTH store-file
@@ -3571,61 +2734,40 @@ object StoreLifecycle {
     // the same re-put before it stays masked. 100 TB: deletes are
     // marker writes — no read-modify-write, no segment rewrite until
     // the next scheduled major.
-    "q222_cells_delete_tombstones" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q222-cells").toString
-      try {
-        def seed(vLo: Int, vHi: Int) = Tables.documents(s, d).filter(col("doc_id") % 19 === 0)
-          .select(col("doc_id"), explode(sequence(lit(vLo), lit(vHi))).as("v"))
-          .select(lit("q222").as("tableName"),
-            expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 8 + v").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), '!', cast(v as string))) as binary)").as("body"))
-        BulkLoad.writeCells(seed(1, 2), root)
-        seed(3, 3).drop("tableName").write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q222").save()
-        // distributed delete: mask versions <= v2 for every other key
-        Tables.documents(s, d).filter(col("doc_id") % 38 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 8 + 2").as("version"),
-            lit(Array.emptyByteArray).as("body")) // ignored by marker writes
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q222")
-          .option("tombstone", "true").save()
-        def readTable = s.read.format("graft-cells")
-          .option("root", root).option("table", "q222").load()
-        val res = readTable
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-        // a re-put under a live marker stays masked (HBase: markers
-        // mask later puts at covered versions until compacted away)
-        val store = FileStore(root)
-        val deletedKeys = Tables.documents(s, d).filter(col("doc_id") % 38 === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0))
-        require(deletedKeys.nonEmpty, "fixture must delete at least one key")
-        val probe = deletedKeys.head
-        def rePut(): Unit = store.putBatch("q222", Seq(PushTableSink.CellPut("q222",
-          s"doc-$probe".getBytes("UTF-8"), probe * 8 + 1,
-          org.apache.commons.codec.digest.DigestUtils.md5Hex(s"$probe!1").getBytes("UTF-8"))))
-        rePut()
-        require(readTable.filter(col("version") === lit(probe * 8 + 1)).count() == 0,
-          "a re-put at a masked version must stay masked while the marker lives")
-        // major compaction: logical view unchanged, markers + masked
-        // cells physically gone
-        Compaction.major(s, root, "q222")
-        val after = readTable.select(col("rowkey").cast("string").as("key_str"),
-          col("version"), col("body").cast("string").as("body_md5"))
-          .localCheckpoint() // evaluated once, compared twice (the q195 note)
-        require(after.exceptAll(res).count() == 0 && res.exceptAll(after).count() == 0,
-          "major compaction must not change the logical view")
-        require(!segFiles(root, "q222").exists(n => FileStore.tombstoneOf(n).isDefined),
-          "no delete marker survives a major compaction")
-        rePut() // marker purged -> the old version resurrects
-        require(readTable.filter(col("version") === lit(probe * 8 + 1)).count() == 1,
-          "a re-put after the purge must be visible (resurrection)")
-        res
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q222_cells_delete_tombstones" -> { (s, d) => withRoots(1) { case Seq(root) =>
+      def seed(vLo: Int, vHi: Int) = docCells(s, d, 19, "doc_id * 8 + v",
+        "cast(md5(concat(cast(doc_id as string), '!', cast(v as string))) as binary)",
+        table = "q222", gen = explode(sequence(lit(vLo), lit(vHi))).as("v"))
+      BulkLoad.writeCells(seed(1, 2), root)
+      putCells(seed(3, 3).drop("tableName"), root, "q222")
+      // distributed delete: mask versions <= v2 for every other key
+      putCells(docCells(s, d, 38, "doc_id * 8 + 2", "X''"), root, "q222", Tombstone)
+      def readTable = readCells(s, root, "q222")
+      val res = cellStrings(readTable).localCheckpoint()
+      // a re-put under a live marker stays masked (HBase: markers
+      // mask later puts at covered versions until compacted away)
+      val store = FileStore(root)
+      val deletedKeys = Tables.documents(s, d).filter(col("doc_id") % 38 === 0)
+        .select(col("doc_id").cast("long")).collect().map(_.getLong(0))
+      require(deletedKeys.nonEmpty, "fixture must delete at least one key")
+      val probe = deletedKeys.head
+      def rePut(): Unit = store.putBatch("q222", Seq(PushTableSink.CellPut("q222",
+        s"doc-$probe".getBytes("UTF-8"), probe * 8 + 1,
+        org.apache.commons.codec.digest.DigestUtils.md5Hex(s"$probe!1").getBytes("UTF-8"))))
+      rePut()
+      require(readTable.filter(col("version") === lit(probe * 8 + 1)).count() == 0,
+        "a re-put at a masked version must stay masked while the marker lives")
+      // major compaction: logical view unchanged, markers + masked
+      // cells physically gone
+      Compaction.major(s, root, "q222")
+      sameBag(cellStrings(readTable), res, "major compaction must not change the logical view")
+      require(!segFiles(root, "q222").exists(n => FileStore.tombstoneOf(n).isDefined),
+        "no delete marker survives a major compaction")
+      rePut() // marker purged -> the old version resurrects
+      require(readTable.filter(col("version") === lit(probe * 8 + 1)).count() == 1,
+        "a re-put after the purge must be visible (resurrection)")
+      res
+    }},
 
     // MINOR compaction — the region-LOCAL half of the HBase compaction
     // model q194's major doesn't cover: per shard, the accumulated
@@ -3641,35 +2783,24 @@ object StoreLifecycle {
     // the big first-generation segments survive by name, no put files
     // remain, and the cell population is EXACTLY the seeded one —
     // the driver hash pins merge ∘ no-GC ∘ threshold selection.
-    "q219_cells_minor_compact" -> { (s, d) =>
-      val root = Files.createTempDirectory("graft-q219-cells").toString
-      try {
-        val spec = PushTableSink.TableSpec(compactionThreshold = 0)
-        def seed(vLo: Int, vHi: Int) = Tables.documents(s, d).filter(col("doc_id") % 31 === 0)
-          .select(col("doc_id"), explode(sequence(lit(vLo), lit(vHi))).as("v"))
-          .select(lit("q219").as("tableName"),
-            expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 8 + v").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), '@', cast(v as string))) as binary)").as("body"))
-        // generation 1: one BIG segment per shard (bulk, above threshold)
-        BulkLoad.writeCells(seed(1, 1), root, BulkLoad.Config(tableSpec = spec))
-        // generation 2: per-cell put files through the connector face
-        seed(2, 3).drop("tableName").write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q219").save()
-        val bigSegs = segFiles(root, "q219").filter(CellSegment.isSegment).toSet
-        val report = Compaction.minor(s, root, "q219", maxInputBytes = 512)
-        require(report.keptCells > 0 && report.removedFiles > 0, "minor must merge the put files")
-        val after = segFiles(root, "q219")
-        require(after.forall(CellSegment.isSegment), "no put files survive a minor compaction")
-        require(bigSegs.subsetOf(after.toSet),
-          "segments above the threshold are untouched by a minor compaction")
-        s.read.format("graft-cells")
-          .option("root", root).option("table", "q219").load()
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    },
+    "q219_cells_minor_compact" -> { (s, d) => withRoots(1) { case Seq(root) =>
+      val spec = PushTableSink.TableSpec(compactionThreshold = 0)
+      def seed(vLo: Int, vHi: Int) = docCells(s, d, 31, "doc_id * 8 + v",
+        "cast(md5(concat(cast(doc_id as string), '@', cast(v as string))) as binary)",
+        table = "q219", gen = explode(sequence(lit(vLo), lit(vHi))).as("v"))
+      // generation 1: one BIG segment per shard (bulk, above threshold)
+      BulkLoad.writeCells(seed(1, 1), root, BulkLoad.Config(tableSpec = spec))
+      // generation 2: per-cell put files through the connector face
+      putCells(seed(2, 3).drop("tableName"), root, "q219")
+      val bigSegs = segFiles(root, "q219").filter(CellSegment.isSegment).toSet
+      val report = Compaction.minor(s, root, "q219", maxInputBytes = 512)
+      require(report.keptCells > 0 && report.removedFiles > 0, "minor must merge the put files")
+      val after = segFiles(root, "q219")
+      require(after.forall(CellSegment.isSegment), "no put files survive a minor compaction")
+      require(bigSegs.subsetOf(after.toSet),
+        "segments above the threshold are untouched by a minor compaction")
+      cellStrings(readCells(s, root, "q219")).localCheckpoint()
+    }},
 
     // RESPLIT migration — the q204 planner driving an actual layout
     // change: a DEFAULT-layout table whose keys all share one first
@@ -3682,93 +2813,59 @@ object StoreLifecycle {
     // partition, and source ≡ destination cell-for-cell; the emitted
     // result reads the RESPLIT store, so the driver hash pins
     // plan ∘ migrate ∘ re-read.
-    "q212_cells_resplit" -> { (s, d) =>
+    "q212_cells_resplit" -> { (s, d) => withRoots(2) { case Seq(srcRoot, dstRoot) =>
       import graft.operators.GlobalRank
-      val srcRoot = Files.createTempDirectory("graft-q212-src").toString
-      val dstRoot = Files.createTempDirectory("graft-q212-dst").toString
-      try {
-        val cells = Tables.documents(s, d).filter(col("doc_id") % 5 === 0)
-          .select(lit("q212").as("tableName"),
-            expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            col("doc_id").cast("long").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), 'R')) as binary)").as("body"))
-        BulkLoad.writeCells(cells, srcRoot) // default layout: 1 populated region
-        require(segShardDirs(srcRoot, "q212").size == 1,
-          "skewed keys under the default layout land in one region")
-        // the q204 planner: 7 equi-depth boundaries off the live keys
-        val keys = s.read.format("graft-cells")
-          .option("root", srcRoot).option("table", "q212").load()
-          .select(col("rowkey")).distinct()
-        val n = keys.count()
-        val targets = (1 to 7).map(i => i * n / 8)
-        val points = GlobalRank.rank(keys, Seq(col("rowkey").asc), numParts = 8, rankCol = "rk")
-          .filter(col("rk").isin(targets: _*))
-          .select(col("rowkey")).collect().map(_.getAs[Array[Byte]](0)).toSeq
-        Resplit.to(s, srcRoot, "q212", dstRoot, FileStore.Splits.ofSplitPoints(points))
-        require(segShardDirs(dstRoot, "q212").size == 8,
-          s"equi-depth boundaries must populate all 8 regions: ${segShardDirs(dstRoot, "q212")}")
-        def readTable(root: String) = s.read.format("graft-cells")
-          .option("root", root).option("table", "q212").load()
-        val src = readTable(srcRoot).localCheckpoint() // the q195 note
-        // dst stays a live SCAN: the point-GET probe below asserts the
-        // new layout prunes to one region, which a checkpoint would hide
-        val dst = readTable(dstRoot)
-        require(src.exceptAll(dst).count() == 0 && dst.exceptAll(src).count() == 0,
-          "resplit must preserve the table cell-for-cell")
-        val probe = dst.filter(col("rowkey") === lit("doc-5".getBytes("UTF-8")))
-        require(probe.rdd.getNumPartitions == 1, "point GET plans one region on the new layout")
-        dst.select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcRoot))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dstRoot))
-      }
-    },
+      val cells = docCells(s, d, 5, "cast(doc_id as long)",
+        "cast(md5(concat(cast(doc_id as string), 'R')) as binary)", table = "q212")
+      BulkLoad.writeCells(cells, srcRoot) // default layout: 1 populated region
+      require(segShardDirs(srcRoot, "q212").size == 1,
+        "skewed keys under the default layout land in one region")
+      // the q204 planner: 7 equi-depth boundaries off the live keys
+      val keys = readCells(s, srcRoot, "q212").select(col("rowkey")).distinct()
+      val n = keys.count()
+      val targets = (1 to 7).map(i => i * n / 8)
+      val points = GlobalRank.rank(keys, Seq(col("rowkey").asc), numParts = 8, rankCol = "rk")
+        .filter(col("rk").isin(targets: _*))
+        .select(col("rowkey")).collect().map(_.getAs[Array[Byte]](0)).toSeq
+      Resplit.to(s, srcRoot, "q212", dstRoot, FileStore.Splits.ofSplitPoints(points))
+      require(segShardDirs(dstRoot, "q212").size == 8,
+        s"equi-depth boundaries must populate all 8 regions: ${segShardDirs(dstRoot, "q212")}")
+      val src = readCells(s, srcRoot, "q212").localCheckpoint() // the sameBag note
+      // dst stays a live SCAN: the point-GET probe below asserts the
+      // new layout prunes to one region, which a checkpoint would hide
+      val dst = readCells(s, dstRoot, "q212")
+      require(src.exceptAll(dst).count() == 0 && dst.exceptAll(src).count() == 0,
+        "resplit must preserve the table cell-for-cell")
+      val probe = dst.filter(col("rowkey") === lit("doc-5".getBytes("UTF-8")))
+      require(probe.rdd.getNumPartitions == 1, "point GET plans one region on the new layout")
+      cellStrings(dst).localCheckpoint()
+    }},
 
-    "q209_cells_backup_preserves_ddl" -> { (s, d) =>
-      val srcRoot = Files.createTempDirectory("graft-q209-src").toString
-      val bakDir = Files.createTempDirectory("graft-q209-bak").toString
-      val dstRoot = Files.createTempDirectory("graft-q209-dst").toString
-      try {
-        val spec = PushTableSink.TableSpec(maxVersions = 2)
-        val points = (1 to 9).map(i => s"doc-$i".getBytes("UTF-8"))
-        def batch(vLo: Int, vHi: Int) = Tables.documents(s, d).filter(col("doc_id") % 29 === 0)
-          .select(col("doc_id"), explode(sequence(lit(vLo), lit(vHi))).as("v"))
-          .select(lit("q209").as("tableName"),
-            expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 8 + v").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), '%', cast(v as string))) as binary)").as("body"))
-        BulkLoad.writeCells(batch(1, 2), srcRoot,
-          BulkLoad.Config(tableSpec = spec, splitPoints = points))
-        graft.ingest.Backup.full(s, srcRoot, "q209", bakDir)
-        graft.ingest.Backup.restore(s, bakDir, dstRoot)
-        val srcStore = FileStore(srcRoot)
-        val dstStore = FileStore(dstRoot)
-        require(srcStore.readSpecJson("q209").isDefined &&
-          dstStore.readSpecJson("q209") == srcStore.readSpecJson("q209"),
-          "restore must carry the table DDL byte-identically")
-        require(dstStore.splitsOf("q209").toJson == srcStore.splitsOf("q209").toJson,
-          "restore must carry the split layout")
-        require(segShardDirs(dstRoot, "q209") == segShardDirs(srcRoot, "q209"),
-          "restored shard layout must match the source")
-        // third version through the restored store's own write face,
-        // then retention via compaction OF THE RESTORED TABLE — only a
-        // carried maxVersions=2 prunes v1
-        batch(3, 3).drop("tableName").write.format("graft-cells").mode("append")
-          .option("root", dstRoot).option("table", "q209").save()
-        Compaction.major(s, dstRoot, "q209")
-        s.read.format("graft-cells")
-          .option("root", dstRoot).option("table", "q209").load()
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(srcRoot))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(bakDir))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dstRoot))
-      }
-    }
+    "q209_cells_backup_preserves_ddl" -> { (s, d) => withRoots(3) { case Seq(srcRoot, bakDir, dstRoot) =>
+      val spec = PushTableSink.TableSpec(maxVersions = 2)
+      def batch(vLo: Int, vHi: Int) = docCells(s, d, 29, "doc_id * 8 + v",
+        "cast(md5(concat(cast(doc_id as string), '%', cast(v as string))) as binary)",
+        table = "q209", gen = explode(sequence(lit(vLo), lit(vHi))).as("v"))
+      BulkLoad.writeCells(batch(1, 2), srcRoot,
+        BulkLoad.Config(tableSpec = spec, splitPoints = docSplits))
+      graft.ingest.Backup.full(s, srcRoot, "q209", bakDir)
+      graft.ingest.Backup.restore(s, bakDir, dstRoot)
+      val srcStore = FileStore(srcRoot)
+      val dstStore = FileStore(dstRoot)
+      require(srcStore.readSpecJson("q209").isDefined &&
+        dstStore.readSpecJson("q209") == srcStore.readSpecJson("q209"),
+        "restore must carry the table DDL byte-identically")
+      require(dstStore.splitsOf("q209").toJson == srcStore.splitsOf("q209").toJson,
+        "restore must carry the split layout")
+      require(segShardDirs(dstRoot, "q209") == segShardDirs(srcRoot, "q209"),
+        "restored shard layout must match the source")
+      // third version through the restored store's own write face,
+      // then retention via compaction OF THE RESTORED TABLE — only a
+      // carried maxVersions=2 prunes v1
+      putCells(batch(3, 3).drop("tableName"), dstRoot, "q209")
+      Compaction.major(s, dstRoot, "q209")
+      cellStrings(readCells(s, dstRoot, "q209")).localCheckpoint()
+    }}
   )
 
   val oracle: Map[String, String] = Map(

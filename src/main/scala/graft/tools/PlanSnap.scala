@@ -9,6 +9,9 @@ import org.apache.spark.sql.SparkSession
   * frame's plan (the judge-checkable shape).
   *
   * Usage: runMain graft.tools.PlanSnap <outDir> <suffix> <q1,q2,...> [sfDir]
+  *
+  * Exits 1 when a named gate fails or a name matches no query, so a
+  * before/after plan diff cannot pass by silently skipping a gate.
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
@@ -28,8 +31,10 @@ object PlanSnap {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(outDir)
-    names.foreach { prefix =>
-      graft.SparkEntry.queries.keys.filter(_.startsWith(prefix)).toSeq.sorted.foreach { name =>
+    val failed = names.flatMap { prefix =>
+      val matched = graft.SparkEntry.queries.keys.filter(_.startsWith(prefix)).toSeq.sorted
+      if (matched.isEmpty) println(s"[plansnap] $prefix matches no query")
+      (if (matched.isEmpty) Seq(prefix) else Nil) ++ matched.filterNot { name =>
         val fn = graft.SparkEntry.queries(name)
         try {
           val df = fn(spark, sfDir)
@@ -37,11 +42,16 @@ object PlanSnap {
             org.apache.spark.sql.execution.FormattedMode)
           java.nio.file.Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), formatted)
           println(s"[plansnap] wrote ${name}_$suffix.txt (${formatted.length} chars)")
+          true
         } catch {
-          case e: Throwable => println(s"[plansnap] $name FAILED: ${e.getMessage}")
+          case e: Throwable => println(s"[plansnap] $name FAILED: ${e.getMessage}"); false
         }
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      println(s"[plansnap] ${failed.size} FAILED: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -79,6 +79,10 @@ class PlanHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
       "q178_rrf_fusion",  // the 1-row query vector broadcasts against the corpus (q18's shape)
       "q180_ccf",         // the 1-row reference-denominator scalar broadcasts
       "q183_hll_intersect") // |types|² sketch pairs — corpus-independent
+    // the sweep runs every query on this one session, so it also pins
+    // that no query leaves session conf behind (catalog registrations,
+    // swapped shuffle.partitions, bucketing flags, clock overrides)
+    val confBefore = spark.conf.getAll
     val failures = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(sanctioned)
       .flatMap { q =>
@@ -90,6 +94,39 @@ class PlanHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
         else None
       }
     assert(failures.isEmpty, s"cartesian/nested-loop in: $failures")
+    val confAfter = spark.conf.getAll
+    assert(confAfter == confBefore, "queries left session conf behind: " +
+      s"added ${(confAfter -- confBefore.keys).keys.toSeq.sorted.take(10)}, " +
+      s"removed ${(confBefore -- confAfter.keys).keys.toSeq.sorted}, changed " +
+      confBefore.filter { case (k, v) => confAfter.get(k).exists(_ != v) }.keys.toSeq.sorted)
+  }
+
+  test("withConf restores a key's previous value") {
+    val k = "spark.graft.test.withConf.set"
+    spark.conf.set(k, "before")
+    try {
+      GateFixtures.withConf(spark, k -> "during")(assert(spark.conf.get(k) == "during"))
+      assert(spark.conf.get(k) == "before")
+    } finally spark.conf.unset(k)
+  }
+
+  test("withConf unsets a key that was not set, even one with a default") {
+    val k = "spark.sql.autoBroadcastJoinThreshold"
+    assert(!spark.conf.getAll.contains(k), "precondition: the session leaves the default")
+    GateFixtures.withConf(spark, k -> "-1")(assert(spark.conf.get(k) == "-1"))
+    assert(!spark.conf.getAll.contains(k), s"${spark.conf.get(k)} left set")
+  }
+
+  test("withConf restores the conf when the body throws") {
+    val (set, absent) = ("spark.graft.test.withConf.thrownSet", "spark.graft.test.withConf.thrownAbsent")
+    spark.conf.set(set, "before")
+    try {
+      intercept[IllegalStateException] {
+        GateFixtures.withConf(spark, set -> "x", absent -> "y")(throw new IllegalStateException("boom"))
+      }
+      assert(spark.conf.get(set) == "before")
+      assert(!spark.conf.getAll.contains(absent))
+    } finally spark.conf.unset(set)
   }
 
   test("q49: bucketed join reads bucket-aligned scans with no exchange on the join keys") {
