@@ -399,10 +399,9 @@ object CellSegment {
     }
   }
 
-  // A/B seam (IngestBench + diagnostics): disabling the bloom makes
-  // every probe fall through to the index — the pre-bloom read path.
-  @volatile private var bloomDisabled: Boolean =
-    sys.props.get("graft.segment.bloom.disable").contains("true")
+  // A/B seam (IngestBench): disabling the bloom makes every probe
+  // fall through to the index — the pre-bloom read path.
+  @volatile private var bloomDisabled: Boolean = false
   private[graft] def setBloomDisabled(v: Boolean): Boolean = {
     val prev = bloomDisabled; bloomDisabled = v; prev
   }

@@ -1,26 +1,25 @@
 package graft.ingest
 
+import graft.GraftSession
 import graft.core.{Crypto, Envelope}
 import java.io.ByteArrayOutputStream
 import java.nio.file.Files
 import java.util.Base64
 import java.util.zip.GZIPOutputStream
-import org.apache.spark.sql.SparkSession
 
 /** Ingestion throughput probe: generates N encrypted+gzipped dump files
   * of M records each, runs the full pipeline (decode → transform → both
   * sinks), prints one JSON line with records/sec. The reference
   * processes files on 10 threads; this measures the same work
-  * partition-per-file across local[cpus].
+  * partition-per-file across local[SPARK_GRAFT_CPUS] (default 4).
   *
-  * Run: SPARK_GRAFT_CPUS=32 sbt "runMain graft.ingest.IngestBench 40 2000"
+  * Run: sbt "runMain graft.ingest.IngestBench 40 2000"
   */
 object IngestBench {
 
   def main(args: Array[String]): Unit = {
     val nFiles = args.headOption.map(_.toInt).getOrElse(40)
     val recordsPerFile = args.lift(1).map(_.toInt).getOrElse(2000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
 
     val tmp = Files.createTempDirectory("graft-ingest-bench")
     val key = Base64.getEncoder.encodeToString(Array.tabulate[Byte](16)(i => (i + 1).toByte))
@@ -43,13 +42,7 @@ object IngestBench {
          s""""encryptedEncryptionKey": "u", "initialisationVector": "${enc.initialisationVector}"}""").getBytes("UTF-8"))
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // phase 1: decode + transform only (cache materialization)
     val keys = StubKeyService()
     val identity = Envelope.RunIdentity.live("bench", "bench")

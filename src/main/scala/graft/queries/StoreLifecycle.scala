@@ -660,8 +660,9 @@ object StoreLifecycle {
     // 100 TB: with [[graft.sources.MergeSourcePruning]] installed the
     // target scan narrows to the SOURCE'S rowkeys through the q225
     // InputPartition key-set predicate (the HBase batched-GET idiom —
-    // the rewrite's outer join alone never narrows, measured by
-    // tools/MergeProbe in r13), opening ~|matched keys| files instead
+    // the rewrite's outer join alone never narrows, measured by the
+    // MergeProbe run in r13 — source removed since, see commit
+    // 25803b2), opening ~|matched keys| files instead
     // of every populated region; the gate pins opens == |matched|
     // two-sidedly. Above the key cap the pre-pass declines loudly to
     // the honest region-parallel scan. Writes are per-task batched

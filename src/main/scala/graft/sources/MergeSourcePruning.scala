@@ -19,10 +19,11 @@ import org.apache.spark.sql.types.BinaryType
   * the preserved side of an outer join (or as the anti/semi probe), so
   * neither DPP (wants a partitioned build side) nor runtime group
   * filtering (group-based REPLACE operations only) ever narrows the
-  * target — `tools/MergeProbe` measured opens == populated regions in
-  * every MERGE variant. This rule closes the gap with a BOUNDED
-  * pre-pass: collect the source's DISTINCT join rowkeys (capped), and
-  * hand them to the already-built [[CellsScan]] through the SAME
+  * target — the MergeProbe run (source removed since, see commit
+  * 25803b2) measured opens == populated regions in every MERGE
+  * variant. This rule closes the gap with a BOUNDED pre-pass: collect
+  * the source's DISTINCT join rowkeys (capped), and hand them to the
+  * already-built [[CellsScan]] through the SAME
   * InputPartition-carried key-set predicate the q225 runtime filter
   * uses — a selective MERGE then opens ~|source keys| files instead of
   * every populated region.

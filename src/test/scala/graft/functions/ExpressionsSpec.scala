@@ -1,29 +1,24 @@
 package graft.functions
 
+import graft.SparkSuite
 import graft.core.{DateFmt, Json, Rowkey}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Native expression parity: SQL-registered codegen expressions agree
   * byte-for-byte with the pure core functions, survive whole-stage
   * codegen, and register through SparkSessionExtensions. */
-class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExpressionsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def threads = 2
 
+  // registration through the documented static conf
+  // `spark.sql.extensions=graft.GraftExtensions`, which a new context
+  // reads from `spark.*` system properties
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("expr-spec")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    System.setProperty("spark.sql.extensions", classOf[graft.GraftExtensions].getName)
+    try super.beforeAll() finally System.clearProperty("spark.sql.extensions")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("kafka_date_format matches core.DateFmt over both input formats") {
     val sp = spark; import sp.implicits._

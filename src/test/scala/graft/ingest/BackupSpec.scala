@@ -1,30 +1,17 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import scala.jdk.CollectionConverters._
 
 /** The Backup operator chain (the ExportSnapshot → LoadIncrementalHFiles
   * idiom): watermark recording, incremental slicing above the RECORDED
   * watermark, chained restore equality, descriptor passthrough (DDL +
   * split layout), and the restore-never-replays-puts physics. */
-class BackupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("backup-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class BackupSpec extends AnyFunSuite with SparkSuite {
 
   private def k(s: String): Array[Byte] = s.getBytes("UTF-8")
 

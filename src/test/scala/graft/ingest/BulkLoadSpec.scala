@@ -1,13 +1,12 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.IngestPipeline.{IngestedRow, Status}
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.sources.CellsSource
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import scala.jdk.CollectionConverters._
 
 /** The HFile-style bulk-load path: segment format round-trip,
@@ -16,19 +15,7 @@ import scala.jdk.CollectionConverters._
   * the two write paths, F5 existence over segments, connector
   * pushdown pruning at segment granularity, and the streaming face's
   * watermark seeing bulk-loaded versions. */
-class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("bulkload-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class BulkLoadSpec extends AnyFunSuite with SparkSuite {
 
   private def k(s: String): Array[Byte] = s.getBytes("UTF-8")
 

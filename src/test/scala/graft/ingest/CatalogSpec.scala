@@ -1,10 +1,13 @@
 package graft.ingest
 
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Mirrors KeyPairGeneratorTest.kt:23-145 (pairing/validation),
   * S3ReaderTest pairing aspects, EncryptionMetadataProcessorTest. */
-class CatalogSpec extends AnyFunSuite {
+class CatalogSpec extends AnyFunSuite with SparkSuite {
+  override protected def threads = 2
+
   import Catalog._
 
   private def pair(stem: String, d: Long = 10, m: Long = 5) =
@@ -40,20 +43,15 @@ class CatalogSpec extends AnyFunSuite {
     touch("db-1.coll-1.0002.json.encryption.json") // metadata only: dropped
     touch("unrelated.txt")
 
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("catalog-spec")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      val pairs = listPairs(spark, Seq(tmp.toString))
-      assert(pairs.map(_.stem) == Seq("db-1.coll-1.0001.json"))
-      assert(pairs.head.dataPath.endsWith("db-1.coll-1.0001.json.gz.enc"))
+    val pairs = listPairs(spark, Seq(tmp.toString))
+    assert(pairs.map(_.stem) == Seq("db-1.coll-1.0001.json"))
+    assert(pairs.head.dataPath.endsWith("db-1.coll-1.0001.json.gz.enc"))
 
-      touch("db-1.coll-1.0003.json.gz.enc") // data without metadata: fatal
-      assertThrows[CatalogException](listPairs(spark, Seq(tmp.toString)))
+    touch("db-1.coll-1.0003.json.gz.enc") // data without metadata: fatal
+    assertThrows[CatalogException](listPairs(spark, Seq(tmp.toString)))
 
-      // nonexistent prefix is an empty catalog, not an error
-      assert(listPairs(spark, Seq(tmp.resolve("missing").toString)).isEmpty)
-    } finally spark.stop()
+    // nonexistent prefix is an empty catalog, not an error
+    assert(listPairs(spark, Seq(tmp.resolve("missing").toString)).isEmpty)
   }
 
   test("catalog-scale probe: 510 zero-byte pairs list, pair, and drop (the reference pagination test)") {
@@ -63,14 +61,9 @@ class CatalogSpec extends AnyFunSuite {
       java.nio.file.Files.write(tmp.resolve(s"$stem.gz.enc"), Array.emptyByteArray)
       java.nio.file.Files.write(tmp.resolve(s"$stem.encryption.json"), Array.emptyByteArray)
     }
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("catalog-paging")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      val pairs = listPairs(spark, Seq(tmp.toString))
-      assert(pairs.size == 510)
-      assert(nonEmpty(pairs).isEmpty) // all-zero-byte pairs drop, records_processed 0
-    } finally spark.stop()
+    val pairs = listPairs(spark, Seq(tmp.toString))
+    assert(pairs.size == 510)
+    assert(nonEmpty(pairs).isEmpty) // all-zero-byte pairs drop, records_processed 0
   }
 
   test("planTasks over 510 files is pure listing: sidecars are never opened on the driver") {
@@ -83,29 +76,19 @@ class CatalogSpec extends AnyFunSuite {
       // metadata/key resolution belongs to the executor decode stage
       java.nio.file.Files.write(tmp.resolve(s"$stem.encryption.json"), "not json".getBytes)
     }
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("catalog-plan")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      val tasks = IngestPipeline.planTasks(spark, Seq(tmp.toString))
-      assert(tasks.size == 510)
-      assert(tasks.forall(t => t.database == "plandb" && t.collection == "plancoll"))
-      assert(tasks.map(_.fileNumber).toSet == (1 to 510).toSet)
-    } finally spark.stop()
+    val tasks = IngestPipeline.planTasks(spark, Seq(tmp.toString))
+    assert(tasks.size == 510)
+    assert(tasks.forall(t => t.database == "plandb" && t.collection == "plancoll"))
+    assert(tasks.map(_.fileNumber).toSet == (1 to 510).toSet)
   }
 
   test("uppercase-extension dumps pair case-insensitively, agreeing with parseFilename") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-case")
     java.nio.file.Files.write(tmp.resolve("DB-9.COLL-9.0001.JSON.GZ.ENC"), "x".getBytes)
     java.nio.file.Files.write(tmp.resolve("db-9.coll-9.0001.json.encryption.json"), "m".getBytes)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("catalog-case")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      val pairs = listPairs(spark, Seq(tmp.toString))
-      assert(pairs.size == 1)
-      assert(pairs.head.stem == "db-9.coll-9.0001.json")
-      assert(pairs.head.dataPath.endsWith("DB-9.COLL-9.0001.JSON.GZ.ENC"))
-    } finally spark.stop()
+    val pairs = listPairs(spark, Seq(tmp.toString))
+    assert(pairs.size == 1)
+    assert(pairs.head.stem == "db-9.coll-9.0001.json")
+    assert(pairs.head.dataPath.endsWith("DB-9.COLL-9.0001.JSON.GZ.ENC"))
   }
 }

@@ -1,16 +1,16 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.IngestPipeline.IngestedRow
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
 
 /** Versioned reads over the cell sink: full history, latest, and
   * as-of (time travel) per rowkey. */
-class CellTableSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CellTableSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def threads = 2
+
   private var sinkDir: String = _
 
   private def row(table: String, key: String, version: Long): IngestedRow =
@@ -18,11 +18,7 @@ class CellTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       key.getBytes("UTF-8"), version, s"body-$key-v$version", "MONGO_IMPORT", "line\n", "DoNotFilter", "")
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("cell-table-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     sinkDir = Files.createTempDirectory("graft-cells").resolve("sink").toString
     val sp = spark; import sp.implicits._
     // key a: versions 10, 20, 30; key b: 15; other table: 99
@@ -31,8 +27,6 @@ class CellTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       row("t:x", "b", 15), row("t:y", "a", 99)))
     IngestPipeline.writeTableSink(rows, sinkDir)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def keyed(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
     df.collect().map(r => new String(r.getAs[Array[Byte]]("rowkey"), "UTF-8") -> r.getAs[Long]("version")).toMap

@@ -1,30 +1,17 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.IngestPipeline.{IngestedRow, Status}
 import graft.ingest.PushTableSink.TableSpec
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import scala.jdk.CollectionConverters._
 
 /** Major compaction over a mixed store-file population: maxVersions GC
   * across per-cell puts AND bulk segments, TTL with minVersions=1,
   * post-compact file population (segments only), and idempotent
   * re-compaction. */
-class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("compaction-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CompactionSpec extends AnyFunSuite with SparkSuite {
 
   private def row(key: String, version: Long): IngestedRow =
     IngestedRow("/f", version, "db", "c", "db:c", "m.csv", Status.Ok,

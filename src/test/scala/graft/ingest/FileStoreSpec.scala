@@ -1,10 +1,9 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.IngestPipeline.{IngestedRow, Status}
 import graft.ingest.PushTableSink._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -12,19 +11,9 @@ import java.util.concurrent.atomic.AtomicInteger
   * existence, atomic cell puts, maxVersions pruning — and the full
   * PushTableSink.write path over it, including convergence after a
   * transient putBatch failure mid-write (the kill-retry case). */
-class FileStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FileStoreSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("filestore-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def threads = 2
 
   private def cell(table: String, key: String, version: Long, body: String) =
     CellPut(table, key.getBytes("UTF-8"), version, body.getBytes("UTF-8"))

@@ -1,10 +1,9 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -15,19 +14,7 @@ import scala.jdk.CollectionConverters._
   * posture (one listing per touched shard, no flush under threshold),
   * the bounded-backlog invariant, view preservation, precedence over
   * stale segment copies, and the '0'-disables override. */
-class FlushPolicySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("flush-policy-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class FlushPolicySpec extends AnyFunSuite with SparkSuite {
 
   // ALL keys share a leading byte → one shard, the backlog hot spot
   private def cells(table: String, n: Int, v: Long): Seq[CellPut] =

@@ -1,5 +1,6 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * file, outranks the segment). These tests drive the exact
   * interleaving deterministically through [[FileStore.absorbProbe]].
   */
-class FlushReplaceRaceSpec extends AnyFunSuite {
+class FlushReplaceRaceSpec extends AnyFunSuite with SparkSuite {
+
+  override protected def threads = 2
 
   test("a replace landing inside the flush's absorb window is never lost") {
     val root = Files.createTempDirectory("flush-race").toString
@@ -78,21 +81,15 @@ class FlushReplaceRaceSpec extends AnyFunSuite {
     val k = "upd-key".getBytes("UTF-8")
     store.putBatch("t", Seq(CellPut("t", k, 0L, "old".getBytes)))
     store.putBatch("t", Seq(CellPut("t", "other".getBytes, 1L, "x".getBytes)))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("major-race-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      // the beforeSweep seam is exactly the scan→sweep gap: replace
-      // the put's path after the rewrite absorbed 'old'
-      Compaction.major(spark, root, "t", beforeSweep = () =>
-        store.putBatch("t", Seq(CellPut("t", k, 0L, "new".getBytes))))
-      assert(store.getLatest("t", k).map(p => new String(p._2)).contains("new"),
-        "the sweep must not delete a path replaced since the scan")
-      // the skipped put is the serving winner over the rewritten
-      // segment; a follow-up major (no race) absorbs it cleanly
-      Compaction.major(spark, root, "t")
-      assert(store.getLatest("t", k).map(p => new String(p._2)).contains("new"))
-    } finally spark.stop()
+    // the beforeSweep seam is exactly the scan→sweep gap: replace
+    // the put's path after the rewrite absorbed 'old'
+    Compaction.major(spark, root, "t", beforeSweep = () =>
+      store.putBatch("t", Seq(CellPut("t", k, 0L, "new".getBytes))))
+    assert(store.getLatest("t", k).map(p => new String(p._2)).contains("new"),
+      "the sweep must not delete a path replaced since the scan")
+    // the skipped put is the serving winner over the rewritten
+    // segment; a follow-up major (no race) absorbs it cleanly
+    Compaction.major(spark, root, "t")
+    assert(store.getLatest("t", k).map(p => new String(p._2)).contains("new"))
   }
 }

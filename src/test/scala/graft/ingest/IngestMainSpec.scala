@@ -1,27 +1,15 @@
 package graft.ingest
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
 
 /** The spark-submit entry point end-to-end: reference-named config args
   * drive the whole job (catalog → decode → sinks → counter line). */
-class IngestMainSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IngestMainSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    // IngestMain getOrCreate()s — give it a local session to reuse
-    spark = SparkSession.builder().master("local[4]")
-      .appName("ingest-main-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  // IngestMain getOrCreate()s — it reuses (and must not stop) this
+  // suite's session
 
   test("main runs the whole job from reference-style key=value args") {
     val tmp = Files.createTempDirectory("graft-main")

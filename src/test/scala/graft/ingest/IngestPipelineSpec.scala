@@ -1,10 +1,9 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.core._
 import graft.ingest.IngestPipeline._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Path => JPath}
 import java.util.Base64
@@ -17,31 +16,19 @@ import java.util.zip.GZIPOutputStream
   * assert table-sink contents, decrypt-back, manifest names/contents,
   * and idempotent re-runs.
   */
-class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IngestPipelineSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var tmp: JPath = _
 
   private val fileKeyB64 = Fixtures.fileKeyB64
   private val identity = Envelope.RunIdentity("uow", "trace", "test", () => new java.util.Date(0L))
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("ingest-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     tmp = Files.createTempDirectory("graft-ingest")
     Fixtures.writeDumpFile(tmp, "database-1", "collection-1", 1)
     Fixtures.writeDumpFile(tmp, "database-1", "collection-thirtyone", 1)
     Fixtures.writeDumpFile(tmp, "agent_core", "agentToDoArchive", 1)
-  }
-
-  override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
   }
 
   // fixtures shared with IngestMainSpec — see Fixtures.scala

@@ -1,28 +1,17 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.IngestPipeline.{IngestedRow, Status}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.util.concurrent.ConcurrentHashMap
 
 /** The W5 upload boundary: any ManifestStore receives the reference's S3
   * object metadata (contentType=text/plain, x-amz-meta-title=<file> —
   * StreamingManifestWriter.kt:53-58) plus the spooled bytes, and the
   * zero-byte skip / per-file grouping happen before the store is hit. */
-class ManifestStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ManifestStoreSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("manifest-store-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def threads = 2
 
   private def okRow(file: String, n: Long, line: String) =
     IngestedRow(s"/in/$file", n, "db", "c", "db:c", file, Status.Ok,

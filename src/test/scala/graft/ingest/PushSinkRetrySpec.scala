@@ -1,29 +1,18 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.IngestPipeline.IngestedRow
 import graft.ingest.PushTableSink._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.util.concurrent.ConcurrentHashMap
 
 /** W2 retry semantics + X1 policy + HTTP key service against a local
   * stub server — the external-boundary behaviors of the reference
   * (putBatch 5× retry HbaseWriterTest.kt:2101-2110, DKS retry + 400
   * hard-fail HttpKeyServiceTest). */
-class PushSinkRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
+class PushSinkRetrySpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("push-sink-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def threads = 2
 
   // ---------------------------------------------------------- Retry util
 

@@ -1,9 +1,8 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -11,19 +10,7 @@ import scala.jdk.CollectionConverters._
   * identity at every protocol stage, crash recovery from every stage,
   * default-layout merges, split↔merge round-trips, and point-read
   * routing across the moved boundary. */
-class RegionMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("region-merge-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class RegionMergeSpec extends AnyFunSuite with SparkSuite {
 
   private def scanAll(root: String, table: String): Set[(String, Long, String)] =
     spark.read.format("graft-cells").option("root", root).option("table", table).load()

@@ -1,9 +1,8 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -14,19 +13,7 @@ import scala.jdk.CollectionConverters._
   * byte-identity at EVERY protocol stage, crash recovery from every
   * stage, marker transport, point-GET routing across the split, and
   * the SPJ fingerprint change. */
-class RegionSplitSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("region-split-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class RegionSplitSpec extends AnyFunSuite with SparkSuite {
 
   // all keys share the leading byte 'Z' (0x5a) → one hot region
   private def key(i: Int): Array[Byte] = f"Z-$i%04d".getBytes("UTF-8")

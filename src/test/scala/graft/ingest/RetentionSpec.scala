@@ -1,29 +1,16 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** READ-TIME RETENTION ([[Retention]], r15 — the HBase StoreScanner
   * contract): maxVersions/TTL/minVersions applied by the read fold on
   * every masked face, with the major only reclaiming bytes. Pins the
   * formula, the face coverage (batch, $latest, exists/F5, row scan vs
   * edit log), clock injection, and the agg-pushdown decline. */
-class RetentionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("retention-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class RetentionSpec extends AnyFunSuite with SparkSuite {
 
   test("Policy.admitted: rank cap, TTL expiry, and the minVersions floor") {
     // cap 2, cutoff 100, floor 1

@@ -1,10 +1,9 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.core.{DateFmt, Envelope, RecordProcessor}
 import graft.ingest.IngestPipeline.IvStrategy
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.{Files, Path => JPath}
 
 /** The s3-seam proof the round-8 verdict asked for: the catalog listing
@@ -15,20 +14,14 @@ import java.nio.file.{Files, Path => JPath}
   * `Path.getFileSystem` with the configured scheme — nothing shortcuts
   * to java.io against a raw string — so pointing the same code at
   * s3a:// is a configuration change, not a code change. */
-class S3SeamSpec extends AnyFunSuite with BeforeAndAfterAll {
+class S3SeamSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var in: JPath = _
   private var out: JPath = _
   private val identity = Envelope.RunIdentity("uow", "trace", "test", () => new java.util.Date(0L))
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("s3-seam-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     spark.sparkContext.hadoopConfiguration
       .set("fs.s3stub.impl", classOf[S3StubFileSystem].getName)
     in = Files.createTempDirectory("graft-s3stub-in")
@@ -37,7 +30,7 @@ class S3SeamSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(in.toFile)
     org.apache.commons.io.FileUtils.deleteQuietly(out.toFile)
   }

@@ -1,10 +1,9 @@
 package graft.ingest
 
+import graft.SparkSuite
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Per-segment ROW bloom filters — the HBase BloomFilter analog: every
   * [[CellSegment]] carries a bloom over its distinct key digests
@@ -14,19 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   * costs zero index I/O on (almost) every segment, so the bounded
   * index cache only ever holds indexes of segments that plausibly
   * match. */
-class SegmentBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("segment-bloom-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SegmentBloomSpec extends AnyFunSuite with SparkSuite {
 
   private def k(s: String): Array[Byte] = s.getBytes("UTF-8")
 

@@ -1,27 +1,14 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.{Files, Paths}
 
 /** ZERO-COPY SNAPSHOT/CLONE ([[Snapshots]]): link-pinned immutability
   * against every destructive verb, clone independence, name
   * uniqueness, and the in-place-UPDATE inode split. */
-class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("snapshot-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SnapshotSpec extends AnyFunSuite with SparkSuite {
 
   private def seed(root: String, table: String): Unit = {
     val store = FileStore(root)

@@ -1,9 +1,8 @@
 package graft.ingest
 
+import graft.SparkSuite
 import graft.ingest.IngestPipeline.IngestedRow
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
 
 /** The reference re-opens a failed stream mid-file and skips already-
@@ -14,21 +13,16 @@ import java.nio.file.Files
   * writes idempotent. This spec kills a task's first attempt mid-stage
   * and proves the sink ends up with exactly the right cells — no
   * duplicates, no losses. */
-class TaskRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
+class TaskRetrySpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  // local[threads, maxTaskFailures]: allow the retry we provoke
+  override protected def threads = 2
+  override protected def taskAttempts = 3
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      // local[threads, maxTaskFailures]: allow the retry we provoke
-      .master("local[2,3]")
-      .appName("task-retry-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    super.beforeAll()
     spark.sparkContext.setLogLevel("ERROR")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def cell(i: Int): IngestedRow =
     IngestedRow("f", i.toLong, "db", "c", "t:retry", "m.csv", "ok",

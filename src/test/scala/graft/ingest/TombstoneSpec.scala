@@ -1,10 +1,9 @@
 package graft.ingest
 
+import graft.SparkSuite
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import scala.jdk.CollectionConverters._
 
 /** Delete tombstones — the HBase Delete-marker model over the cell
@@ -20,19 +19,7 @@ import scala.jdk.CollectionConverters._
   * compaction, after which a re-put at an old version is visible
   * again (the HBase resurrection semantics). Minor compaction leaves
   * markers in place (HBase minors never drop deletes). */
-class TombstoneSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("tombstone-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class TombstoneSpec extends AnyFunSuite with SparkSuite {
 
   private def k(s: String): Array[Byte] = s.getBytes("UTF-8")
 

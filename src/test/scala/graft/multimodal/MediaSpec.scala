@@ -1,26 +1,12 @@
 package graft.multimodal
 
+import graft.SparkSuite
 import graft.multimodal.Media._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Multimodal plumbing: binary payload schema, batched decode,
   * deterministic stub features, frame sampling shape. */
-class MediaSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("media-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class MediaSpec extends AnyFunSuite with SparkSuite {
 
   test("payloads ride as binary columns with typed metadata") {
     val media = syntheticMedia(spark, 30)

@@ -1,8 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The real-codec opt-in (VERDICT r09 ask #4): genuine PNG and WAV
   * bytes ride the SAME typed mapPartitions seam the stub rides —
@@ -11,20 +10,12 @@ import org.scalatest.BeforeAndAfterAll
   * (javax.imageio / javax.sound.sampled) — no external dependency, so
   * the spec runs in the sandbox and on any cluster JVM.
   */
-class RealCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class RealCodecSpec extends AnyFunSuite with SparkSuite {
 
   override def beforeAll(): Unit = {
     System.setProperty("java.awt.headless", "true")
-    spark = SparkSession.builder().master("local[4]")
-      .appName("real-codec-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** a real 8×6 PNG: left half black, right half white. */
   private def tinyPng(): Array[Byte] = {

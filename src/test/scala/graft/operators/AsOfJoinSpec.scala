@@ -1,26 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import scala.util.Random
 
 /** AsOfJoin semantics vs a per-row reference computation, the `<=`
   * tie rule, the outer-null path, and the no-join-node plan shape. */
-class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("asof-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AsOfJoinSpec extends AnyFunSuite with SparkSuite {
 
   test("matches a per-row reference on seeded random data, incl. <= ties and no-match nulls") {
     val sp = spark; import sp.implicits._

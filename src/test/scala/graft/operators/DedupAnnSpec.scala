@@ -1,27 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Verifies the Spark-only (non-SQL-oracle) similarity operators
   * against exact computations on the driver test tables. */
-class DedupAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DedupAnnSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("dedup-ann-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def docs: DataFrame = spark.read.parquet(s"$sfDir/documents.parquet")
   private def embs: DataFrame = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import scala.util.Random
 
@@ -10,19 +9,7 @@ import scala.util.Random
   * graphs, plus the shapes that trip naive implementations: chains
   * (label must travel multiple hops), singleton-free input, and
   * duplicate/reversed pair listings. */
-class DedupClustersSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("dedup-clusters-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DedupClustersSpec extends AnyFunSuite with SparkSuite {
 
   /** Plain array union-find — structurally unrelated reference. */
   private def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {

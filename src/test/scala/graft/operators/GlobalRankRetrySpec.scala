@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** GlobalRank's position-in-partition comes from
   * `monotonically_increasing_id` evaluated above the partition-local
@@ -12,21 +11,16 @@ import org.scalatest.BeforeAndAfterAll
   * This spec kills the first attempt of the rank-assembly task
   * (post-shuffle, where the ids are generated) and proves the output
   * is still the exact permutation. */
-class GlobalRankRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
+class GlobalRankRetrySpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  // local[threads, maxTaskFailures]: allow the retry we provoke
+  override protected def threads = 2
+  override protected def taskAttempts = 3
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      // local[threads, maxTaskFailures]: allow the retry we provoke
-      .master("local[2,3]")
-      .appName("global-rank-retry-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    super.beforeAll()
     spark.sparkContext.setLogLevel("ERROR")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("a killed-and-retried rank task reassigns identical ids — ranks stay a permutation") {
     val sp = spark; import sp.implicits._

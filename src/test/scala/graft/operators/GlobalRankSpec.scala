@@ -1,27 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** GlobalRank must equal the single-partition row_number it replaces —
   * on skewed data, with ties in the sort value, and with more range
   * partitions than distinct keys (empty partitions). */
-class GlobalRankSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("global-rank-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class GlobalRankSpec extends AnyFunSuite with SparkSuite {
 
   private def referenceRanks(rows: Seq[(Long, Double)]): Map[Long, Long] =
     rows.sortBy { case (id, v) => (-v, id) }.zipWithIndex

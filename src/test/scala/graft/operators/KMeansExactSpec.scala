@@ -1,25 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Contract checks for the exact fixed-point k-means operator (the
   * hash-gated path is q109; this spec pins the input contract). */
-class KMeansExactSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("kmeans-exact-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class KMeansExactSpec extends AnyFunSuite with SparkSuite {
 
   private def vecs(ids: Seq[Long]) = {
     val sp = spark; import sp.implicits._

@@ -1,25 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Structural invariants fixed-point PageRank must satisfy (the q92
   * oracle pins exact values; this pins the math on graphs small enough
   * to reason about). */
-class PageRankSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PageRankSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("pagerank-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def threads = 2
 
   private def edges(pairs: (Long, Long)*) = {
     val s = spark

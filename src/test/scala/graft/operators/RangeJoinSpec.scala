@@ -1,26 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import scala.util.Random
 
 /** RangeJoin vs a per-row reference: exactly-once pair meeting across
   * bucket boundaries, inclusive bounds, and the no-nested-loop plan. */
-class RangeJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("rangejoin-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class RangeJoinSpec extends AnyFunSuite with SparkSuite {
 
   test("matches a per-row reference, each qualifying pair exactly once") {
     val sp = spark; import sp.implicits._

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import scala.util.Random
 
@@ -10,19 +9,7 @@ import scala.util.Random
   * boundary-exact pairs), and the hostile-corpus property the prefix
   * filter exists for: a stop-shingle in every document must NOT
   * quadratically inflate the candidate set. */
-class SimilarityJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("simjoin-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SimilarityJoinSpec extends AnyFunSuite with SparkSuite {
 
   private def brute(docs: Seq[(Long, Set[String])], tauNum: Int, tauDen: Int) =
     (for {

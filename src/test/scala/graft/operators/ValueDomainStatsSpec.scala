@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The shared value-domain order-statistic operator behind
   * q130/q160/q185/q186: exactness vs a driver-side sort, tie and
@@ -11,19 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * for — the window runs over AGGREGATED (group, value) rows, with a
   * partial aggregate below it, never a whole-group sort of raw rows.
   */
-class ValueDomainStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("value-domain-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ValueDomainStatsSpec extends AnyFunSuite with SparkSuite {
 
   private def df(rows: Seq[(String, Long)]) = {
     val sp = spark; import sp.implicits._

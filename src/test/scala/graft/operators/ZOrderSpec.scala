@@ -1,26 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Z-order correctness (against a reference Morton implementation) and
   * the locality payoff the layout exists for: a box predicate touching
   * few range partitions where a linear sort scatters it everywhere. */
-class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("zorder-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ZOrderSpec extends AnyFunSuite with SparkSuite {
 
   private def mortonRef(x: Long, y: Long, bits: Int): Long =
     (0 until bits).foldLeft(0L) { (acc, i) =>

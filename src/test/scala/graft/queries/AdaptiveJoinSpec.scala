@@ -1,9 +1,7 @@
 package graft.queries
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The q17 cost-switch escalation, end to end on a corpus built to trip
   * it: clone-heavy postings must (a) push the Σdf²/Σdf probe past the
@@ -13,9 +11,8 @@ import org.scalatest.BeforeAndAfterAll
   * must equal brute force exactly. The driver's oracle gate only ever
   * sees the benign branch (the test corpora are clone-free), so this
   * spec is the escalated assembly's correctness gate. */
-class AdaptiveJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AdaptiveJoinSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var dir: String = _
 
   // 8 stop tokens shared by every document: 6 stop shingles with
@@ -38,11 +35,7 @@ class AdaptiveJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("adaptive-join-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     dir = java.nio.file.Files.createTempDirectory("graft-adaptive").toString
     val sp = spark; import sp.implicits._
     docs.toDF("doc_id", "source", "text")
@@ -50,7 +43,7 @@ class AdaptiveJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 

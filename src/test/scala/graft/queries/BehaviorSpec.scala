@@ -1,30 +1,15 @@
 package graft.queries
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Semantic invariants of the behavioral-analytics queries (q66/q67)
   * beyond the oracle hash: funnel stage ordering/windows/monotone
   * narrowing, retention triangle structure. Runs at sf0.001. */
-class BehaviorSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BehaviorSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("behavior-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("q66: stage times are strictly ordered within the 24h windows; stages only narrow") {
     val df = SparkEntry.queries("q66_funnel")(spark, sf).cache()

@@ -1,32 +1,17 @@
 package graft.queries
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Semantic invariants of the corpus-preparation queries (q57–q65) that
   * the DuckDB hash-match can't see on its own: rule-flag consistency,
   * chunk geometry/reconstruction, scrub completeness, quantization
   * saturation, ntile bucket balance, NFC change parity, diff status
   * partitioning. Runs at sf0.001. */
-class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CorpusSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("corpus-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)
 

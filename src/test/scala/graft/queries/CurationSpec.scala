@@ -1,10 +1,8 @@
 package graft.queries
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Semantic invariants of the curation queries (q101–q106) beyond the
   * DuckDB hash-match: blocking losslessness vs a Scala brute force,
@@ -13,22 +11,9 @@ import org.scalatest.BeforeAndAfterAll
   * bigram argmax determinism, and manifest digest integrity. Runs at
   * sf0.001 with full in-memory recomputation as the oracle.
   */
-class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CurationSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("curation-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)
 

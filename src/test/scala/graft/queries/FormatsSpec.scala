@@ -1,9 +1,7 @@
 package graft.queries
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The format facts the q85–q87 oracles can't see: the read really
   * scans the target format (not a cached parquet), the read is
@@ -11,22 +9,9 @@ import org.scalatest.BeforeAndAfterAll
   * ms timestamp) survive the text formats bit-for-bit. Runs at
   * sf0.001.
   */
-class FormatsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FormatsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("formats-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def scanLine(q: String): String = {
     val df = SparkEntry.queries(q)(spark, sf)

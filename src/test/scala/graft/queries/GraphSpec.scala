@@ -1,10 +1,8 @@
 package graft.queries
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Graph-family behavior beyond the hash gate. q153's compact-forward
   * triangle count is cross-checked against a structurally different
@@ -12,22 +10,9 @@ import org.scalatest.BeforeAndAfterAll
   * edge list — so an orientation bug (the classic double/half-count)
   * cannot survive even if both engines shared it.
   */
-class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraphSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graph-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("q153: triangle count equals brute-force neighbor-set intersection") {
     val li = Tables.lineitem(spark, sf)

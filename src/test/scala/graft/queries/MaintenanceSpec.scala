@@ -1,30 +1,15 @@
 package graft.queries
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The file-layout facts the q83/q84 oracles can't see: compaction
   * actually reduces file counts (and loses nothing), and the staged
   * schema-evolution dirs genuinely differ in schema. Runs at sf0.001. */
-class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MaintenanceSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("maintenance-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def parquetFiles(dir: java.io.File): Array[java.io.File] =
     dir.listFiles().filter(_.getName.endsWith(".parquet"))

@@ -1,33 +1,20 @@
 package graft.queries
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Physical-plan hygiene: the properties that decide whether these
   * queries survive a 100× scale-up. Checked against the real optimized
   * plans, not intentions: predicate pushdown reaches the parquet scan,
   * column pruning shrinks ReadSchema, bounded dims broadcast, unbounded
   * sides do not, and scans stay inside whole-stage codegen. */
-class PlanHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanHygieneSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def threads = 2
+
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("plan-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def plan(q: String): SparkPlan =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
@@ -127,6 +114,23 @@ class PlanHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(spark.conf.get(set) == "before")
       assert(!spark.conf.getAll.contains(absent))
     } finally spark.conf.unset(set)
+  }
+
+  test("GraftSession builds exactly the base settings, shuffle partitions = threads") {
+    // Bench, Verify and every driver main start from this session: a
+    // change here changes what their numbers and dumps mean
+    val sc = spark.sparkContext
+    assert(sc.master == s"local[$threads]")
+    // the warehouse dir is written into the context conf by Spark itself
+    val sql = sc.getConf.getAll.toMap
+      .filter { case (k, _) => k.startsWith("spark.sql.") && k != "spark.sql.warehouse.dir" }
+    assert(sql == Map(
+      "spark.sql.shuffle.partitions" -> threads.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true"), sql)
+    assert(sc.getConf.get("spark.ui.enabled") == "false" && sc.uiWebUrl.isEmpty)
+    assert(org.apache.logging.log4j.LogManager.getRootLogger.getLevel ==
+      org.apache.logging.log4j.Level.WARN)
   }
 
   test("q49: bucketed join reads bucket-aligned scans with no exchange on the join keys") {

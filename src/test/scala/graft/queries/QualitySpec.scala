@@ -1,9 +1,7 @@
 package graft.queries
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Semantic invariants of the quality/representation queries
   * (q121–q125) beyond the DuckDB hash-match: full Scala brute-force
@@ -12,22 +10,9 @@ import org.scalatest.BeforeAndAfterAll
   * this scale. Runs at sf0.001 with in-memory recomputation as the
   * oracle.
   */
-class QualitySpec extends AnyFunSuite with BeforeAndAfterAll {
+class QualitySpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("quality-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)
 

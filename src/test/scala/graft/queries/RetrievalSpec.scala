@@ -1,9 +1,7 @@
 package graft.queries
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** q154's BM25 beyond the hash gate: the whole scoring chain —
   * tokenize, df, quantized idf, tf saturation, length normalization,
@@ -11,23 +9,10 @@ import org.scalatest.BeforeAndAfterAll
   * corpus and compared rank-for-rank, so an arithmetic slip that both
   * engines happened to share could not survive.
   */
-class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RetrievalSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
   private val terms = Seq("spark", "join", "window", "stream")
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("retrieval-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def md5hex(s: String): String = {
     val d = java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))

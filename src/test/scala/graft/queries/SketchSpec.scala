@@ -1,32 +1,17 @@
 package graft.queries
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Bounds the sketch operators' RAW estimates against exact
   * computations — the direct check behind q29's hashed sketch_ok gate
   * (the query emits exact stats + the in-query error-bound boolean;
   * this spec holds the estimates themselves to the same bounds so a
   * loosened gate can't silently hide a degraded sketch). */
-class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SketchSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("sketch-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   // the same sketch expressions q29 aggregates, kept raw for bounding
   private def sketches = Tables.events(spark, sf)

@@ -1,32 +1,17 @@
 package graft.queries
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The deterministic sketches (q137-q139) beyond the hash gate: the
   * estimates must actually ESTIMATE (error inside the family's
   * theoretical bounds on real data), and the sketch state must be
   * MERGEABLE — the property that makes a sketch a distributed operator
   * rather than a curiosity (partial aggregation IS a merge). */
-class SketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SketchesSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("sketches-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("q137: raw HLL estimate lands within 3σ (m=32 → ±55%) of exact in the raw regime") {
     // sf0.01: n_exact = 150 per type ≥ 2.5m = 80, the raw estimator's

@@ -1,29 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Property checks behind the q171/q172/q173 hash gates: the exact
   * integer statistics must agree with the textbook definitions on
   * constructed inputs where the answer is known in closed form. */
-class StatisticsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StatisticsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("statistics-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("q171: |rho| <= 1 for every source and the rational pieces are consistent") {
     val rows = Statistics.queries("q171_spearman")(spark, sf).collect()

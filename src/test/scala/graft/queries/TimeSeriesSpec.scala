@@ -1,32 +1,17 @@
 package graft.queries
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Semantic invariants of the time-series (q76–q78) and change-data
   * (q73/q80) queries that the DuckDB hash-match can't see on its own:
   * gap-fill domain density, rolling-frame containment, sliding-window
   * double-coverage, MERGE row accounting, and partial-merge equality
   * with the direct aggregate. Runs at sf0.001. */
-class TimeSeriesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TimeSeriesSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("timeseries-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)
 

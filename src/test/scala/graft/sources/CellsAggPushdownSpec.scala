@@ -1,34 +1,29 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.{BulkLoad, FileStore, PushTableSink}
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Aggregate pushdown: ungrouped count/min/max(version) answered from
   * metadata (zero file contents) through [[CellsAggScan]], masks and
   * cross-kind identity dedup applied, the $latest face composing;
   * grouped/rowkey-filtered shapes decline to the row scan; an empty
   * table counts 0. */
-class CellsAggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CellsAggPushdownSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var root: String = _
   private val cat = "gagg"
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graft-aggpd").toString
-    spark = SparkSession.builder().master("local[4]")
-      .appName("agg-pushdown-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config(s"spark.sql.catalog.$cat", classOf[CellsCatalog].getName)
-      .config(s"spark.sql.catalog.$cat.root", root)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[CellsCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
 
     val sp = spark; import sp.implicits._
     // mixed store-file population: a bulk generation (segments), a put
@@ -47,7 +42,7 @@ class CellsAggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

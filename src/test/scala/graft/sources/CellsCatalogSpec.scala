@@ -1,11 +1,10 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.{BulkLoad, FileStore}
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import scala.jdk.CollectionConverters._
 
 /** The catalog face: named SQL access to the store (DDL, INSERT,
@@ -13,32 +12,26 @@ import scala.jdk.CollectionConverters._
   * JOINS — two same-layout tables joined by Catalyst with no exchange
   * on either side, via the KeyGroupedPartitioning the catalog-loaded
   * scan reports over its graft_shard function. */
-class CellsCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CellsCatalogSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var root: String = _
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("cells-catalog").toString
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cells-catalog-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.catalog.gtest", classOf[CellsCatalog].getName)
-      .config("spark.sql.catalog.gtest.root", root)
-      // the SPJ prerequisites: v2 bucketing on, partition-value
-      // push for one-sided region population, and no broadcast
-      // short-circuit (a broadcast join needs no co-partitioning and
-      // would mask the property under test)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC") // TIMESTAMP AS OF literals
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gtest", classOf[CellsCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gtest.root", root)
+    // the SPJ prerequisites: v2 bucketing on, partition-value
+    // push for one-sided region population, and no broadcast
+    // short-circuit (a broadcast join needs no co-partitioning and
+    // would mask the property under test)
+    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
@@ -76,15 +69,25 @@ class CellsCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     val points = (1 to 7).map(i => k(s"K-${i}0"))
     seed("spja", (0 until 80).map(i => (f"K-$i%02d", 1L, s"a-$i")), points)
     seed("spjb", (0 until 80 by 2).map(i => (f"K-$i%02d", 5L, s"b-$i")), points)
-    val joined = spark.table("gtest.spja").as("a")
+    def joined = spark.table("gtest.spja").as("a")
       .join(spark.table("gtest.spjb").as("b"), col("a.rowkey") === col("b.rowkey"))
       .select(col("a.rowkey").cast("string").as("key"),
         col("a.body").cast("string").as("ba"), col("b.body").cast("string").as("bb"))
-    val plan = joined.queryExecution.executedPlan.toString
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sorted.toSeq
+    val spj = joined
+    val plan = spj.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"same split layout must storage-partition-join with no exchange:\n$plan")
-    val got = joined.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sorted.toSeq
+    val got = rows(spj)
     assert(got == (0 until 80 by 2).map(i => (f"K-$i%02d", s"a-$i", s"b-$i")).sorted.toSeq)
+    // bucketing off: the same join as an ordinary shuffle join, same rows
+    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
+    try {
+      val shuffled = joined
+      assert(shuffled.queryExecution.executedPlan.toString.contains("Exchange"))
+      assert(rows(shuffled) == got, "SPJ and the shuffle join must agree")
+    } finally spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
   }
 
   test("per-rowkey aggregation over a catalog table plans with NO exchange (key-grouped)") {

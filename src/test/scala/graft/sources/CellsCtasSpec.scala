@@ -1,9 +1,8 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.{FileStore, PushTableSink, Vacuum}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -11,19 +10,7 @@ import scala.jdk.CollectionConverters._
   * staged-generation invisibility, the CREATE one-rename commit, the
   * REPLACE two-rename window (seam-pinned), the concurrent-CREATE
   * race, and Vacuum's `_ctas_staging` sweep. */
-class CellsCtasSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cells-ctas-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CellsCtasSpec extends AnyFunSuite with SparkSuite {
 
   private def freshCat(root: String): String = {
     val cat = "ctas_" + java.util.UUID.randomUUID().toString.replace("-", "").take(10)

@@ -1,12 +1,12 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.{BulkLoad, FileStore, PushTableSink}
 import graft.ingest.PushTableSink.CellPut
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** SupportsPushDownLimit / SupportsPushDownTopN: LIMIT truncates every
   * shard unconditionally (any N rows are correct under the retained
@@ -16,18 +16,13 @@ import org.scalatest.BeforeAndAfterAll
   * put backlog silently falls back to the full-row path and Spark's
   * TakeOrdered still answers correctly. DESC and non-key orders
   * decline at planning. */
-class CellsLimitPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CellsLimitPushdownSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var root: String = _
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graft-limit").toString
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cells-limit-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     val sp = spark; import sp.implicits._
     BulkLoad.writeCells(
       (0 until 400).map(i => ("t", f"K-$i%04d".getBytes("UTF-8"), 10L + i, s"b-$i".getBytes("UTF-8")))
@@ -35,7 +30,7 @@ class CellsLimitPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

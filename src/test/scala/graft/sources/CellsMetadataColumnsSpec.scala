@@ -1,32 +1,26 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.{BulkLoad, FileStore, PushTableSink}
 import graft.ingest.PushTableSink.CellPut
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** SupportsMetadataColumns — the Iceberg `_file` idiom: `_shard`,
   * `_file`, `_kind` name the store file whose copy WON read precedence
   * for each emitted row. SELECT-only (a `SELECT *` stays the 3-column
   * cell schema); joins against the `$versions` inventory face on
   * (_shard, _file). */
-class CellsMetadataColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CellsMetadataColumnsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var root: String = _
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("cells-metacols").toString
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cells-metacols-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.catalog.gmc", classOf[CellsCatalog].getName)
-      .config("spark.sql.catalog.gmc.root", root)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gmc", classOf[CellsCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gmc.root", root)
     val sp = spark; import sp.implicits._
     // segment-resident cells (bulk), one put-backlog cell, one marker
     BulkLoad.writeCells(
@@ -38,7 +32,7 @@ class CellsMetadataColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

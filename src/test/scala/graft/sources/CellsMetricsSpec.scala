@@ -1,32 +1,26 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.BulkLoad
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** DSv2 CustomMetric: the connector's I/O counters surface as native
   * SQL metrics on the scan and write nodes — `filesOpened` /
   * `cellsEmitted` on reads, `cellsWritten` / `bytesWritten` on writes
   * — so pruning quality is observable per query node, not just
   * through the global spec counters. */
-class CellsMetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CellsMetricsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var root: String = _
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("cells-metrics").toString
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cells-metrics-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.catalog.gmx", classOf[CellsCatalog].getName)
-      .config("spark.sql.catalog.gmx.root", root)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gmx", classOf[CellsCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gmx.root", root)
     val sp = spark; import sp.implicits._
     BulkLoad.writeCells(
       (0 until 50).map(i => ("mx", f"X-$i%02d".getBytes("UTF-8"), 10L, s"b-$i".getBytes("UTF-8")))
@@ -34,7 +28,7 @@ class CellsMetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

@@ -1,31 +1,19 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.{BulkLoad, Compaction, FileStore, PushTableSink}
 import graft.ingest.PushTableSink.CellPut
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** SupportsReportOrdering: a compacted table (one segment per shard,
   * no put backlog) reports (rowkey, version) per-partition order and
   * Catalyst drops the redundant local Sort; a put backlog withdraws
   * the report and the Sort comes back — spec-pinned both ways. */
-class CellsOrderingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cells-ordering-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CellsOrderingSpec extends AnyFunSuite with SparkSuite {
 
   private def sortsIn(df: DataFrame): Int = {
     df.collect() // finalize AQE

@@ -1,11 +1,10 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.{BulkLoad, FileStore}
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** `option("provenance","true")` (r15 — the STREAMING provenance
   * face): Spark's streaming exec does not thread DSv2 metadata
@@ -15,17 +14,12 @@ import org.scalatest.BeforeAndAfterAll
   * streamed provenance across a restart, read-only-ness of the
   * widened face, and metadata-column suppression (no duplicate
   * names). */
-class CellsProvenanceOptionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CellsProvenanceOptionSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var root: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("provenance-option-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     root = java.nio.file.Files.createTempDirectory("prov-opt").toString
     val sp = spark; import sp.implicits._
     BulkLoad.writeCells(
@@ -37,7 +31,7 @@ class CellsProvenanceOptionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

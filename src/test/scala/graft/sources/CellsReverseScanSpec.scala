@@ -1,11 +1,10 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.{BulkLoad, FileStore}
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** REVERSE SCAN pushdown (r16 — HBase Scan.setReversed): `ORDER BY
   * rowkey DESC [, version DESC] LIMIT k` walks a compacted shard's
@@ -13,17 +12,12 @@ import org.scalatest.BeforeAndAfterAll
   * acceptance (and the version-ASC / $latest declines), exact results
   * vs the unpushed reference, bounded emission, mask + retention
   * application in reverse, and the put-backlog forward fallback. */
-class CellsReverseScanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CellsReverseScanSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var root: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("reverse-scan-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     root = java.nio.file.Files.createTempDirectory("reverse-scan").toString
     val sp = spark; import sp.implicits._
     // ONE shard ('K…'), 8 keys × 3 versions, one bulk load ⇒ one
@@ -36,7 +30,7 @@ class CellsReverseScanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

@@ -1,28 +1,22 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.FileStore
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The DataSource V2 face of the cell store: correctness of the full
   * scan against FileStore's own scanTable, version-predicate pruning
   * that provably skips file opens, column pruning that skips content
   * I/O entirely, and shard-per-partition parallelism. */
-class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CellsSourceSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var root: String = _
   private val table = "ns:cells_spec"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cells-source-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     root = java.nio.file.Files.createTempDirectory("graft-cells-spec").toString
     val store = FileStore(root)
     // flush policy OFF: this suite pins the PER-CELL PUT-FILE read
@@ -39,7 +33,7 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

@@ -1,35 +1,30 @@
 package graft.sources
 
+import graft.SparkSuite
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The native streaming SINK (StreamingWrite): `writeStream.format(
   * "graft-cells")` / `.toTable(...)` — puts and tombstones as
   * micro-batch appends, exactly-once cell STATE across restart and
   * epoch replay (idempotent renames; no epoch ledger), update mode
   * accepted as upsert-append, complete mode declined. */
-class CellsStreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CellsStreamingSinkSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var root: String = _
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("cells-ssink").toString
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cells-streaming-sink-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.catalog.gsink", classOf[CellsCatalog].getName)
-      .config("spark.sql.catalog.gsink.root", root)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gsink", classOf[CellsCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gsink.root", root)
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

@@ -1,11 +1,10 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.{BulkLoad, FileStore}
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Pushed top-N, version-DESC shape (r15): `ORDER BY rowkey ASC,
   * version DESC LIMIT k` — the HBase Get.readVersions(k) serving
@@ -15,17 +14,12 @@ import org.scalatest.BeforeAndAfterAll
   * read-time sortedness gating (put backlog ⇒ no cap), result
   * equality with the unpushed reference, and the OFFSET decline
   * (correct answers with OFFSET evaluated by Spark above the scan). */
-class CellsTopNDescSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CellsTopNDescSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var root: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("topn-desc-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     root = java.nio.file.Files.createTempDirectory("topn-desc").toString
     val sp = spark; import sp.implicits._
     // ONE shard ('K…'), 8 keys × 3 versions, one bulk load ⇒ one
@@ -38,7 +32,7 @@ class CellsTopNDescSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

@@ -1,11 +1,10 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.{BulkLoad, CellSegment, FileStore}
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** `$versions` inventory pushdown (r15): shard predicates prune
   * directory listings, kind predicates prune filenames AND trailer
@@ -13,17 +12,12 @@ import org.scalatest.BeforeAndAfterAll
   * trailer/size I/O — all advisory (filters stay residual), so the
   * answers never change. One classifier ([[CellsVersions.kindOf]])
   * backs the reader and the exact statistics. */
-class CellsVersionsPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CellsVersionsPushdownSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var root: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("versions-pushdown-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     root = java.nio.file.Files.createTempDirectory("versions-push").toString
     val sp = spark; import sp.implicits._
     val store = FileStore(root)
@@ -41,7 +35,7 @@ class CellsVersionsPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

@@ -1,29 +1,16 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.{BulkLoad, FileStore, PushTableSink}
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The region-aligned shuffle-free join: result ≡ the Catalyst shuffle
   * join on the same data, latest-version-per-key semantics, directory-
   * level inner pruning, layout-mismatch rejection, and the no-Exchange
   * plan property. */
-class ColocatedCellsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("colocated-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ColocatedCellsSpec extends AnyFunSuite with SparkSuite {
 
   private def k(s: String): Array[Byte] = s.getBytes("UTF-8")
 

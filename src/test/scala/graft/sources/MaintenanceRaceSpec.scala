@@ -1,11 +1,10 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.FileStore
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** PLANNING-RACE coverage (ADVICE r16): both maintenance protocols
   * change the LAYOUT FILE before their directory renames land (split:
@@ -23,19 +22,7 @@ import org.scalatest.BeforeAndAfterAll
   * Plus the ordering side: a scan that REPORTED a static per-partition
   * ordering re-verifies the premise at read time and locally sorts a
   * partition whose layout no longer streams sorted (mustSort). */
-class MaintenanceRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("maintenance-race-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class MaintenanceRaceSpec extends AnyFunSuite with SparkSuite {
 
   private val allKeys = CellsKeyPred(None, None, None, loInc = true, None, hiInc = true)
 

@@ -1,12 +1,11 @@
 package graft.sources
 
+import graft.SparkSuite
 import graft.ingest.BulkLoad
 import java.nio.file.Files
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The MERGE/UPDATE source-key pre-pass: a selective MERGE narrows its
   * target scan to the source's rowkeys (two-sided open-count check on
@@ -14,21 +13,16 @@ import org.scalatest.BeforeAndAfterAll
   * narrows too, the cap declines loudly back to the full scan,
   * FULL-OUTER shapes (NOT MATCHED BY SOURCE) never prune, and
   * nondeterministic sources decline. */
-class MergeSourcePruningSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MergeSourcePruningSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var root: String = _
   private val cat = "gmsp"
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graft-msp").toString
-    spark = SparkSession.builder().master("local[4]")
-      .appName("merge-prune-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config(s"spark.sql.catalog.$cat", classOf[CellsCatalog].getName)
-      .config(s"spark.sql.catalog.$cat.root", root)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[CellsCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
     // DEFAULT-ON: registering the catalog installs the rule at first
     // catalog access — no manual install anywhere in this suite
     spark.sql(s"SHOW TABLES IN $cat").collect()
@@ -39,7 +33,7 @@ class MergeSourcePruningSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 

@@ -1,31 +1,18 @@
 package graft.streaming
 
+import graft.SparkSuite
 import graft.ingest.{FileStore, PushTableSink}
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The CDC state view — flatMapGroupsWithState over the change feed:
   * masked-view convergence across restarts (puts → delete → re-put),
   * exactly-one retraction for a fully-deleted key, retention-capped
   * per-key state, and in-batch version ordering (a put under a
   * same-batch delete bound is masked on arrival; one above survives). */
-class CellStateViewSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("cellstateview-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CellStateViewSpec extends AnyFunSuite with SparkSuite {
 
   private def k(s: String): Array[Byte] = s.getBytes("UTF-8")
 
